@@ -32,7 +32,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - dedupe is BY SHINGLE STRING in first-occurrence order (exactly
   *    `array_distinct`) — two distinct shingles that collide at 60 bits
   *    stay duplicated in the hash array, as the declarative form has it
-  *    (DedupOps documents how d2's pair guard absorbs that asymmetry);
+  *    ([[PartnerOverlaps]] skips the self-partner that leaves in d2);
   *  - hash = first 15 hex chars of md5 as a 60-bit long (the portable
   *    `conv(substring(md5(s),1,15),16,10)` = big-endian first 8 digest
   *    bytes `>>> 4`).
@@ -123,6 +123,123 @@ object TextShingles {
 
   def orderedPairsCol(c: Column): Column =
     GraftColumns.column(OrderedPairs(GraftColumns.expression(c)))
+
+  def postingTailsCol(ids: Column, ns: Column): Column =
+    GraftColumns.column(PostingTails(GraftColumns.expression(ids),
+      GraftColumns.expression(ns)))
+
+  def partnerOverlapsCol(docA: Column, nA: Column, tails: Column,
+      minJaccard: Double): Column =
+    GraftColumns.column(PartnerOverlaps(GraftColumns.expression(docA),
+      GraftColumns.expression(nA), GraftColumns.expression(tails), minJaccard))
+
+  /** The partner tails of a posting list sorted by doc id: entry i (doc
+    * ids(i) with ns(i) distinct shingles) gets (ids(i), ns(i), tail) where
+    * the tail packs entries i+1..k-1, each as varint(id − previous id)
+    * then varint(n), the first delta taken from ids(i). The last entry,
+    * whose tail is empty, is left out. Every tail is a suffix of one
+    * packed buffer, so a list is encoded once. Packed, a partner costs
+    * ~3 bytes where a bigint id and an int size cost 12.
+    */
+  def postingTails(ids: Array[Long], ns: Array[Int]): Array[(Long, Int, Array[Byte])] = {
+    require(ids.length == ns.length,
+      s"${ids.length} posting ids but ${ns.length} sizes")
+    val k = ids.length
+    if (k < 2) return Array.empty
+    val buf = new Array[Byte](20 * (k - 1))
+    val off = new Array[Int](k)
+    var p = 0
+    var j = 1
+    while (j < k) {
+      off(j) = p
+      p = putVarLong(buf, p, ids(j) - ids(j - 1))
+      p = putVarLong(buf, p, ns(j).toLong)
+      j += 1
+    }
+    Array.tabulate(k - 1)(i =>
+      (ids(i), ns(i), java.util.Arrays.copyOfRange(buf, off(i + 1), p)))
+  }
+
+  /** Unsigned LEB128 of `v` at `buf(p)`; returns the next free position. */
+  private def putVarLong(buf: Array[Byte], p0: Int, v0: Long): Int = {
+    var p = p0
+    var v = v0
+    while ((v & ~0x7fL) != 0) {
+      buf(p) = ((v & 0x7f) | 0x80).toByte
+      v >>>= 7
+      p += 1
+    }
+    buf(p) = v.toByte
+    p + 1
+  }
+
+  /** Overlap counts of probe doc `a` (with `na` distinct shingles) against
+    * its partners, read from the [[postingTails]] tails of `a` — one tail
+    * per posting list `a` is in, so a partner appears once per shared
+    * shingle hash. Counts them in one hash map keyed by partner id,
+    * skipping partners equal to `a` (a within-doc hash collision puts `a`
+    * twice in one posting list). Returns (doc_b, inter, jaccard) with
+    * `jaccard = inter / (na + nb − inter) >= minJaccard`, ascending in
+    * doc_b.
+    */
+  def partnerOverlaps(a: Long, na: Int, tails: Array[Array[Byte]],
+      minJaccard: Double): Array[(Long, Long, Double)] = {
+    // a packed partner takes at least 2 bytes: cap >= 2 × partners
+    var bytes = 0L
+    tails.foreach(bytes += _.length)
+    var cap = 4
+    while (cap < bytes) cap <<= 1
+    val mask = cap - 1
+    // open addressing on the partner id; cnt == 0 marks a free slot
+    val keys = new Array[Long](cap)
+    val cnt = new Array[Long](cap)
+    val nbs = new Array[Int](cap)
+    var t = 0
+    while (t < tails.length) {
+      val r = new VarLongReader(tails(t))
+      var b = a
+      while (r.hasNext) {
+        b += r.next()
+        val nb = r.next().toInt
+        if (b != a) {
+          var s = ((b * 0x9e3779b97f4a7c15L) >>> 32).toInt & mask
+          while (cnt(s) != 0 && keys(s) != b) s = (s + 1) & mask
+          if (cnt(s) == 0) { keys(s) = b; nbs(s) = nb }
+          cnt(s) += 1
+        }
+      }
+      t += 1
+    }
+    val out = Array.newBuilder[(Long, Long, Double)]
+    var s = 0
+    while (s < cap) {
+      val inter = cnt(s)
+      if (inter != 0) {
+        val j = inter.toDouble / (na.toLong + nbs(s) - inter)
+        if (j >= minJaccard) out += ((keys(s), inter, j))
+      }
+      s += 1
+    }
+    out.result().sortBy(_._1)
+  }
+
+  private final class VarLongReader(buf: Array[Byte]) {
+    private var p = 0
+    def hasNext: Boolean = p < buf.length
+    def next(): Long = {
+      var v = 0L
+      var shift = 0
+      var b = buf(p)
+      p += 1
+      while ((b & 0x80) != 0) {
+        v |= (b & 0x7fL) << shift
+        shift += 7
+        b = buf(p)
+        p += 1
+      }
+      v | ((b & 0x7fL) << shift)
+    }
+  }
 }
 
 /** array<long> of the document's distinct word-3-gram 60-bit hashes
@@ -214,17 +331,16 @@ case class SimHashSig(child: Expression)
 }
 
 /** All ordered index pairs (xs(i), xs(j)), i < j, of a long array as
-  * array<struct<a,b>> — the posting-list pair expansion shared by d2
-  * (shingle postings), d4 (band buckets) and d7's above-crossover LSH
-  * candidates. Replaces the declarative
+  * array<struct<a,b>> — the posting-list pair expansion shared by d4
+  * (band buckets) and d7's above-crossover LSH candidates. Replaces the declarative
   * `flatten(transform(xs, (a,i) => transform(slice(xs, i+2, n-i-1),
   * b => struct(a, b))))`, whose per-ELEMENT interpreted lambda plumbing
   * (lambda binding + boxing + an intermediate array per outer element)
   * dominated the pair stage the same way the pre-native shingle HOFs did
   * (round-6 finding: 1.27M pairs at sf0.1 cost ~1.7 s of the d2 wall).
   * Value parity is exact: same order (outer index asc, inner asc), same
-  * duplicate semantics (equal values kept — callers guard a != b where
-  * they mean to), empty/1-element arrays yield an empty array.
+  * duplicate semantics (equal values kept), empty/1-element arrays yield
+  * an empty array.
   */
 case class OrderedPairs(child: Expression)
     extends UnaryExpression with CodegenFallback {
@@ -237,13 +353,15 @@ case class OrderedPairs(child: Expression)
     StructField("b", LongType, nullable = false)))
 
   override def dataType: DataType = ArrayType(pairType, containsNull = false)
-  def inputTypes: Seq[DataType] = Seq(ArrayType(LongType))
+  def inputTypes: Seq[DataType] = Seq(ArrayType(LongType, containsNull = false))
+  // a NULL element would be read as 0 by toLongArray: only non-null
+  // element types are accepted
   override def checkInputDataTypes() = child.dataType match {
-    case ArrayType(LongType, _) =>
+    case ArrayType(LongType, false) =>
       org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
     case t =>
       org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"ordered_pairs needs array<bigint> input, got ${t.catalogString}")
+        s"ordered_pairs needs array<bigint> input without NULL elements, got ${t.catalogString}")
   }
 
   override protected def nullSafeEval(input: Any): Any = {
@@ -268,4 +386,90 @@ case class OrderedPairs(child: Expression)
 
   override protected def withNewChildInternal(newChild: Expression): OrderedPairs =
     copy(child = newChild)
+}
+
+/** The partner tails of a posting list — [[TextShingles.postingTails]]
+  * over (ids array<bigint> sorted ascending, ns array<int>) as
+  * array<struct<doc_a, na, tail binary>>; NULL on any NULL input. Each
+  * entry's tail is what d2 and c1's near-dup stage shuffle to the entry's
+  * own doc, instead of one row per candidate pair.
+  */
+case class PostingTails(ids: Expression, ns: Expression)
+    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
+    with CodegenFallback {
+
+  import org.apache.spark.sql.catalyst.InternalRow
+  import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+  import org.apache.spark.sql.catalyst.util.ArrayData
+  import org.apache.spark.sql.types.{BinaryType, IntegerType, StructField, StructType}
+
+  override def left: Expression = ids
+  override def right: Expression = ns
+  override def dataType: DataType = ArrayType(StructType(Seq(
+    StructField("doc_a", LongType, nullable = false),
+    StructField("na", IntegerType, nullable = false),
+    StructField("tail", BinaryType, nullable = false))), containsNull = false)
+  override def checkInputDataTypes(): TypeCheckResult =
+    (ids.dataType, ns.dataType) match {
+      case (ArrayType(LongType, false), ArrayType(IntegerType, false)) =>
+        TypeCheckResult.TypeCheckSuccess
+      case (a, b) => TypeCheckResult.TypeCheckFailure(
+        "posting_tails needs (array<bigint>, array<int>) without NULL " +
+          s"elements, got (${a.catalogString}, ${b.catalogString})")
+    }
+
+  override protected def nullSafeEval(idsV: Any, nsV: Any): Any =
+    new GenericArrayData(TextShingles.postingTails(
+      idsV.asInstanceOf[ArrayData].toLongArray(),
+      nsV.asInstanceOf[ArrayData].toIntArray())
+      .map { case (a, na, tail) => InternalRow(a, na, tail) })
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): PostingTails =
+    copy(ids = newLeft, ns = newRight)
+}
+
+/** The near-dup pairs of one probe document — [[TextShingles.partnerOverlaps]]
+  * over (doc_a bigint, na int, tails array<binary>) as
+  * array<struct<doc_b, inter, jaccard>>; NULL on any NULL input. Counts
+  * in one per-document hash map what d2 and c1's near-dup stage used to
+  * shuffle and aggregate as one row per candidate pair.
+  */
+case class PartnerOverlaps(docA: Expression, nA: Expression, tails: Expression,
+    minJaccard: Double)
+    extends org.apache.spark.sql.catalyst.expressions.TernaryExpression
+    with CodegenFallback {
+
+  import org.apache.spark.sql.catalyst.InternalRow
+  import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+  import org.apache.spark.sql.catalyst.util.ArrayData
+  import org.apache.spark.sql.types.{BinaryType, DoubleType, IntegerType, StructField, StructType}
+
+  override def first: Expression = docA
+  override def second: Expression = nA
+  override def third: Expression = tails
+  override def dataType: DataType = ArrayType(StructType(Seq(
+    StructField("doc_b", LongType, nullable = false),
+    StructField("inter", LongType, nullable = false),
+    StructField("jaccard", DoubleType, nullable = false))), containsNull = false)
+  override def checkInputDataTypes(): TypeCheckResult =
+    (docA.dataType, nA.dataType, tails.dataType) match {
+      case (LongType, IntegerType, ArrayType(BinaryType, false)) =>
+        TypeCheckResult.TypeCheckSuccess
+      case (a, n, t) => TypeCheckResult.TypeCheckFailure(
+        "partner_overlaps needs (bigint, int, array<binary>) without NULL " +
+          s"elements, got (${a.catalogString}, ${n.catalogString}, ${t.catalogString})")
+    }
+
+  override protected def nullSafeEval(a: Any, na: Any, ts: Any): Any = {
+    val arr = ts.asInstanceOf[ArrayData]
+    val pairs = TextShingles.partnerOverlaps(a.asInstanceOf[Long],
+      na.asInstanceOf[Int], Array.tabulate(arr.numElements())(arr.getBinary),
+      minJaccard)
+    new GenericArrayData(pairs.map { case (b, inter, j) => InternalRow(b, inter, j) })
+  }
+
+  override protected def withNewChildrenInternal(newFirst: Expression,
+      newSecond: Expression, newThird: Expression): PartnerOverlaps =
+    copy(docA = newFirst, nA = newSecond, tails = newThird)
 }

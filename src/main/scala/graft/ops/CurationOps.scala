@@ -31,9 +31,11 @@ import org.apache.spark.sql.functions._
   * in one pass, the exact-dedup keeper set is one hash shuffle on
   * content_hash over the ALREADY-FILTERED stage-2 survivors (doc_id +
   * 128-bit hash only — text never rides that exchange), the near-dup drop
-  * set reuses d2's bounded posting-list machinery (ONE shuffle on the
-  * 60-bit shingle hash, df-capped fan-out) over the stage-3 survivors,
-  * and the five funnel rows come from ONE `explode(sequence(0,
+  * set reuses d2's posting-list machinery over the stage-3 survivors (ONE
+  * shuffle on the 60-bit shingle hash into df-capped posting lists, ONE
+  * more gathering each doc's packed partner tails, whose overlaps are
+  * counted per document — no row per candidate pair, no join), and the
+  * five funnel rows come from ONE `explode(sequence(0,
   * last_stage))` over a 2-column frame whose hash-aggregate map-side
   * combines to ≤5 rows per partition before its only shuffle. Filters run
   * BEFORE the expensive pair stage, exactly how a 100 TB curation run

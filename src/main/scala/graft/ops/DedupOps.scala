@@ -1,12 +1,13 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumns, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.objects.AssertNotNull
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for a training-data pipeline over `documents`:
-  * exact (hash groupBy), n-gram Jaccard pairs (shingle explode +
-  * self-join), MinHash signatures + LSH banding, and SimHash — all
+  * exact (hash groupBy), n-gram Jaccard pairs (posting lists + per-doc
+  * overlap counts), MinHash signatures + LSH banding, and SimHash — all
   * declarative (explode/join/groupBy ride Catalyst's hash aggregates and
   * shuffle planning; no UDFs, no driver-side loops).
   *
@@ -15,7 +16,7 @@ import org.apache.spark.sql.functions._
   * `('0x'||…)::BIGINT` in DuckDB) and mixed with XOR — multiplication-free,
   * so no engine-specific overflow semantics can diverge.
   *
-  * Scale: the shingle self-join shuffles on the shingle key — at 100 TB the
+  * Scale: d2's posting lists shuffle on the shingle key — at 100 TB the
   * LSH-banded variant (d4) is the path: candidates meet only inside a band
   * bucket, turning the quadratic pair space into per-bucket joins.
   */
@@ -50,11 +51,12 @@ object DedupOps {
       graft.functions.TextShingles.shingleHashCol(col("text")).as("shingles"))
 
   /** Hot-shingle bound for [[ngramJaccardPairs]]: shingles occurring in more
-    * than this many documents are dropped before the self-join (classic
+    * than this many documents are dropped before pairing (classic
     * document-frequency / prefix filtering). A shingle with df=d produces
-    * d·(d-1)/2 join rows — one corpus-scale stopword trigram would make the
-    * per-key join quadratic AND that key a skewed shuffle straggler. The
-    * bound caps per-key fan-out at ~5k rows regardless of corpus size; such
+    * d·(d-1)/2 partner entries — one corpus-scale stopword trigram would
+    * make its posting list quadratic AND that key a skewed shuffle
+    * straggler. The bound caps per-key fan-out at ~5k partner entries
+    * regardless of corpus size; such
     * shingles carry no near-dup signal anyway (they match everything). At
     * the oracle SF the max df is 7, so results are unchanged there.
     */
@@ -71,15 +73,23 @@ object DedupOps {
     * jaccard on hot keys is quadratic). The DuckDB oracle prunes
     * identically; COVERAGE.md "d2" documents the contract for consumers.
     *
-    * Mechanics — posting lists: group the exploded
-    * shingles once (ONE shuffle on the shingle key), df-prune hot shingles
-    * (df > [[MaxShingleDf]]), and generate candidate pairs by exploding
-    * each surviving posting list's ordered combinations — the classic
-    * inverted-index shape. Versus a shingle self-join this halves the
-    * shuffled bytes and removes the per-key hash-table build; the df bound
-    * caps any posting list's pair fan-out at df·(df-1)/2 ≤ ~5k regardless
-    * of corpus size. jaccard = |∩| / (|A|+|B|-|∩|) with per-doc counts over
-    * ALL distinct shingles (the pruned jaccard is a lower bound of exact).
+    * Mechanics — per-document overlap counting over posting lists: each
+    * (doc, shingle hash) entry carries the doc's distinct-shingle count n;
+    * ONE shuffle on the 60-bit hash groups the entries into posting lists
+    * sorted by doc, hot shingles are df-pruned (df > [[MaxShingleDf]]),
+    * and the native [[graft.functions.PostingTails]] gives every entry its
+    * TAIL — the later entries of its list, packed as delta-varint bytes
+    * (~3 bytes per partner, where a bigint id and an int size take 12) —
+    * keyed by its own doc. ONE more shuffle gathers each probe doc's
+    * tails, and the native [[graft.functions.PartnerOverlaps]] counts the
+    * partners in one
+    * per-document hash map, computing jaccard = |∩| / (|A|+|B|-|∩|) from
+    * the carried sizes (counts over ALL distinct shingles, so the pruned
+    * jaccard is a lower bound of exact) and keeping only pairs at or above
+    * the floor. No row per candidate pair is ever shuffled or aggregated,
+    * and no join is needed for the sizes. A probe doc holds at most
+    * n·([[MaxShingleDf]] − 1) partner entries, so its memory stays
+    * df-capped at any corpus size.
     */
   def ngramJaccardPairs(spark: SparkSession, dir: String): DataFrame =
     ngramJaccardPairsOn(docs(spark, dir), 0.05)
@@ -89,54 +99,45 @@ object DedupOps {
     * near-dup stage (threshold 0.8 over the funnel's dedup survivors).
     */
   private[ops] def ngramJaccardPairsOn(d: DataFrame, minJaccard: Double): DataFrame = {
-    // ONE shingling pass (the d9/d10 spine lesson, applied to d2 in round
-    // 6): without the materialization barrier the compact hash-array frame
-    // is re-derived by each of its three consumers — the per-doc counts
-    // frame joins the pair stream on BOTH sides (two separate projections,
-    // no exchange to reuse) and the posting explode is a third — so the
-    // per-shingle md5 work and the text scan ran 3× per query. The frame
-    // is doc_id + ~85 longs per doc (no text); production swaps
-    // localCheckpoint for checkpoint()/a persisted table, as documented on
-    // decontaminate/boilerplate.
-    val shArrays = hashedShinglesOn(d).localCheckpoint()
-    // per-doc distinct-shingle count straight off the array — no explode,
-    // no shuffle (the old groupBy(doc_id) re-aggregated the exploded rows)
-    val counts = shArrays.select(col("doc_id"), size(col("shingles")).as("n"))
-    // shuffle the 60-bit token hash (the d3/d4 hash family), not the ~25-byte
-    // shingle string: at corpus scale the posting shuffle's bytes are the
-    // whole cost of this operator. The oracle hashes the same way, so a
-    // hash collision (~|shingles|²/2^61 per doc) over-counts a pair's
-    // intersection IDENTICALLY in both engines; the one asymmetry — a
-    // within-doc collision putting the doc twice in a posting list, which
-    // a self-JOIN's a<b can never pair but index-based expansion would —
-    // is closed by the doc_a =!= doc_b guard below (the native shingle
-    // expression preserves exactly that duplicated-hash case: dedupe is
-    // by shingle STRING, as array_distinct had it)
-    val sh = shArrays
-      .select(col("doc_id"), explode(col("shingles")).as("h"))
-    val postings = sh.groupBy("h")
-      .agg(sort_array(collect_list(col("doc_id"))).as("docs"))
+    // A NULL id or text never pairs. Dropping those rows up front lets the
+    // posting fields be typed non-null, as the partner arrays must be.
+    // Shuffling the 60-bit hash, not the ~25-byte shingle string, keeps the
+    // posting shuffle small; the oracle hashes the same way, so a hash
+    // collision (~|shingles|²/2^61 per doc) over-counts a pair's
+    // intersection IDENTICALLY in both engines. A within-doc collision puts
+    // the doc twice in one posting list (the native shingle expression
+    // dedupes by shingle STRING, as array_distinct had it); PartnerOverlaps
+    // skips the resulting self-partner, as a self-join's a < b would.
+    //
+    // explode_outer then a NULL-h drop, not explode: for explode the
+    // optimizer infers size(shingles) > 0 and pushes it below this
+    // projection, where it re-hashes every document's shingles
+    val entries = hashedShinglesOn(
+        d.filter(col("doc_id").isNotNull && col("text").isNotNull))
+      .select(nonNull(col("doc_id")).as("doc_id"),
+        nonNull(size(col("shingles"))).as("n"),
+        explode_outer(col("shingles")).as("h"))
+      .filter(col("h").isNotNull)
+    val postings = entries.groupBy("h")
+      .agg(sort_array(collect_list(struct(col("doc_id"), col("n")))).as("docs"))
       .filter(size(col("docs")).between(2, MaxShingleDf))
-    // ordered pairs (a < b) from each posting list, then count per pair —
-    // expanded by the native [[graft.functions.OrderedPairs]] loop (round
-    // 6): the declarative nested transform/slice ran interpreted lambda
-    // plumbing once PER CANDIDATE PAIR (1.27M pairs at sf0.1), which
-    // dominated this operator's wall exactly like the pre-native shingle
-    // HOFs did
-    val pairs = postings
-      .select(explode(
-        graft.functions.TextShingles.orderedPairsCol(col("docs"))).as("p"))
-      .filter(col("p.a") =!= col("p.b"))
-      .groupBy(col("p.a").as("doc_a"), col("p.b").as("doc_b"))
-      .agg(count(lit(1)).as("inter"))
-    pairs
-      .join(counts.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n", "na"), "doc_a")
-      .join(counts.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n", "nb"), "doc_b")
-      .select(col("doc_a"), col("doc_b"), col("inter"),
-        (col("inter").cast("double") / (col("na") + col("nb") - col("inter"))).as("jaccard"))
-      .filter(col("jaccard") >= minJaccard)
+    postings
+      .select(explode(graft.functions.TextShingles.postingTailsCol(
+        col("docs.doc_id"), col("docs.n"))).as("t"))
+      .groupBy(col("t.doc_a").as("doc_a"), col("t.na").as("na"))
+      .agg(collect_list(col("t.tail")).as("tails"))
+      .select(col("doc_a"), explode(graft.functions.TextShingles.partnerOverlapsCol(
+        col("doc_a"), col("na"), col("tails"), minJaccard)).as("p"))
+      .select(col("doc_a"), col("p.doc_b").as("doc_b"), col("p.inter").as("inter"),
+        col("p.jaccard").as("jaccard"))
       .orderBy("doc_a", "doc_b")
   }
+
+  /** `c` typed non-nullable; a NULL fails the task, so callers drop NULL
+    * rows first.
+    */
+  private def nonNull(c: Column): Column = GraftColumns.column(
+    AssertNotNull(GraftColumns.expression(c)))
 
   def ngramJaccardSql: String =
     """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),

@@ -5,8 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** Stage decomposition of the c1/c2/c3 curation spine at the bench SF —
   * times each sequential piece the spine pays (flag checkpoint, keeper
-  * aggregate, survivor text scan, shingle checkpoint + pair stage, final
-  * funnel) so "latency floor" claims are measured, not asserted.
+  * aggregate, survivor text scan, pair stage, final funnel) so "latency floor" claims are measured, not asserted.
   *
   *   runMain graft.tools.CurationProfile [sfDir]
   */
@@ -50,12 +49,6 @@ object CurationProfile {
         .select(col("doc_id"), col("f.lang_pred").as("lang_pred"),
           col("f.qual_ok").as("qual_ok"),
           col("f.content_hash").as("content_hash"), col("f.n_bpe").as("n_bpe"))
-        .localCheckpoint()
-    }
-    time("full shingle ckpt of ALL docs (d2 spine)") {
-      spark.read.parquet(s"$sfDir/documents.parquet")
-        .select(col("doc_id"),
-          graft.functions.TextShingles.shingleHashCol(col("text")).as("shingles"))
         .localCheckpoint()
     }
     time("full c1 funnel, noop") {

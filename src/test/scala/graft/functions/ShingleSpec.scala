@@ -122,4 +122,98 @@ class ShingleSpec extends AnyFunSuite {
       assert(native == want, s"pair expansion diverges: $native vs $want")
     }
   }
+
+  test("OrderedPairs, PostingTails and PartnerOverlaps reject inputs they cannot read") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+    import org.apache.spark.sql.types._
+    def typed(t: DataType): Expression = Literal.create(null, t)
+    val longs = ArrayType(LongType, containsNull = false)
+    val ints = ArrayType(IntegerType, containsNull = false)
+    val bins = ArrayType(BinaryType, containsNull = false)
+    def ok(e: Expression) = e.checkInputDataTypes().isSuccess
+    assert(ok(OrderedPairs(typed(longs))))
+    assert(ok(PostingTails(typed(longs), typed(ints))))
+    assert(ok(PartnerOverlaps(typed(LongType), typed(IntegerType), typed(bins), 0.5)))
+    // a NULL element would be read as 0 (or throw): rejected at analysis
+    assert(!ok(OrderedPairs(typed(ArrayType(LongType, containsNull = true)))))
+    assert(!ok(PostingTails(typed(ArrayType(LongType, containsNull = true)), typed(ints))))
+    assert(!ok(PostingTails(typed(longs), typed(ArrayType(IntegerType, containsNull = true)))))
+    assert(!ok(PartnerOverlaps(typed(LongType), typed(IntegerType),
+      typed(ArrayType(BinaryType, containsNull = true)), 0.5)))
+    // and mistyped arguments
+    assert(!ok(OrderedPairs(typed(ints))))
+    assert(!ok(PostingTails(typed(ints), typed(ints))))
+    assert(!ok(PartnerOverlaps(typed(LongType), typed(LongType), typed(bins), 0.5)))
+    assert(!ok(PartnerOverlaps(typed(LongType), typed(IntegerType), typed(longs), 0.5)))
+    // through the DataFrame API the rejection is an analysis error
+    val withNulls = Seq(Seq(Some(1L), None, Some(3L))).toDF("xs")
+    intercept[org.apache.spark.sql.AnalysisException] {
+      withNulls.select(TextShingles.orderedPairsCol(col("xs"))).collect()
+    }
+  }
+
+  test("PartnerOverlaps on crafted tails: duplicated partner, self partner, empty tail, pair at tau") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.types._
+    // the tail probe `a` gets from one posting list whose later entries are
+    // (ids, ns) — PostingTails' own encoding
+    def tail(a: Long, na: Int, ids: Seq[Long], ns: Seq[Int]): Array[Byte] =
+      TextShingles.postingTails((a +: ids).toArray, (na +: ns).toArray).head._3
+    def overlaps(a: Long, na: Int, tails: Seq[Array[Byte]], tau: Double) = {
+      val e = PartnerOverlaps(Literal(a), Literal(na),
+        Literal.create(tails, ArrayType(BinaryType, containsNull = false)), tau)
+      val out = e.eval().asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+      (0 until out.numElements()).map { i =>
+        val r = out.getStruct(i, 3)
+        (r.getLong(0), r.getLong(1), r.getDouble(2))
+      }
+    }
+    val a = 10L
+    val tails = Seq(
+      // a within-doc collision: `a` itself is the next entry, then 12
+      tail(a, 3, Seq(10L, 12L), Seq(3, 3)),
+      // 12 twice in one list: a collision inside doc 12
+      tail(a, 3, Seq(12L, 12L, 40L), Seq(3, 3, 9)),
+      Array.emptyByteArray,
+      tail(a, 3, Seq(40L), Seq(9)))
+    // 12: inter 3 -> 3 / (3 + 3 - 3) = 1.0; 40: inter 2 -> 2 / (3 + 9 - 2) = 0.2
+    assert(overlaps(a, 3, tails, 0.0) == Seq((12L, 3L, 1.0), (40L, 2L, 0.2)))
+    // the floor is inclusive: exactly at tau stays, above tau drops it
+    assert(overlaps(a, 3, tails, 0.2) == Seq((12L, 3L, 1.0), (40L, 2L, 0.2)))
+    assert(overlaps(a, 3, tails, 0.2000001) == Seq((12L, 3L, 1.0)))
+    // only self partners or no tails at all: no pairs
+    assert(overlaps(a, 3, Seq(tail(a, 3, Seq(10L), Seq(3))), 0.0).isEmpty)
+    assert(overlaps(a, 3, Seq(Array.emptyByteArray), 0.0).isEmpty)
+    assert(overlaps(a, 3, Nil, 0.0).isEmpty)
+    // any NULL input is a NULL result
+    assert(PartnerOverlaps(Literal.create(null, LongType), Literal(3),
+      Literal.create(Nil, ArrayType(BinaryType, containsNull = false)), 0.0).eval() == null)
+  }
+
+  test("PostingTails + PartnerOverlaps == all-ordered-pairs counts (random lists, extreme ids)") {
+    val rnd = new scala.util.Random(7)
+    val pool = Seq(Long.MinValue, Long.MinValue + 1, -5L, 0L, 1L, 2L, 1L << 40,
+      Long.MaxValue - 1, Long.MaxValue) ++ Seq.fill(20)(rnd.nextLong())
+    // a doc's distinct-shingle count: any positive int, incl. multi-byte
+    val sizes = pool.map(id => id -> (1000 + rnd.nextInt(Int.MaxValue - 1000))).toMap
+    val lists = Seq.fill(300) {
+      Seq.fill(rnd.nextInt(8))(pool(rnd.nextInt(pool.length))).sorted.toArray
+    }
+    val want = lists.flatMap { ids =>
+      for (i <- ids.indices; j <- i + 1 until ids.length if ids(i) != ids(j))
+        yield (ids(i), ids(j))
+    }.groupBy(identity).map { case (p, ps) => p -> ps.size.toLong }
+    val byProbe = lists.flatMap(ids => TextShingles.postingTails(ids, ids.map(sizes)))
+      .groupBy(t => (t._1, t._2))
+    val got = byProbe.toSeq.flatMap { case ((a, na), ts) =>
+      TextShingles.partnerOverlaps(a, na, ts.map(_._3).toArray, Double.MinValue)
+        .map { case (b, inter, j) =>
+          assert(j == inter.toDouble / (na.toLong + sizes(b) - inter))
+          (a, b) -> inter
+        }
+    }
+    assert(got.map(_._1).distinct.size == got.size, "a pair came out twice")
+    assert(got.toMap == want)
+  }
 }

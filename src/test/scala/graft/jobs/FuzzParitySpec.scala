@@ -15,7 +15,9 @@ import java.nio.file.{Files, Paths}
   */
 class FuzzParitySpec extends AnyFunSuite {
 
-  private val hashFile = "/root/repo/src/test/resources/goldens/sffuzz.hashes.jsonl"
+  // tests fork with the build's base directory as their working directory
+  private val hashFile = Paths.get("src/test/resources/goldens/sffuzz.hashes.jsonl")
+    .toAbsolutePath.toString
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[8]")

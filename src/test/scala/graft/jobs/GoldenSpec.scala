@@ -15,7 +15,13 @@ import java.nio.file.{Files, Paths}
   */
 class GoldenSpec extends AnyFunSuite {
 
-  private val goldenJson = "/root/repo/src/test/resources/goldens/sf0.001.json"
+  /** The repository root: tests fork with the build's base directory as
+    * their working directory.
+    */
+  private val root = Paths.get("").toAbsolutePath
+  private val goldens = root.resolve("src/test/resources/goldens")
+
+  private val goldenJson = goldens.resolve("sf0.001.json").toString
 
   /** The corpus is a pure function of the doc index (CorpusGen) — (re)write
     * it when absent so `sbt -batch test` is self-contained; only the
@@ -23,7 +29,7 @@ class GoldenSpec extends AnyFunSuite {
     * Python harness.
     */
   private def corpus(sf: String): String = {
-    val dir = s"/root/repo/data/docs/sf$sf"
+    val dir = root.resolve(s"data/docs/sf$sf").toString
     if (!Files.exists(Paths.get(dir))) {
       import spark.implicits._
       val n = graft.corpus.CorpusGen.numDocs(sf.toDouble)
@@ -93,8 +99,7 @@ class GoldenSpec extends AnyFunSuite {
   private def checkHashes(sf: String, label: String = "", sample: Int = 1,
       dirOverride: String = ""): Unit = {
     val name = if (label.nonEmpty) label else s"sf$sf"
-    val hashFile = Paths.get(
-      s"/root/repo/src/test/resources/goldens/$name.hashes.jsonl")
+    val hashFile = goldens.resolve(s"$name.hashes.jsonl")
     assume(Files.exists(hashFile), s"$name hash goldens not generated")
     val dir = if (dirOverride.nonEmpty) dirOverride else corpus(sf)
     val mapper = new ObjectMapper()
@@ -139,10 +144,10 @@ class GoldenSpec extends AnyFunSuite {
     // (tools/gen_goldens.py data/docs/sf1.0 1.0sample 100). Skips when the
     // 159 MB corpus isn't on disk (it regenerates via GenMain, but not
     // inside the unit gate).
-    assume(Files.exists(Paths.get("/root/repo/data/docs/sf1.0")),
-      "sf1.0 corpus not generated")
+    val sf1 = root.resolve("data/docs/sf1.0")
+    assume(Files.exists(sf1), "sf1.0 corpus not generated")
     checkHashes("1.0", label = "sf1.0sample", sample = 100,
-      dirOverride = "/root/repo/data/docs/sf1.0")
+      dirOverride = sf1.toString)
   }
 
   test("a3 signature stats pinned against executed reference functions (sf0.001)") {
@@ -151,7 +156,7 @@ class GoldenSpec extends AnyFunSuite {
     // (gen_goldens.py, same deterministic table substitution), plus the
     // get_signature_stats() totals shape (signatures.py:341-354). This pins
     // the one aggregate surface (a3) whose ids SQL oracles can't derive.
-    val statsJson = "/root/repo/src/test/resources/goldens/sf0.001.sigstats.json"
+    val statsJson = goldens.resolve("sf0.001.sigstats.json").toString
     assume(Files.exists(Paths.get(statsJson)) && available,
       "sigstats goldens not generated")
     spark.sparkContext.setLogLevel("WARN")

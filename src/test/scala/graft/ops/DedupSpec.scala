@@ -86,8 +86,103 @@ class DedupSpec extends AnyFunSuite {
   test("d2 posting-list pairs: no self-join, no all-pairs join") {
     val plan = DedupOps.ngramJaccardPairs(spark, sfDir)
       .queryExecution.executedPlan.toString
-    assert(!plan.contains("BroadcastNestedLoopJoin"), plan)
-    assert(!plan.contains("CartesianProduct"), plan)
+    // no join of any kind: the doc sizes ride the posting entries, and
+    // partners are counted per probe doc, not exploded into pair rows
+    assert(!plan.toLowerCase.contains("join"), plan)
+    assert(!plan.toLowerCase.contains("orderedpairs"), plan)
+    assert(plan.toLowerCase.contains("partneroverlaps"), plan)
+  }
+
+  test("d2 building the DataFrame and its plan starts no Spark job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    // spark.read.parquet infers the schema with a job of its own, so the
+    // input is read before the window; d2 itself must add none
+    val input = spark.read.parquet(s"$sfDir/documents.parquet")
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("d2-build", "build d2")
+      DedupOps.ngramJaccardPairsOn(input, 0.05).queryExecution.executedPlan
+      // jobs reach listeners in start order: once this marker job is seen,
+      // any job the build started has been seen too
+      sc.setJobGroup("d2-marker", "marker")
+      spark.range(1).count()
+      sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!groups.contains("d2-marker") && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(groups.contains("d2-marker"), "marker job never reached the listener")
+      assert(!groups.contains("d2-build"), "building d2 ran a Spark job")
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("d2 == plain-Scala all-pairs reference at tau 0.05 and 0.8 (df prune, near-dups, NULLs)") {
+    import spark.implicits._
+    import java.nio.charset.StandardCharsets.UTF_8
+    val corpus = spark.read.parquet(s"$sfDir/documents.parquet")
+      .select("doc_id", "text").as[(Long, String)].collect().toSeq
+    val next = corpus.map(_._1).max + 1
+    // a trigram shared by more than MaxShingleDf docs of two shingles each:
+    // unpruned, every pair of them would have jaccard 1/3
+    val hot = (0 until DedupOps.MaxShingleDf + 20).map(i =>
+      (next + i, s"zqhot zqplanted zqtrigram zqu$i"))
+    // near-dups of long corpus docs: an exact copy and a last-token edit
+    val long = corpus.filter(_._2.split(" ", -1).length >= 40).take(3)
+    val dups = long.zipWithIndex.flatMap { case ((_, t), i) =>
+      Seq((next + 1000 + 2 * i, t),
+        (next + 1001 + 2 * i, t.substring(0, t.lastIndexOf(' ')) + " zqedit"))
+    }
+    val docs = corpus ++ hot ++ dups
+    // NULL ids and texts never pair
+    val frame = (docs.map { case (id, t) => (Option(id), Option(t)) } ++
+      Seq((None, Some(long.head._2)), (Some(next + 5000), None)))
+      .toDF("doc_id", "text")
+
+    // reference: hash -> multiplicity per doc (a within-doc collision keeps
+    // both distinct shingles), n = distinct shingle strings
+    val sh = docs.map { case (id, t) =>
+      val toks = t.split(" ", -1)
+      val strs = if (toks.length < 3) Seq.empty[String]
+        else (0 until toks.length - 2)
+          .map(i => toks(i) + " " + toks(i + 1) + " " + toks(i + 2)).distinct
+      (id, strs.size,
+        strs.groupBy(s => graft.functions.TextShingles.hash60(s.getBytes(UTF_8)))
+          .map { case (h, ss) => h -> ss.size })
+    }
+    val df = sh.flatMap(_._3.toSeq).groupBy(_._1).map { case (h, ms) => h -> ms.map(_._2).sum }
+    val hotHash = graft.functions.TextShingles.hash60(
+      "zqhot zqplanted zqtrigram".getBytes(UTF_8))
+    assert(df(hotHash) > DedupOps.MaxShingleDf, "the planted trigram must be df-pruned")
+    def reference(tau: Double): Seq[(Long, Long, Long, Double)] = {
+      val kept = sh.map { case (id, n, m) =>
+        (id, n, m.filter { case (h, _) => df(h) <= DedupOps.MaxShingleDf }) }
+      (for {
+        (a, na, ma) <- kept; (b, nb, mb) <- kept if a < b
+        inter = ma.iterator.map { case (h, c) => c.toLong * mb.getOrElse(h, 0) }.sum
+        if inter > 0
+        j = inter.toDouble / (na + nb - inter)
+        if j >= tau
+      } yield (a, b, inter, j)).sortBy(r => (r._1, r._2))
+    }
+
+    for (tau <- Seq(0.05, CurationOps.NearDupTau)) {
+      val got = DedupOps.ngramJaccardPairsOn(frame, tau).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq
+      val want = reference(tau)
+      assert(want.nonEmpty)
+      assert(got == want, s"tau $tau: ${got.size} rows vs ${want.size} expected")
+      assert(!got.exists(r => r._1 >= next && r._1 < next + hot.size),
+        "a pair held only by the pruned trigram came out")
+    }
+    val nearDups = reference(CurationOps.NearDupTau).map(r => (r._1, r._2)).toSet
+    dups.grouped(2).foreach { case Seq((c, _), (e, _)) =>
+      assert(nearDups((c, e)), s"planted near-dup ($c, $e) missing at tau 0.8")
+    }
   }
 
   test("d3 minhash: per-row fold, ZERO shuffles") {
