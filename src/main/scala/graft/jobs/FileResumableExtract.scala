@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession, SaveMode}
 import org.apache.spark.sql.functions._
 import graft.model.{CanonicalSignature, InputDoc}
-import graft.parse.{DocParser, SignatureTable}
+import graft.parse.{DocParser, PyCompat, SignatureTable}
 import org.apache.spark.TaskContext
 
 /** Checkpoint/resume at INPUT-FILE granularity — the zero-shuffle
@@ -51,11 +51,7 @@ object FileResumableExtract {
     * another's pending work. For a flat input dir the relative path IS the
     * basename, so flat-layout ids (and existing manifests) are unchanged.
     */
-  def fileId(relPath: String): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    md.digest(relPath.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
-  }
+  def fileId(relPath: String): String = PyCompat.md5Hex(relPath)
 
   /** The input root's decoded absolute filesystem path — the prefix
     * stripped to form root-relative ids on both the driver (listing) and
@@ -431,7 +427,7 @@ object FileResumableExtract {
         val runId = nextMetricsRun(f, outPath)
         ExtractJob.unitMetrics(written, "file_id")
           .withColumn("run", lit(runId))
-          .repartition(1) // #files rows of scalars — one small file
+          .coalesce(1) // #files rows of scalars — one small file, no exchange
           .write.mode(SaveMode.Overwrite)
           .parquet(s"$outPath/metrics/run_$runId")
       }

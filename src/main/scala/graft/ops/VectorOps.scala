@@ -30,8 +30,12 @@ object VectorOps {
   private[ops] def norm(a: Column): Column = sqrt(dot(a, a))
 
   /** Brute-force cosine top-20 vs the vec_id=0 query vector. */
-  def annTopK(spark: SparkSession, dir: String): DataFrame = {
-    val e = emb(spark, dir)
+  def annTopK(spark: SparkSession, dir: String): DataFrame = annTopKOn(emb(spark, dir))
+
+  /** v1's brute-force scan over an already-loaded embeddings frame; v4's
+    * exact branch reuses the frame it sized the dispatch on.
+    */
+  private[ops] def annTopKOn(e: DataFrame): DataFrame = {
     val q = e.filter(col("vec_id") === 0)
       .select(col("embedding").as("q_embedding"))
     e.crossJoin(broadcast(q))
@@ -142,7 +146,7 @@ object VectorOps {
     // crossover the brute-force scan IS the cheaper identical-output plan;
     // above it, probe at the analytically sized (bits, tables) point.
     DedupOps.annParamsFor(e.count()) match {
-      case None => annTopK(spark, dir)
+      case None => annTopKOn(e)
       case Some(op) => lshAnnTopKOn(e, op.bits, op.tables)
     }
   }

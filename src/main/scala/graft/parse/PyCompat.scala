@@ -283,9 +283,16 @@ object PyCompat {
     java.security.MessageDigest.getInstance(algo)
       .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
 
+  private val HexDigits = "0123456789abcdef".toCharArray
+
   private def hex(bytes: Array[Byte]): String = {
-    val sb = new StringBuilder(bytes.length * 2)
-    bytes.foreach(b => sb.append(f"${b & 0xff}%02x"))
-    sb.toString
+    val out = new Array[Char](bytes.length * 2)
+    var i = 0
+    while (i < bytes.length) {
+      out(2 * i) = HexDigits((bytes(i) >> 4) & 0xf)
+      out(2 * i + 1) = HexDigits(bytes(i) & 0xf)
+      i += 1
+    }
+    new String(out)
   }
 }

@@ -12,8 +12,32 @@ import graft.model.{KeyValue, Rule}
   * run first (in file order), then the matched signature's override rules —
   * the broadcast rule table replaces the reference's on-disk YAML (S8) and
   * its stateful signature-override store.
+  *
+  * Anchored search: [[applyRule]] calls `find(from)` from the lowest index
+  * at which the rule can match at all, and skips the regex when no match is
+  * possible. Two rules have such a bound, recognised by their pattern:
+  *
+  *  - `email` needs an `@`. No match can start before the run of possible
+  *    local-part characters that ends at the FIRST `@`: a match's local part
+  *    ends right at some `@` at or after it, and `@` is not a local-part
+  *    character, so no local part spans an earlier `@`. The backward walk
+  *    counts every non-ASCII char as a possible member, since under
+  *    CASE_INSENSITIVE | UNICODE_CHARACTER_CLASS e.g. `K` (U+212A) and `ſ`
+  *    (U+017F) fold into `[a-zA-Z]`; ASCII has no other case variants.
+  *  - `date` needs a `/` or `-` at offset 1 or 2 of the match, so no match
+  *    starts before the first separator minus 2 (`[0-9]` and `[/-]` have no
+  *    case variants).
+  *
+  * Since no match starts before `from`, `find(from)` returns the leftmost
+  * match `find()` would, including a match at a later `@` when the first
+  * `@`'s domain part fails. Every other rule searches from 0. The bound
+  * matters most for `email`: a search from 0 retries the local-part run at
+  * each of its chars, which costs the square of the run length per run.
   */
 object RulesEngine {
+
+  private val DatePattern = "([0-9]{1,2}[/-][0-9]{1,2}[/-][0-9]{2,4})"
+  private val EmailPattern = "([a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\\.[a-zA-Z]{2,})"
 
   /** The six global rules, verbatim patterns from
     * `rules/global_rules.yml` (all verified Python/Java-regex compatible —
@@ -26,15 +50,11 @@ object RulesEngine {
     Rule("total_amount",
       "(?:total|amount|sum|due)\\s*:?\\s*\\$?([0-9,]+\\.?[0-9]*)",
       0.8, required = true),
-    Rule("date",
-      "([0-9]{1,2}[/-][0-9]{1,2}[/-][0-9]{2,4})",
-      0.7, required = false),
+    Rule("date", DatePattern, 0.7, required = false),
     Rule("vendor_name",
       "(?:vendor|company|from)\\s*:?\\s*([A-Za-z\\s&\\.]+?)(?:\\n|$|\\.|,)",
       0.6, required = false),
-    Rule("email",
-      "([a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\\.[a-zA-Z]{2,})",
-      0.9, required = false),
+    Rule("email", EmailPattern, 0.9, required = false),
     Rule("phone_number",
       "(\\(?[0-9]{3}\\)?[-\\.\\s]?[0-9]{3}[-\\.\\s]?[0-9]{4})",
       0.8, required = false))
@@ -58,6 +78,33 @@ object RulesEngine {
     val pattern: Pattern = Pattern.compile(rule.pattern,
       Pattern.CASE_INSENSITIVE | Pattern.MULTILINE |
         Pattern.UNICODE_CHARACTER_CLASS)
+
+    /** Lowest index a match can start at, or -1 if none can match (see the
+      * anchored-search note on [[RulesEngine]]).
+      */
+    private[parse] val searchFrom: String => Int = rule.pattern match {
+      case EmailPattern => emailFrom
+      case DatePattern => dateFrom
+      case _ => _ => 0
+    }
+  }
+
+  private def emailFrom(t: String): Int = {
+    var i = t.indexOf('@') // -1 (no match possible) skips the walk
+    while (i > 0 && mayBeLocalPart(t.charAt(i - 1))) i -= 1
+    i
+  }
+
+  private def mayBeLocalPart(c: Char): Boolean =
+    c >= 0x80 || (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') ||
+      (c >= '0' && c <= '9') || c == '.' || c == '_' || c == '%' ||
+      c == '+' || c == '-'
+
+  private def dateFrom(t: String): Int = {
+    val slash = t.indexOf('/')
+    val dash = t.indexOf('-')
+    val sep = if (slash < 0) dash else if (dash < 0) slash else math.min(slash, dash)
+    if (sep < 0) -1 else math.max(0, sep - 2)
   }
 
   def compile(rules: Seq[Rule]): Seq[CompiledRule] = rules.map(new CompiledRule(_))
@@ -66,8 +113,9 @@ object RulesEngine {
 
   /** Apply one rule — returns None when no match (`rules_engine.py:93-96`). */
   def applyRule(cr: CompiledRule, text: String): Option[KeyValue] = {
+    val from = cr.searchFrom(text)
     val m = cr.pattern.matcher(text)
-    if (!m.find()) None
+    if (from < 0 || !m.find(from)) None
     else {
       val raw = if (m.groupCount() > 0) m.group(1) else m.group(0)
       // group(1) can be null only if the group didn't participate — not

@@ -26,6 +26,11 @@ class FileResumeSpec extends AnyFunSuite {
       .collect().map { case (d, s) => d -> DocParser.spanHash(s) }.toMap
   }
 
+  test("fileId is the md5 hex of the root-relative path (existing manifests resolve)") {
+    assert(FileResumableExtract.fileId("part-00000.parquet") ==
+      "537f1e9e100022c1e63abde9e4c97df6")
+  }
+
   test("file-granular resume: no shuffle, no reprocessing, identical convergence") {
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._

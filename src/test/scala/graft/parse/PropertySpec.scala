@@ -3,7 +3,7 @@ package graft.parse
 import org.scalacheck.{Gen, Prop, Properties}
 import org.scalacheck.Prop.{forAll, propBoolean}
 import graft.corpus.CorpusGen
-import graft.model.{LayoutElement, OutSpan}
+import graft.model.{KeyValue, LayoutElement, OutSpan}
 
 /** Property-based invariants (SURVEY §5.2 item 2) over the pure parse core
   * and the deterministic corpus generator. Plain scalacheck `Properties`
@@ -103,4 +103,81 @@ object PropertySpec extends Properties("parse-core") {
           DocParser.spanHash(Seq(OutSpan("section", b, "", 0)))
       }
     }
+
+  // ---- anchored rule search == plain find() ----
+
+  private val allRules: Seq[RulesEngine.CompiledRule] =
+    RulesEngine.GlobalCompiled ++
+      RulesEngine.compile(SignatureTable.Default.flatMap(_.overrideRules))
+
+  /** `applyRule` as it was before the anchored search: `find()` from 0. */
+  private def plainApply(cr: RulesEngine.CompiledRule, t: String): Option[KeyValue] = {
+    val m = cr.pattern.matcher(t)
+    if (!m.find()) None
+    else Option(if (m.groupCount() > 0) m.group(1) else m.group(0)).map { raw =>
+      val (v, num) = RulesEngine.coerce(PyCompat.pyStrip(raw), cr.rule.fieldName)
+      KeyValue(cr.rule.fieldName, v, num, cr.rule.confidence, "rule")
+    }
+  }
+
+  // local-part chars, separators, case-folding and whitespace oddities,
+  // long runs, rule trigger phrases, and repeated '@'s whose first domain
+  // part fails
+  private val ruleFragment: Gen[String] = Gen.frequency(
+    8 -> Gen.oneOf("a", "Z", "k", "s", "i", "9", ".", "_", "%", "+", "-",
+      "@", "/", "-", " ", "\n"),
+    4 -> Gen.oneOf("\u212A", "\u017F", "\u0131", "\u0130", "\u00A0", "\u2028"),
+    2 -> Gen.choose(20, 300).flatMap(n => Gen.listOfN(n, Gen.alphaNumChar)).map(_.mkString),
+    3 -> Gen.oneOf("x@-", "a@b", "@@", "u@host.", "bob@example.com",
+      "\u212Aelvin@ex.\u017Fite", "1/2/2024", "12-31-99", "7-", "Total: 1,234.56",
+      "Invoice # INV-1", "from Acme Co.", "(555) 123-4567", "555.123.4567",
+      "GSTIN: 22AAAAA0000A1Z5", "P.O. no: PO-77", "Reply-To: r@x.org"))
+
+  private val ruleText: Gen[String] = for {
+    prefix <- Gen.oneOf("", "/", "-", "@", "1/", "1-", "a@", "\u212A@")
+    body <- Gen.listOf(ruleFragment)
+  } yield prefix + body.mkString
+
+  property("anchored rule search = plain find() for every rule") =
+    forAll(Gen.listOfN(20, ruleText)) { texts =>
+      Prop.all((for (t <- texts; cr <- allRules) yield {
+        val from = cr.searchFrom(t)
+        val m = cr.pattern.matcher(t)
+        val bounded = if (m.find()) from >= 0 && m.start() >= from else true
+        (bounded && RulesEngine.applyRule(cr, t) == plainApply(cr, t)) :|
+          s"${cr.rule.fieldName} on [$t]"
+      }): _*)
+    }
+
+  property("anchored rule search: known cases") = {
+    def rule(name: String)(t: String) = RulesEngine.applyRule(
+      RulesEngine.GlobalCompiled.find(_.rule.fieldName == name).get, t).map(_.value)
+    val email = rule("email") _
+    val date = rule("date") _
+    email("x@y, then bob@example.com") == Some("bob@example.com") &&
+      email("\u212Aelvin@ex.com") == Some("\u212Aelvin@ex.com") &&
+      email("no at sign.com").isEmpty &&
+      date("-1/2/2024") == Some("1/2/2024") &&
+      date("12-31-99") == Some("12-31-99") &&
+      date("1/2/3 and 4-5-2024") == Some("4-5-2024") &&
+      date("20240101").isEmpty
+  }
+
+  // ---- digest hex: known answers (bytes >= 0x80 catch sign extension) ----
+
+  property("digest hex known answers") = {
+    val fox = "The quick brown fox jumps over the lazy dog"
+    PyCompat.md5Hex("") == "d41d8cd98f00b204e9800998ecf8427e" &&
+      PyCompat.md5Hex("abc") == "900150983cd24fb0d6963f7d28e17f72" &&
+      PyCompat.md5Hex(fox) == "9e107d9d372bb6826bd81d3542a419d6" &&
+      PyCompat.sha1Hex("") == "da39a3ee5e6b4b0d3255bfef95601890afd80709" &&
+      PyCompat.sha1Hex("abc") == "a9993e364706816aba3e25717850c26c9cd0d89d" &&
+      PyCompat.sha1Hex(fox) == "2fd4e1c67a2d28fced849ee1bb76e7391b93eb12" &&
+      PyCompat.sha256Hex("") ==
+        "e3b0c44298fc1c149afbf4c8996fb92427ae41e4649b934ca495991b7852b855" &&
+      PyCompat.sha256Hex("abc") ==
+        "ba7816bf8f01cfea414140de5dae2223b00361a396177a9cb410ff61f20015ad" &&
+      PyCompat.sha256Hex(fox) ==
+        "d7a8fbb307d7809469ca9abcb0082e4f8d5651e46d3cdb762d02d0bf37c9e592"
+  }
 }
