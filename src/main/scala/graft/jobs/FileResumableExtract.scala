@@ -388,8 +388,15 @@ object FileResumableExtract {
 
     graft.sources.DocStore.withDynamicOverwrite(spark) {
       timed("write") {
+        // span texts, doc ids and content hashes are (nearly) unique: a
+        // dictionary hashes every value and saves little or nothing (ids
+        // and hashes fall back to PLAIN anyway). Low-cardinality columns
+        // keep theirs.
         results.write.mode(SaveMode.Overwrite)
           .partitionBy("file_id")
+          .option("parquet.enable.dictionary#spans.list.element.text", "false")
+          .option("parquet.enable.dictionary#doc_id", "false")
+          .option("parquet.enable.dictionary#content_hash", "false")
           .parquet(s"$outPath/results")
       }
     }

@@ -13,51 +13,85 @@ import graft.model.{KeyValue, Rule}
   * the broadcast rule table replaces the reference's on-disk YAML (S8) and
   * its stateful signature-override store.
   *
-  * Anchored search: [[applyRule]] calls `find(from)` from the lowest index
-  * at which the rule can match at all, and skips the regex when no match is
-  * possible. Two rules have such a bound, recognised by their pattern:
+  * Start filters: every rule carries an exact start filter, a hand-written
+  * scan that yields, in increasing order, every index at which a match of
+  * its pattern can start (it may yield extra indices, never misses one).
+  * [[applyRule]] tries the regex anchored at each candidate in turn
+  * (`region(p, text.length).lookingAt()`) and takes the first success. That
+  * is the match `find()` returns, because `find()` tries the same indices
+  * in the same order and the candidates it skips cannot start a match.
+  * Rules are recognised by their pattern string:
   *
-  *  - `email` needs an `@`. No match can start before the run of possible
-  *    local-part characters that ends at the FIRST `@`: a match's local part
-  *    ends right at some `@` at or after it, and `@` is not a local-part
-  *    character, so no local part spans an earlier `@`. The backward walk
-  *    counts every non-ASCII char as a possible member, since under
-  *    CASE_INSENSITIVE | UNICODE_CHARACTER_CLASS e.g. `K` (U+212A) and `ſ`
-  *    (U+017F) fold into `[a-zA-Z]`; ASCII has no other case variants.
-  *  - `date` needs a `/` or `-` at offset 1 or 2 of the match, so no match
-  *    starts before the first separator minus 2 (`[0-9]` and `[/-]` have no
-  *    case variants).
+  *  - keyword rules (`invoice_number`, `total_amount`, `vendor_name` and
+  *    the shipped override rules `gstin`, `po_number`, `reply_to`): an
+  *    index where the first 3 chars (all of a shorter word) of one trigger
+  *    word match: `inv`/`bil`, `tot`/`amo`/`sum`/`due`, `ven`/`com`/`fro`,
+  *    `gst`, `po`/`p.o` and `rep`.
+  *    Under CASE_INSENSITIVE | UNICODE_CASE an ASCII pattern letter matches
+  *    its ASCII upper and lower case and some non-ASCII chars (`ſ`, `İ`,
+  *    `ı` and `K` fold into ASCII letters), and no other ASCII char, so a
+  *    text char counts as a match for a trigger char when it is one of the
+  *    ASCII case pair or any non-ASCII char. Each trigger char matches
+  *    exactly one text char, since no supplementary code point folds to
+  *    ASCII;
+  *  - `phone_number`: three ASCII digits, or `(` then three ASCII digits;
+  *  - `date`: an ASCII digit with `/` or `-` at offset 1 or 2;
+  *  - `email`: an index inside a run of possible local-part chars that ends
+  *    at an `@` (a local part ends right at an `@`, and `@` is not a
+  *    local-part char). Every non-ASCII char counts as a possible member,
+  *    since e.g. `K` and `ſ` fold into `[a-zA-Z]`.
   *
-  * Since no match starts before `from`, `find(from)` returns the leftmost
-  * match `find()` would, including a match at a later `@` when the first
-  * `@`'s domain part fails. Every other rule searches from 0. The bound
-  * matters most for `email`: a search from 0 retries the local-part run at
-  * each of its chars, which costs the square of the run length per run.
+  * `[0-9]`, `(`, `/`, `-` and `@` have no case variants. The region ends at
+  * the text's end, so `$` is unchanged; no shipped pattern uses lookbehind,
+  * `\b` or `^`, and the matcher's bounds are transparent and non-anchoring
+  * anyway, so those would see the text before the region as under `find()`.
+  * Under these flags `Pattern` always compiles to `StartS`: `find()` tries
+  * index 0, 1, ... up to `text.length` but skips the low half of a
+  * surrogate pair. A lone low surrogate never matches a trigger char, a
+  * digit, `(` or a local-part char, so a filter may yield it harmlessly. A
+  * pattern without a filter falls back to [[EveryIndex]], which is
+  * `find()`'s own order, including a possible empty match at the end.
   */
 object RulesEngine {
 
+  private val InvoicePattern =
+    "(?:invoice|inv|bill)\\s*(?:number|#|no\\.?)\\s*:?\\s*([A-Z0-9-]+)"
+  private val TotalPattern = "(?:total|amount|sum|due)\\s*:?\\s*\\$?([0-9,]+\\.?[0-9]*)"
   private val DatePattern = "([0-9]{1,2}[/-][0-9]{1,2}[/-][0-9]{2,4})"
+  private val VendorPattern =
+    "(?:vendor|company|from)\\s*:?\\s*([A-Za-z\\s&\\.]+?)(?:\\n|$|\\.|,)"
   private val EmailPattern = "([a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\\.[a-zA-Z]{2,})"
+  private val PhonePattern = "(\\(?[0-9]{3}\\)?[-\\.\\s]?[0-9]{3}[-\\.\\s]?[0-9]{4})"
 
   /** The six global rules, verbatim patterns from
     * `rules/global_rules.yml` (all verified Python/Java-regex compatible —
     * SURVEY §7.3 R2).
     */
   val GlobalRules: Seq[Rule] = Seq(
-    Rule("invoice_number",
-      "(?:invoice|inv|bill)\\s*(?:number|#|no\\.?)\\s*:?\\s*([A-Z0-9-]+)",
-      0.9, required = true),
-    Rule("total_amount",
-      "(?:total|amount|sum|due)\\s*:?\\s*\\$?([0-9,]+\\.?[0-9]*)",
-      0.8, required = true),
+    Rule("invoice_number", InvoicePattern, 0.9, required = true),
+    Rule("total_amount", TotalPattern, 0.8, required = true),
     Rule("date", DatePattern, 0.7, required = false),
-    Rule("vendor_name",
-      "(?:vendor|company|from)\\s*:?\\s*([A-Za-z\\s&\\.]+?)(?:\\n|$|\\.|,)",
-      0.6, required = false),
+    Rule("vendor_name", VendorPattern, 0.6, required = false),
     Rule("email", EmailPattern, 0.9, required = false),
-    Rule("phone_number",
-      "(\\(?[0-9]{3}\\)?[-\\.\\s]?[0-9]{3}[-\\.\\s]?[0-9]{4})",
-      0.8, required = false))
+    Rule("phone_number", PhonePattern, 0.8, required = false))
+
+  /** Trigger words of the keyword rules, keyed by pattern: a match starts
+    * with one of them (`SignatureTable`'s override patterns included).
+    */
+  private val KeywordTriggers: Map[String, Seq[String]] = Map(
+    InvoicePattern -> Seq("invoice", "inv", "bill"),
+    TotalPattern -> Seq("total", "amount", "sum", "due"),
+    VendorPattern -> Seq("vendor", "company", "from"),
+    "GSTIN\\s*:?\\s*([0-9A-Z]{15})" -> Seq("gstin"),
+    "(?:PO|P\\.O\\.)\\s*(?:number|no\\.?)?\\s*:?\\s*([A-Z0-9-]+)" -> Seq("po", "p.o."),
+    "Reply-To\\s*:?\\s*([a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+)" -> Seq("reply-to"))
+
+  /** Start filter: `next(text, from)` is the next index `>= from` at which a
+    * match can start, or -1 when there is none (see [[RulesEngine]]).
+    */
+  private[parse] trait StartFilter {
+    def next(text: String, from: Int): Int
+  }
 
   /** Compiled rule ready for per-partition reuse (pooled parser state).
     * UNICODE_CASE because Python's `re.IGNORECASE` on str patterns folds
@@ -79,33 +113,104 @@ object RulesEngine {
       Pattern.CASE_INSENSITIVE | Pattern.MULTILINE |
         Pattern.UNICODE_CHARACTER_CLASS)
 
-    /** Lowest index a match can start at, or -1 if none can match (see the
-      * anchored-search note on [[RulesEngine]]).
-      */
-    private[parse] val searchFrom: String => Int = rule.pattern match {
-      case EmailPattern => emailFrom
-      case DatePattern => dateFrom
-      case _ => _ => 0
+    private[parse] val nextStart: StartFilter = rule.pattern match {
+      case EmailPattern => emailStarts
+      case DatePattern => dateStarts
+      case PhonePattern => phoneStarts
+      case p => KeywordTriggers.get(p).map(keywordStarts).getOrElse(EveryIndex)
     }
   }
 
-  private def emailFrom(t: String): Int = {
-    var i = t.indexOf('@') // -1 (no match possible) skips the walk
-    while (i > 0 && mayBeLocalPart(t.charAt(i - 1))) i -= 1
-    i
+  /** The fallback: every index from 0 to `text.length`, skipping the low
+    * half of a surrogate pair, as `find()` does.
+    */
+  private[parse] val EveryIndex: StartFilter = (t, from) => {
+    var i = from
+    while (i > 0 && i < t.length &&
+        Character.isLowSurrogate(t.charAt(i)) &&
+        Character.isHighSurrogate(t.charAt(i - 1))) i += 1
+    if (i <= t.length) i else -1
+  }
+
+  private def isDigit(c: Char): Boolean = c >= '0' && c <= '9'
+
+  private val phoneStarts: StartFilter = (t, from) => {
+    val n = t.length
+    var i = from
+    var hit = -1
+    while (hit < 0 && i + 2 < n) {
+      val c = t.charAt(i)
+      val d = if (c == '(') i + 1 else i
+      if (d + 2 < n && isDigit(t.charAt(d)) && isDigit(t.charAt(d + 1)) &&
+          isDigit(t.charAt(d + 2))) hit = i
+      i += 1
+    }
+    hit
+  }
+
+  private def isDateSep(c: Char): Boolean = c == '/' || c == '-'
+
+  private val dateStarts: StartFilter = (t, from) => {
+    val n = t.length
+    var i = from
+    var hit = -1
+    while (hit < 0 && i + 1 < n) {
+      if (isDigit(t.charAt(i)) && (isDateSep(t.charAt(i + 1)) ||
+          (i + 2 < n && isDateSep(t.charAt(i + 2))))) hit = i
+      i += 1
+    }
+    hit
+  }
+
+  private val emailStarts: StartFilter = (t, from) => {
+    var at = t.indexOf('@', from)
+    var hit = -1
+    while (hit < 0 && at >= 0) {
+      var s = at
+      while (s > from && mayBeLocalPart(t.charAt(s - 1))) s -= 1
+      if (s < at) hit = s else at = t.indexOf('@', at + 1)
+    }
+    hit
   }
 
   private def mayBeLocalPart(c: Char): Boolean =
     c >= 0x80 || (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') ||
-      (c >= '0' && c <= '9') || c == '.' || c == '_' || c == '%' ||
-      c == '+' || c == '-'
+      isDigit(c) || c == '.' || c == '_' || c == '%' || c == '+' || c == '-'
 
-  private def dateFrom(t: String): Int = {
-    val slash = t.indexOf('/')
-    val dash = t.indexOf('-')
-    val sep = if (slash < 0) dash else if (dash < 0) slash else math.min(slash, dash)
-    if (sep < 0) -1 else math.max(0, sep - 2)
+  /** Candidates where the first 3 chars of one trigger word match. */
+  private def keywordStarts(words: Seq[String]): StartFilter = {
+    val triggers = words.map(_.take(3)).distinct.map(_.toCharArray).toArray
+    // the triggers an ASCII char can start (both cases); non-ASCII: all
+    val byFirst = Array.tabulate(128)(c => triggers.filter(w => mayFold(c.toChar, w(0))))
+    (t, from) => {
+      val n = t.length
+      var i = from
+      var hit = -1
+      while (hit < 0 && i < n) {
+        val c = t.charAt(i)
+        val ws = if (c < 0x80) byFirst(c) else triggers
+        var k = 0
+        while (hit < 0 && k < ws.length) {
+          val w = ws(k)
+          if (i + w.length <= n) {
+            var j = 1
+            while (j < w.length && mayFold(t.charAt(i + j), w(j))) j += 1
+            if (j == w.length) hit = i
+          }
+          k += 1
+        }
+        i += 1
+      }
+      hit
+    }
   }
+
+  /** Can text char `c` match the lower-case ASCII pattern char `p` under
+    * CASE_INSENSITIVE | UNICODE_CASE? Yes for `p` itself, its ASCII upper
+    * case, and (conservatively) any non-ASCII char.
+    */
+  private def mayFold(c: Char, p: Char): Boolean =
+    c == p || c >= 0x80 || (p >= 'a' && p <= 'z' && c == p - 32)
 
   def compile(rules: Seq[Rule]): Seq[CompiledRule] = rules.map(new CompiledRule(_))
 
@@ -113,9 +218,13 @@ object RulesEngine {
 
   /** Apply one rule — returns None when no match (`rules_engine.py:93-96`). */
   def applyRule(cr: CompiledRule, text: String): Option[KeyValue] = {
-    val from = cr.searchFrom(text)
-    val m = cr.pattern.matcher(text)
-    if (from < 0 || !m.find(from)) None
+    // lookbehind, \b and ^ see the text before the region, as under find()
+    val m = cr.pattern.matcher(text).useTransparentBounds(true)
+      .useAnchoringBounds(false)
+    var p = cr.nextStart.next(text, 0)
+    while (p >= 0 && !m.region(p, text.length).lookingAt())
+      p = cr.nextStart.next(text, p + 1)
+    if (p < 0) None
     else {
       val raw = if (m.groupCount() > 0) m.group(1) else m.group(0)
       // group(1) can be null only if the group didn't participate — not

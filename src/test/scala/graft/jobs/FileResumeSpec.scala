@@ -75,6 +75,36 @@ class FileResumeSpec extends AnyFunSuite {
     assert(docsIn == 400L, s"metrics double-counted: $docsIn")
   }
 
+  test("results write: unique columns PLAIN-encoded, low-cardinality ones keep a dictionary") {
+    spark.sparkContext.setLogLevel("WARN")
+    import spark.implicits._
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.parquet.column.Encoding
+    import scala.jdk.CollectionConverters._
+    val base = Files.createTempDirectory("graft_fresume_enc_").toString
+    val in = s"$base/docs"
+    // repeated docs: a dictionary would pay off on every column here, so
+    // a column without one shows the writer was told not to build it
+    spark.range(0, 200, 1, 2).map(i => CorpusGen.gen(i % 4)).write.parquet(in)
+    assert(FileResumableExtract.run(spark, in, s"$base/out") == 200L)
+    val part = Files.walk(java.nio.file.Paths.get(s"$base/out/results")).iterator.asScala
+      .find(p => p.getFileName.toString.startsWith("part-") &&
+        p.toString.endsWith(".parquet")).get
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
+      new org.apache.hadoop.fs.Path(part.toString), spark.sparkContext.hadoopConfiguration))
+    val cols = try reader.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala)
+      .map(c => c.getPath.toDotString -> c).toMap
+    finally reader.close()
+    for (c <- Seq("spans.list.element.text", "doc_id", "content_hash")) {
+      assert(cols.contains(c), s"no column $c in ${cols.keys}")
+      assert(!cols(c).hasDictionaryPage && cols(c).getEncodings.contains(Encoding.PLAIN),
+        s"$c: ${cols(c).getEncodings}")
+    }
+    assert(cols("spans.list.element.kind").hasDictionaryPage,
+      s"kind: ${cols("spans.list.element.kind").getEncodings}")
+  }
+
   test("input basenames needing URI encoding (space, %) keep marker and output ids consistent") {
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._

@@ -3,7 +3,7 @@ package graft.parse
 import org.scalacheck.{Gen, Prop, Properties}
 import org.scalacheck.Prop.{forAll, propBoolean}
 import graft.corpus.CorpusGen
-import graft.model.{KeyValue, LayoutElement, OutSpan}
+import graft.model.{KeyValue, LayoutElement, OutSpan, Rule}
 
 /** Property-based invariants (SURVEY §5.2 item 2) over the pure parse core
   * and the deterministic corpus generator. Plain scalacheck `Properties`
@@ -104,13 +104,23 @@ object PropertySpec extends Properties("parse-core") {
       }
     }
 
-  // ---- anchored rule search == plain find() ----
+  // ---- anchored rule search (start filters) == plain find() ----
 
-  private val allRules: Seq[RulesEngine.CompiledRule] =
+  private val shippedRules: Seq[RulesEngine.CompiledRule] =
     RulesEngine.GlobalCompiled ++
       RulesEngine.compile(SignatureTable.Default.flatMap(_.overrideRules))
 
-  /** `applyRule` as it was before the anchored search: `find()` from 0. */
+  // patterns without a start filter: the every-index fallback must still
+  // equal find(), line anchors, word boundaries, lookbehind, empty matches
+  // and surrogates included
+  private val fallbackRules: Seq[RulesEngine.CompiledRule] = RulesEngine.compile(Seq(
+    Rule("anchor", "^\\s*(to\\w*)", 0.5, required = false),
+    Rule("lookbehind", "(?<=[0-9])(-[0-9])", 0.5, required = false),
+    Rule("boundary", "\\b(su\\w)", 0.5, required = false),
+    Rule("empty", "(-*)$", 0.5, required = false),
+    Rule("surrogate", "(\\p{Cs})", 0.5, required = false)))
+
+  /** `applyRule` as it was before the start filters: `find()` from 0. */
   private def plainApply(cr: RulesEngine.CompiledRule, t: String): Option[KeyValue] = {
     val m = cr.pattern.matcher(t)
     if (!m.find()) None
@@ -120,47 +130,85 @@ object PropertySpec extends Properties("parse-core") {
     }
   }
 
+  /** The filter's candidates, in the order `applyRule` tries them. */
+  private def candidates(cr: RulesEngine.CompiledRule, t: String): Seq[Int] =
+    Iterator.iterate(cr.nextStart.next(t, 0))(p => cr.nextStart.next(t, p + 1))
+      .takeWhile(_ >= 0).toSeq
+
+  /** Every start a plain `find()` loop reports. */
+  private def findStarts(cr: RulesEngine.CompiledRule, t: String): Seq[Int] = {
+    val m = cr.pattern.matcher(t)
+    Iterator.continually(m.find()).takeWhile(identity).map(_ => m.start()).toSeq
+  }
+
   // local-part chars, separators, case-folding and whitespace oddities,
-  // long runs, rule trigger phrases, and repeated '@'s whose first domain
-  // part fails
+  // long runs, rule trigger phrases and their folded or truncated forms,
+  // short digit runs next to phone/date punctuation, a surrogate pair, and
+  // repeated '@'s whose first domain part fails
   private val ruleFragment: Gen[String] = Gen.frequency(
     8 -> Gen.oneOf("a", "Z", "k", "s", "i", "9", ".", "_", "%", "+", "-",
       "@", "/", "-", " ", "\n"),
-    4 -> Gen.oneOf("\u212A", "\u017F", "\u0131", "\u0130", "\u00A0", "\u2028"),
+    4 -> Gen.oneOf("\u212A", "\u017F", "\u0131", "\u0130", "\u00A0", "\u2028",
+      "\uD83D\uDE00"),
+    4 -> Gen.oneOf("\u017Fum", "\u0130nvoice", "\u0131nv", "b\u0130ll", "TOTAL", "DuE",
+      "\u212A", "in", "to", "su", "fro", "subtotal", "Due:", "amount $", "bill no.",
+      "Vendor: ", "company", "gst", "P.O", "po ", "reply", "b\u0130ll # 42",
+      "b\u0131ll no. 7", "G\u017FTIN: 22AAAAA0000A1Z5"),
+    4 -> (for {
+      digits <- Gen.choose(1, 4).flatMap(n => Gen.listOfN(n, Gen.numChar))
+      sep <- Gen.oneOf("(", ")", "-", ".", " ", "")
+      before <- Gen.oneOf(true, false)
+    } yield if (before) sep + digits.mkString else digits.mkString + sep),
     2 -> Gen.choose(20, 300).flatMap(n => Gen.listOfN(n, Gen.alphaNumChar)).map(_.mkString),
     3 -> Gen.oneOf("x@-", "a@b", "@@", "u@host.", "bob@example.com",
       "\u212Aelvin@ex.\u017Fite", "1/2/2024", "12-31-99", "7-", "Total: 1,234.56",
       "Invoice # INV-1", "from Acme Co.", "(555) 123-4567", "555.123.4567",
       "GSTIN: 22AAAAA0000A1Z5", "P.O. no: PO-77", "Reply-To: r@x.org"))
 
-  private val ruleText: Gen[String] = for {
-    prefix <- Gen.oneOf("", "/", "-", "@", "1/", "1-", "a@", "\u212A@")
-    body <- Gen.listOf(ruleFragment)
-  } yield prefix + body.mkString
+  private val ruleText: Gen[String] = Gen.frequency(
+    1 -> Gen.const(""),
+    20 -> (for {
+      prefix <- Gen.oneOf("", "/", "-", "@", "1/", "1-", "a@", "\u212A@", "(", "\uDE00")
+      body <- Gen.listOf(ruleFragment)
+    } yield prefix + body.mkString))
 
   property("anchored rule search = plain find() for every rule") =
     forAll(Gen.listOfN(20, ruleText)) { texts =>
-      Prop.all((for (t <- texts; cr <- allRules) yield {
-        val from = cr.searchFrom(t)
-        val m = cr.pattern.matcher(t)
-        val bounded = if (m.find()) from >= 0 && m.start() >= from else true
-        (bounded && RulesEngine.applyRule(cr, t) == plainApply(cr, t)) :|
+      Prop.all((for (t <- texts; cr <- shippedRules ++ fallbackRules) yield {
+        val cands = candidates(cr, t)
+        val increasing = cands.zip(cands.drop(1)).forall { case (a, b) => a < b }
+        val complete = findStarts(cr, t).forall(cands.toSet)
+        (increasing && complete && RulesEngine.applyRule(cr, t) == plainApply(cr, t)) :|
           s"${cr.rule.fieldName} on [$t]"
       }): _*)
     }
+
+  property("every shipped rule has a start filter") =
+    shippedRules.size == 9 &&
+      shippedRules.forall(_.nextStart ne RulesEngine.EveryIndex) &&
+      fallbackRules.forall(_.nextStart eq RulesEngine.EveryIndex)
 
   property("anchored rule search: known cases") = {
     def rule(name: String)(t: String) = RulesEngine.applyRule(
       RulesEngine.GlobalCompiled.find(_.rule.fieldName == name).get, t).map(_.value)
     val email = rule("email") _
     val date = rule("date") _
+    val total = rule("total_amount") _
+    val phone = rule("phone_number") _
     email("x@y, then bob@example.com") == Some("bob@example.com") &&
       email("\u212Aelvin@ex.com") == Some("\u212Aelvin@ex.com") &&
       email("no at sign.com").isEmpty &&
       date("-1/2/2024") == Some("1/2/2024") &&
       date("12-31-99") == Some("12-31-99") &&
       date("1/2/3 and 4-5-2024") == Some("4-5-2024") &&
-      date("20240101").isEmpty
+      date("20240101").isEmpty &&
+      total("\u017Fum: 5") == Some("5") &&
+      total("subtotal 12.50") == Some("12.5") &&
+      rule("invoice_number")("\u0130nvoice # A-1") == Some("A-1") &&
+      rule("invoice_number")("b\u0131ll no. 7") == Some("7") &&
+      phone("(555) 123-4567") == Some("(555) 123-4567") &&
+      phone("555 1234").isEmpty &&
+      shippedRules.forall(cr => RulesEngine.applyRule(cr, "").isEmpty)
   }
 
   // ---- digest hex: known answers (bytes >= 0x80 catch sign extension) ----
