@@ -22,10 +22,10 @@ import graft.jobs.ExtractJob
   * (SMT + turbo above 16 threads): beyond 16 threads the HARDWARE, not the
   * engine, is the ceiling. CoreScaling 2→8: 0.93, 4→16: 0.89.
   *
-  * Measures the headline end-to-end extraction two ways per level:
-  * parse (scan → typed mapPartitions parse with broadcast signature table →
-  * consume every span) and sink (same + bucket-aligned shuffle + bucketed
-  * parquet write, the resumable-job shape).
+  * Measures the headline end-to-end extraction per level: parse (scan →
+  * typed mapPartitions parse with broadcast signature table → consume every
+  * span), the uncached scan alone, and filesink (the whole resumable job,
+  * `FileResumableExtract.run`: scan → parse → write → metrics → manifest).
   */
 object ScalingBench {
   def main(args: Array[String]): Unit = {
@@ -100,33 +100,12 @@ object ScalingBench {
         val t0 = System.nanoTime(); scanOnce(); (System.nanoTime() - t0) / 1e9
       }
 
-      // parse + the ByBucket raw-byte exchange, NO parquet write: splits
-      // sink_eff into its shuffle and write components (round-5 verdict
-      // item 2 — the ByBucket sink has sat at ~0.67 unattributed)
-      def shuffleOnce(): Unit = {
-        ExtractJob.extract(spark, docs, layout = ExtractJob.Layout.ByBucket)
-          .agg(sum(size(col("spans"))), count(lit(1))).head()
-      }
-      shuffleOnce() // warmup
-      val shufTimes = (1 to math.max(1, iters - 1)).map { _ =>
-        val t0 = System.nanoTime(); shuffleOnce(); (System.nanoTime() - t0) / 1e9
-      }
-      // Sink output on tmpfs for the same reason as spark.local.dir above:
-      // a real 4N cluster writes to storage whose aggregate throughput
-      // scales with the cluster (HDFS/S3 across executors); this sandbox
-      // has ONE virtual disk, which would charge the 4N level an output
-      // bottleneck no real 4N cluster has. RAM is what scales per-core here.
-      val sinkDir = s"/dev/shm/graft-bench/scaling_$cpus"
-      def sinkOnce(): Double = {
-        val t0 = System.nanoTime()
-        ExtractJob.extract(spark, docs, layout = ExtractJob.Layout.ByBucket)
-          .write.mode("overwrite").partitionBy("bucket")
-          .parquet(s"$sinkDir/results")
-        (System.nanoTime() - t0) / 1e9
-      }
-      sinkOnce() // warmup (cold dir + committer paths)
-      val sinkTimes = (1 to math.max(1, iters - 1)).map(_ => sinkOnce())
-
+      // Output on tmpfs for the same reason as spark.local.dir above: a
+      // real 4N cluster writes to storage whose aggregate throughput scales
+      // with the cluster (HDFS/S3 across executors); this sandbox has ONE
+      // virtual disk, which would charge the 4N level an output bottleneck
+      // no real 4N cluster has. RAM is what scales per-core here.
+      //
       // file-granular resumable job (zero shuffle): full read→parse→write→
       // manifest on a FRESH output dir each time (uncached input — the
       // scan is part of the job, as in production)
@@ -153,8 +132,6 @@ object ScalingBench {
 
       val pSec = median(parseTimes)
       val cSec = median(scanTimes)
-      val hSec = median(shufTimes)
-      val sSec = median(sinkTimes)
       val fSec = median(fsTimes)
       // phase breakdown (mean secs/run): where does the complete job spend
       // its wall time — the distributed write, or the driver-side
@@ -163,25 +140,25 @@ object ScalingBench {
       val br = Seq("rollback", "write", "metrics", "commit")
         .map(k => f""""${k}_sec":${phases.getOrElse(k, 0.0) / fsIters}%.3f""")
         .mkString(",")
-      // per-metric timed-run counts (sink/filesink run one fewer than
-      // parse) so evidence audits see the real sample sizes
-      println(f"""{"bench":"scaling","cpus":$cpus,"docs":$nDocs,"parse_partitions":$nParts,"parse_sec":$pSec%.3f,"parse_docs_per_sec":${nDocs / pSec}%.1f,"scan_sec":$cSec%.3f,"scan_docs_per_sec":${nDocs / cSec}%.1f,"shuffle_sec":$hSec%.3f,"shuffle_docs_per_sec":${nDocs / hSec}%.1f,"sink_sec":$sSec%.3f,"sink_docs_per_sec":${nDocs / sSec}%.1f,"filesink_sec":$fSec%.3f,"filesink_docs_per_sec":${nDocs / fSec}%.1f,$br,"parse_iters":${parseTimes.length},"scan_iters":${scanTimes.length},"shuffle_iters":${shufTimes.length},"sink_iters":${sinkTimes.length},"filesink_iters":${fsTimes.length},"corpus":"$corpus"}""")
+      // per-metric timed-run counts (filesink runs one fewer than parse)
+      // so evidence audits see the real sample sizes
+      println(f"""{"bench":"scaling","cpus":$cpus,"docs":$nDocs,"parse_partitions":$nParts,"parse_sec":$pSec%.3f,"parse_docs_per_sec":${nDocs / pSec}%.1f,"scan_sec":$cSec%.3f,"scan_docs_per_sec":${nDocs / cSec}%.1f,"filesink_sec":$fSec%.3f,"filesink_docs_per_sec":${nDocs / fSec}%.1f,$br,"parse_iters":${parseTimes.length},"scan_iters":${scanTimes.length},"filesink_iters":${fsTimes.length},"corpus":"$corpus"}""")
       org.apache.commons.io.FileUtils.deleteQuietly(
         new java.io.File("/dev/shm/graft-bench"))
       spark.stop()
-      (cpus, nDocs / pSec, nDocs / sSec, nDocs / fSec,
-        phases.getOrElse("write", 0.0) / fsIters, nDocs / cSec, nDocs / hSec)
+      (cpus, nDocs / pSec, nDocs / fSec,
+        phases.getOrElse("write", 0.0) / fsIters, nDocs / cSec)
     }
 
     if (perLevel.length == 2) {
-      val (c1, p1, s1, f1, w1, sc1, sh1) = perLevel(0)
-      val (c2, p2, s2, f2, w2, sc2, sh2) = perLevel(1)
+      val (c1, p1, f1, w1, sc1) = perLevel(0)
+      val (c2, p2, f2, w2, sc2) = perLevel(1)
       val ratio = c2.toDouble / c1
       // writeonly_eff: the distributed read→parse→write phase alone —
       // isolates the scaling of the DATA PATH from the constant-time
       // driver bookkeeping (metrics read-back, marker commit)
       val wEff = if (w1 > 0 && w2 > 0) (w1 / w2) / ratio else 0.0
-      println(f"""{"bench":"scaling_efficiency","n_cpus":$c1,"xn_cpus":$c2,"parse_eff":${(p2 / p1) / ratio}%.3f,"scan_eff":${(sc2 / sc1) / ratio}%.3f,"shuffle_eff":${(sh2 / sh1) / ratio}%.3f,"sink_eff":${(s2 / s1) / ratio}%.3f,"filesink_eff":${(f2 / f1) / ratio}%.3f,"filesink_writeonly_eff":$wEff%.3f}""")
+      println(f"""{"bench":"scaling_efficiency","n_cpus":$c1,"xn_cpus":$c2,"parse_eff":${(p2 / p1) / ratio}%.3f,"scan_eff":${(sc2 / sc1) / ratio}%.3f,"filesink_eff":${(f2 / f1) / ratio}%.3f,"filesink_writeonly_eff":$wEff%.3f}""")
     }
   }
 }

@@ -6,25 +6,25 @@ import org.apache.spark.sql.functions._
 import graft.model.{CanonicalSignature, InputDoc, ParsedDoc}
 import graft.parse.{DocParser, SignatureTable}
 
-/** The distributed extraction job: docs table → canonical span table +
-  * per-partition lineage/metrics (north rule).
+/** The distributed parse: docs table → canonical span table (north rule).
+  * [[FileResumableExtract]] is the one job that writes it, with
+  * checkpoint/resume and per-file lineage/metrics rows.
   *
   * Scale design (SURVEY §4.2):
   *  - the parse core is a pure typed `mapPartitions` with per-partition
   *    pooled parser state (compiled regexes) — no cross-row state, so
-  *    partition-granular resume is sound;
+  *    replaying a resume unit yields byte-identical rows;
   *  - the signature/rule table is `broadcast` to executors (it is bounded by
   *    layout diversity, never by corpus size);
   *  - skew from giant multi-page PDFs: the default [[Layout.ScanSplits]]
   *    parses on scan splits (`spark.sql.files.maxPartitionBytes` bounds
-  *    task size) so the raw corpus is never shuffled; uniform-hash
-  *    [[Layout.ByBucket]] (the writing jobs) and round-robin
-  *    [[Layout.RoundRobin]] (adversarially-sorted inputs) are the explicit
-  *    salted-repartition escape hatches — a giant doc is one row either
-  *    way, so a shuffle cannot split it finer;
-  *  - per-doc rows carry (partition_id, bytes_in, parse_us); partition
-  *    lineage rows are a partial-aggregated groupBy over them (no second
-  *    pass over the text).
+  *    task size) so the raw corpus is never shuffled; round-robin
+  *    [[Layout.RoundRobin]] (adversarially-sorted inputs) is the explicit
+  *    salted-repartition escape hatch — a giant doc is one row either way,
+  *    so a shuffle cannot split it finer;
+  *  - per-doc rows carry (partition_id, bytes_in, parse_us); lineage rows
+  *    are a partial-aggregated groupBy over them ([[unitMetrics]], no
+  *    second pass over the text).
   */
 object ExtractJob {
 
@@ -48,52 +48,16 @@ object ExtractJob {
       error: String,
       n_blocks: Int,
       n_blocks_kept: Int,
-      bucket: Int,
       partition_id: Int,
       bytes_in: Long,
       parse_us: Long)
 
-  /** Resume granularity (manifest protocol, SURVEY §4.2). 64 suits the
-    * local corpus; at 10^12-doc scale this is the one knob to raise (e.g.
-    * 4096) so buckets stay executor-memory-sized — the protocol is
-    * unchanged. Must be held constant across restarts of the same output
-    * dir (it keys the manifest), like any partitioning config.
-    *
-    * Resolved ONCE on the driver. Executor closures must never read this
-    * `val` directly (each JVM re-resolves the env var at object init, and
-    * cluster executors don't inherit the driver's environment — driver and
-    * executors could disagree on bucket assignment, corrupting the resume
-    * protocol). Every closure below captures the driver-side value into a
-    * local and passes it to [[bucketOf]] explicitly.
-    */
-  val NumBuckets: Int =
-    sys.env.get("GRAFT_NUM_BUCKETS").map(_.toInt).getOrElse(64)
-
-  /** CRC32-based so the SAME bucket is computable as a Catalyst column
-    * ([[bucketCol]]) and in plain Scala — letting the sink repartition by
-    * bucket (one file per bucket instead of tasks×buckets small files)
-    * while the manifest/rollback side recomputes it off the wire.
-    * `n` must be the DRIVER's bucket count (see [[NumBuckets]]).
-    */
-  def bucketOf(docId: String, n: Int = NumBuckets): Int = {
-    val c = new java.util.zip.CRC32
-    c.update(docId.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    (c.getValue % n).toInt
-  }
-
-  /** Column twin of [[bucketOf]] — `crc32` is codegen'd, stays in
-    * WholeStageCodegen. `lit(NumBuckets)` is evaluated on the driver, so
-    * the column form is immune to the env-divergence hazard by design.
-    */
-  def bucketCol: org.apache.spark.sql.Column =
-    pmod(crc32(encode(col("doc_id"), "UTF-8")), lit(NumBuckets.toLong)).cast("int")
-
   /** Parse one doc and assemble its result row — the ONE place the
-    * 21-field row is constructed (the batch extract and the file-granular
-    * job share it; two hand-maintained copies of a 21-argument constructor
+    * 20-field row is constructed (the batch extract and the file-granular
+    * job share it; two hand-maintained copies of a 20-argument constructor
     * would silently transpose same-typed fields on any reordering).
     */
-  def rowOf(doc: InputDoc, pool: DocParser.Pooled, pid: Int, nb: Int): ExtractedRow = {
+  def rowOf(doc: InputDoc, pool: DocParser.Pooled, pid: Int): ExtractedRow = {
     var bytesIn = 0L
     doc.spans.foreach(s => bytesIn += s.text.length + s.media_ref.length)
     val t0 = System.nanoTime()
@@ -102,7 +66,7 @@ object ExtractJob {
     ExtractedRow(p.docId, p.fileType, p.spans, p.spans.length, p.signatureId,
       p.sigSimilarity, p.sigEvent, p.nSections, p.nKvs, p.nChunks,
       p.ruleCoverage, p.charCount, p.pageCount, p.contentHash, p.error,
-      p.nBlocks, p.nBlocksKept, bucketOf(p.docId, nb), pid, bytesIn, us)
+      p.nBlocks, p.nBlocksKept, pid, bytesIn, us)
   }
 
   def readDocs(spark: SparkSession, inPath: String): Dataset[InputDoc] = {
@@ -111,8 +75,8 @@ object ExtractJob {
   }
 
   /** How the docs are laid out across parse tasks. The choice is a
-    * shuffle-cost / balance / sink-alignment tradeoff that matters at
-    * 100 TB: a pre-parse shuffle moves the RAW bytes of the whole corpus.
+    * shuffle-cost / balance tradeoff that matters at 100 TB: a pre-parse
+    * shuffle moves the RAW bytes of the whole corpus.
     */
   sealed trait Layout
   object Layout {
@@ -130,12 +94,6 @@ object ExtractJob {
       * giants) — the "salted repartitioning" degenerate-input defense.
       */
     final case class RoundRobin(perCore: Int = 4) extends Layout
-
-    /** Hash-shuffle on [[bucketCol]]: parse tasks aligned to resume
-      * buckets, so the bucketed sink writes ~one file per bucket instead
-      * of tasks×buckets small files. Used by the writing jobs.
-      */
-    case object ByBucket extends Layout
   }
 
   /** Parse a docs Dataset into the extracted table. */
@@ -151,28 +109,18 @@ object ExtractJob {
       case Layout.ScanSplits => docs
       case Layout.RoundRobin(perCore) =>
         docs.repartition(math.max(1, cores * perCore))
-      case Layout.ByBucket =>
-        docs.toDF().repartition(NumBuckets, bucketCol).as[InputDoc]
     }
-    val nb = NumBuckets // driver-side capture (see NumBuckets scaladoc)
     parts
       .mapPartitions { iter =>
         val pool = DocParser.pooled(bc.value) // pooled per-partition state
         val pid = TaskContext.getPartitionId()
-        iter.map(doc => rowOf(doc, pool, pid, nb))
+        iter.map(doc => rowOf(doc, pool, pid))
       }
   }
 
-  /** Per-partition lineage/metrics rows (partial+final hash aggregate —
-    * no extra pass over span text).
-    */
-  def partitionMetrics(results: DataFrame): DataFrame =
-    unitMetrics(results, "partition_id")
-
-  /** Lineage/metrics rows keyed on an arbitrary commit unit (bucket,
-    * file_id, …) so the resumable protocols can (re)write metrics
-    * idempotently per unit — a replayed unit OVERWRITES its metrics
-    * partition instead of double-counting an append.
+  /** Lineage/metrics rows keyed on a unit column: `file_id` (the resume
+    * unit, so a replayed file's row supersedes its earlier one — see
+    * [[FileResumableExtract.readMetrics]]) or `partition_id`.
     */
   def unitMetrics(results: DataFrame, unit: String): DataFrame =
     results.groupBy(col(unit)).agg(
@@ -203,35 +151,23 @@ object ExtractJob {
     }
     (l("ok"), l("err"))
   }
-
-  /** Full job: read → extract → write results (bucketed dirs for resume) +
-    * metrics. Returns (docsOk, docsErr) — observed on the write pass.
-    * The metrics aggregation reads back the written table but prunes to
-    * the scalar int columns (n_spans twin, no span payloads decoded).
-    */
-  def run(spark: SparkSession, inPath: String, outPath: String): (Long, Long) = {
-    val docs = readDocs(spark, inPath)
-    val (results, obs) = observeCounts(
-      extract(spark, docs, layout = Layout.ByBucket).toDF())
-    results.write.mode("overwrite")
-      .partitionBy("bucket")
-      .parquet(s"$outPath/results")
-    partitionMetrics(spark.read.parquet(s"$outPath/results"))
-      .write.mode("overwrite")
-      .parquet(s"$outPath/metrics")
-    okErr(obs)
-  }
 }
 
-/** spark-submit / runMain entry: ExtractMain <inDir> <outDir>. */
+/** spark-submit / runMain entry: ExtractMain <inDir> <outDir>. Runs the
+  * resumable extraction job; safe to re-invoke after a kill (committed
+  * input files are never re-read). Each run ends by compacting the commit
+  * manifest, so it stays one file.
+  */
 object ExtractMain {
   def main(args: Array[String]): Unit = {
     val (in, out) = JobSession.inOutArgs("ExtractMain", args)
     val spark = JobSession.build("graft-extract")
     val t0 = System.nanoTime()
-    val (ok, err) = ExtractJob.run(spark, in, out)
+    val n = FileResumableExtract.run(spark, in, out)
+    FileResumableExtract.compactManifest(spark, out)
     val sec = (System.nanoTime() - t0) / 1e9
-    println(f"extracted ok=$ok err=$err in $sec%.1fs (${ok / sec}%.0f docs/sec)")
+    println(f"processed $n docs this run in $sec%.1fs (${n / sec}%.0f docs/sec); " +
+      s"${FileResumableExtract.completedFileIds(spark, out).size} input files committed")
     spark.stop()
   }
 }

@@ -7,35 +7,37 @@ import graft.model.{CanonicalSignature, InputDoc}
 import graft.parse.{DocParser, PyCompat, SignatureTable}
 import org.apache.spark.TaskContext
 
-/** Checkpoint/resume at INPUT-FILE granularity — the zero-shuffle
-  * alternative to the bucket protocol ([[ResumableExtract]]).
+/** The extraction job: checkpoint/resume at INPUT-FILE granularity, with
+  * per-file lineage/metrics rows (north rule). [[ExtractMain]] runs it.
   *
-  * The bucket design pays a full-corpus hash shuffle before parsing so sink
-  * files align with resume units. At 100 TB that shuffle moves every raw
-  * byte once — the single most expensive avoidable operation in the job.
-  * Tracking completed INPUT FILES instead (exactly how Structured
-  * Streaming's file source checkpoints) removes it:
+  * Tracking completed INPUT FILES (exactly how Structured Streaming's file
+  * source checkpoints) needs no shuffle: a design that hash-shuffles docs
+  * into resume buckets before parsing, so sink files align with resume
+  * units, moves every raw byte once at 100 TB — the single most expensive
+  * avoidable operation in the job.
   *
   *  - the resume unit is one input parquet file; `file_id` =
-  *    md5(file basename), a fixed-width safe partition value;
+  *    md5(root-relative path), a fixed-width safe partition value;
   *  - parse runs on the scan's own splits (ScanSplits — raw bytes never
   *    move); output is written `partitionBy("file_id")`, so each task
   *    writes only into its own file's partition dirs;
   *  - a file is COMMITTED iff its id appears in a `_manifest` roll-up
   *    (one immutable `rollup_N.manifest` per run, written atomically after
-  *    the write job commits) or as a legacy loose `file_<id>.done` marker;
-  *    reads take the union, [[compactManifest]] merges history back to one
-  *    file; rollback-on-start deletes uncommitted `file_id=` dirs;
+  *    the write job commits) or as a loose `file_<id>.done` marker (the
+  *    only commit record of output dirs written by older builds — without
+  *    it, resume would roll back and re-extract their committed output,
+  *    bringing back docs that retention purged); reads take the union,
+  *    [[compactManifest]] merges history back to one file; rollback-on-start
+  *    deletes uncommitted `file_id=` dirs;
   *  - resume lists input files, anti-joins the manifest, and scans ONLY
   *    the pending files — committed input is never re-read, let alone
   *    re-parsed (file-level pruning beats even partition pruning).
   *
-  * Trade-off vs buckets: resume granularity follows input file sizing
-  * (fine if the table is written with sane file sizes, as Iceberg
-  * enforces). The manifest grows with RUN count (one roll-up per run, ids
-  * batched inside), and [[compactManifest]] periodically merges roll-ups +
-  * legacy loose markers into a single file — the same shape as Iceberg
-  * snapshot-log compaction, mirrored locally.
+  * Resume granularity follows input file sizing (fine if the table is
+  * written with sane file sizes, as Iceberg enforces). The manifest grows
+  * with RUN count (one roll-up per run, ids batched inside), and
+  * [[compactManifest]] merges roll-ups + loose markers into a single file —
+  * the same shape as Iceberg snapshot-log compaction, mirrored locally.
   */
 object FileResumableExtract {
 
@@ -290,24 +292,21 @@ object FileResumableExtract {
     * `file_id` stays a STRING via the explicit [[resultsSchema]].
     */
   def readResults(spark: SparkSession, out: String): DataFrame = {
-    graft.sources.RetentionSwap.recover(
-      spark, out, "file_id", discardIntentless = false)
+    graft.sources.RetentionSwap.recover(spark, out, discardIntentless = false)
     spark.read.schema(resultsSchema).parquet(s"$out/results")
   }
 
-  /** Retention delete on the file-granular layout (the declared 100 TB
-    * default protocol) — `DELETE FROM results WHERE predicate` via the
-    * shared [[graft.sources.RetentionSwap]] staged partition-swap, exactly
-    * the bucket store's protocol with `file_id=` partitions. The commit
-    * manifest is untouched: a purged input file stays committed, so a
-    * subsequent resume run remains a no-op and deleted documents are never
-    * re-extracted from still-present input. Single maintenance process per
-    * output dir (see RetentionSwap's concurrency contract); concurrent
-    * readers and resume runs only ever roll a swap forward.
+  /** Retention delete — `DELETE FROM results WHERE predicate` via the
+    * [[graft.sources.RetentionSwap]] staged swap of `file_id=` partitions.
+    * The commit manifest is untouched: a purged input file stays committed,
+    * so a subsequent resume run remains a no-op and deleted documents are
+    * never re-extracted from still-present input. Single maintenance
+    * process per output dir (see RetentionSwap's concurrency contract);
+    * concurrent readers and resume runs only ever roll a swap forward.
     */
   def deleteWhere(spark: SparkSession, out: String,
       predicate: org.apache.spark.sql.Column): Long =
-    graft.sources.RetentionSwap.deleteWhere(spark, out, "file_id", predicate,
+    graft.sources.RetentionSwap.deleteWhere(spark, out, predicate,
       () => readResults(spark, out))
 
   /** Test-only injected crash (see `run`'s `failAfter`): thrown AFTER the
@@ -346,8 +345,7 @@ object FileResumableExtract {
     // same reader-safe scope as readResults): affected file_ids stay
     // committed in the manifest, so without recovery the resume below
     // would neither restore nor reprocess their half-swapped output
-    graft.sources.RetentionSwap.recover(
-      spark, outPath, "file_id", discardIntentless = false)
+    graft.sources.RetentionSwap.recover(spark, outPath, discardIntentless = false)
     val done = completedFileIds(spark, outPath)
     timed("rollback")(rollbackUncommitted(spark, outPath, done))
     // relative paths hashed ONCE per restart; the id list feeds the scan
@@ -362,8 +360,7 @@ object FileResumableExtract {
 
     // Scan ONLY the pending files; no shuffle anywhere in the job.
     val bc = spark.sparkContext.broadcast(table)
-    val nb = ExtractJob.NumBuckets // driver-side capture (cluster-safe)
-    val rootPath = rootFsPath(spark, inPath) // driver-side capture too
+    val rootPath = rootFsPath(spark, inPath) // driver-side capture
     val results0 = spark.read.parquet(pending: _*)
       .select(col("doc_id").as("_1"), col("spans").as("_2"),
         input_file_name().as("_3"))
@@ -380,25 +377,25 @@ object FileResumableExtract {
         val fidMemo = new scala.collection.mutable.HashMap[String, String]()
         iter.map { case (docId, spans, uri) =>
           val fid = fidMemo.getOrElseUpdate(uri, fileIdFromUri(rootPath, uri))
-          (ExtractJob.rowOf(InputDoc(docId, spans), pool, pid, nb), fid)
+          (ExtractJob.rowOf(InputDoc(docId, spans), pool, pid), fid)
         }
       }
       .select(col("_1.*"), col("_2").as("file_id"))
     val (results, obs) = ExtractJob.observeCounts(results0)
 
-    graft.sources.DocStore.withDynamicOverwrite(spark) {
-      timed("write") {
-        // span texts, doc ids and content hashes are (nearly) unique: a
-        // dictionary hashes every value and saves little or nothing (ids
-        // and hashes fall back to PLAIN anyway). Low-cardinality columns
-        // keep theirs.
-        results.write.mode(SaveMode.Overwrite)
-          .partitionBy("file_id")
-          .option("parquet.enable.dictionary#spans.list.element.text", "false")
-          .option("parquet.enable.dictionary#doc_id", "false")
-          .option("parquet.enable.dictionary#content_hash", "false")
-          .parquet(s"$outPath/results")
-      }
+    timed("write") {
+      // dynamic overwrite, per write: only the partitions this run writes
+      // are replaced; committed file_id dirs stay. Span texts, doc ids and
+      // content hashes are (nearly) unique: a dictionary hashes every value
+      // and saves little or nothing (ids and hashes fall back to PLAIN
+      // anyway). Low-cardinality columns keep theirs.
+      results.write.mode(SaveMode.Overwrite)
+        .partitionBy("file_id")
+        .option("partitionOverwriteMode", "dynamic")
+        .option("parquet.enable.dictionary#spans.list.element.text", "false")
+        .option("parquet.enable.dictionary#doc_id", "false")
+        .option("parquet.enable.dictionary#content_hash", "false")
+        .parquet(s"$outPath/results")
     }
 
     // Metrics per commit unit (file_id), published as ONE `run_<k>` dir per
@@ -449,24 +446,5 @@ object FileResumableExtract {
     }
     val (ok, err) = ExtractJob.okErr(obs)
     ok + err
-  }
-}
-
-/** spark-submit / runMain entry: FileResumableMain <inDir> <outDir>. The
-  * zero-shuffle resumable job; safe to re-invoke after a kill. Set
-  * GRAFT_COMPACT_MANIFEST=1 to roll the commit manifest up into a single
-  * file after the run (snapshot-log compaction; any cadence is safe —
-  * reads always take the union of roll-ups and loose markers).
-  */
-object FileResumableMain {
-  def main(args: Array[String]): Unit = {
-    val (in, out) = JobSession.inOutArgs("FileResumableMain", args)
-    val spark = JobSession.build("graft-extract-file-resumable")
-    val n = FileResumableExtract.run(spark, in, out)
-    if (sys.env.get("GRAFT_COMPACT_MANIFEST").contains("1"))
-      FileResumableExtract.compactManifest(spark, out)
-    println(s"processed $n docs this run; " +
-      s"${FileResumableExtract.completedFileIds(spark, out).size} input files committed")
-    spark.stop()
   }
 }

@@ -2,9 +2,7 @@ package graft.jobs
 
 import org.apache.spark.sql.SparkSession
 
-/** The one session-tuning surface shared by every job main
-  * (ExtractMain / ResumableMain / FileResumableMain) — previously three
-  * hand-maintained copies whose configs could silently drift.
+/** The session-tuning surface of the extraction job main (ExtractMain).
   *
   * Env knobs: SPARK_GRAFT_MASTER, SPARK_GRAFT_CPUS (also sizes
   * `spark.sql.shuffle.partitions`), GRAFT_MAX_PARTITION_BYTES

@@ -3,12 +3,11 @@ package graft.sources
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 
-/** Shared staged partition-swap DELETE for path-based parquet tables
-  * (reference `storage.py:177-203` cleanup analog). Both result stores use
-  * it: the bucket-partitioned [[ParquetDocStore]] (`bucket=<int>` dirs) and
-  * the file-granular `FileResumableExtract` layout (`file_id=<hex>` dirs) —
-  * one implementation of the swap protocol and its crash recovery instead
-  * of two hand-maintained copies of rename-ordering subtleties.
+/** Staged partition-swap DELETE for the extraction results table
+  * (reference `storage.py:177-203` cleanup analog): the
+  * `FileResumableExtract` layout, `results/file_id=<hex>` dirs. On Iceberg
+  * this is `DELETE FROM results WHERE ...`, a copy-on-write snapshot commit
+  * with no crash window; on path-based parquet it is the swap below.
   *
   * Protocol (per `deleteWhere` call):
   *  1. recover any interrupted previous swap (see [[recover]]);
@@ -50,6 +49,9 @@ private[graft] object RetentionSwap {
 
   private def fs(spark: SparkSession, dir: String): FileSystem =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** The results table's partition column (the resume unit). */
+  private val PartCol = "file_id"
 
   private def stagingPath(root: String) = new Path(s"$root/_retention_staging")
 
@@ -110,44 +112,40 @@ private[graft] object RetentionSwap {
   }
 
   /** `DELETE FROM <root>/results WHERE predicate`, swapping only affected
-    * `partCol=` partitions. `readLive` supplies the live results DataFrame
-    * (the stores differ in partition-type-inference handling). Returns the
-    * number of rows removed.
+    * `file_id=` partitions. `readLive` supplies the live results DataFrame
+    * (read with the explicit results schema, so `file_id` stays a STRING).
+    * Returns the number of rows removed.
     */
   def deleteWhere(
       spark: SparkSession,
       root: String,
-      partCol: String,
       predicate: Column,
       readLive: () => DataFrame): Long = {
     val f0 = fs(spark, root)
     acquireLease(f0, root)
-    try deleteWhereHeld(spark, root, partCol, predicate, readLive)
+    try deleteWhereHeld(spark, root, predicate, readLive)
     finally f0.delete(leasePath(root), false) // kill −9 leaves it → staleness
   }
 
   private def deleteWhereHeld(
       spark: SparkSession,
       root: String,
-      partCol: String,
       predicate: Column,
       readLive: () => DataFrame): Long = {
     import org.apache.spark.sql.functions.{coalesce, col, lit}
-    recoverHeld(spark, root, partCol, discardIntentless = true)
+    recoverHeld(spark, root, discardIntentless = true)
     val hit = coalesce(predicate, lit(false)) // NULL predicate = keep (SQL DELETE)
     val results = readLive()
-    // keys kept as their native type (Int bucket / String file_id) so the
-    // isin filter compares without casts; path names use toString
     val affected = results.filter(hit)
-      .groupBy(col(partCol)).count().collect()
-      .map(r => r.get(0) -> r.getLong(1)).toMap
+      .groupBy(col(PartCol)).count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
     if (affected.isEmpty) return 0L
     val deleted = affected.values.sum
     val survivors = results
-      .filter(col(partCol).isin(affected.keys.toSeq: _*) && !hit)
+      .filter(col(PartCol).isin(affected.keys.toSeq: _*) && !hit)
     val f = fs(spark, root)
     val staging = stagingPath(root)
-    survivors.write.mode(SaveMode.Overwrite).partitionBy(partCol)
+    survivors.write.mode(SaveMode.Overwrite).partitionBy(PartCol)
       .parquet(staging.toString)
     // The swap intent, recorded BEFORE the first destructive step. Each
     // line carries the partition's recovery class, because the staging
@@ -161,10 +159,10 @@ private[graft] object RetentionSwap {
     //             the survivors (deleting it then would destroy their only
     //             copy).
     val staged = f.listStatus(staging).iterator.map(_.getPath.getName)
-      .collect { case n if n.startsWith(s"$partCol=") =>
-        n.stripPrefix(s"$partCol=")
+      .collect { case n if n.startsWith(s"$PartCol=") =>
+        n.stripPrefix(s"$PartCol=")
       }.toSet
-    val intentBody = affected.keys.map(_.toString).toSeq.sorted
+    val intentBody = affected.keys.toSeq.sorted
       .map(k => (if (staged.contains(k)) "s:" else "d:") + k)
       .mkString("\n")
     // lease freshness must cover the destructive window that opens with the
@@ -175,12 +173,12 @@ private[graft] object RetentionSwap {
     try intent.write(intentBody.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally intent.close()
     val resultsDir = new Path(s"$root/results")
-    affected.keys.map(_.toString).zipWithIndex.foreach { case (k, i) =>
+    affected.keys.zipWithIndex.foreach { case (k, i) =>
       if (i > 0 && i % LeaseTouchEvery == 0) touchLease(f, root)
-      val dst = new Path(resultsDir, s"$partCol=$k")
+      val dst = new Path(resultsDir, s"$PartCol=$k")
       if (!f.delete(dst, true) && f.exists(dst))
         throw new java.io.IOException(s"retention: could not remove $dst")
-      val src = new Path(staging, s"$partCol=$k")
+      val src = new Path(staging, s"$PartCol=$k")
       if (f.exists(src) && !f.rename(src, dst))
         throw new java.io.IOException(
           s"retention: rename $src -> $dst failed; survivors preserved in staging")
@@ -223,7 +221,6 @@ private[graft] object RetentionSwap {
   def recover(
       spark: SparkSession,
       root: String,
-      partCol: String,
       discardIntentless: Boolean): Unit = {
     val f = fs(spark, root)
     if (leaseIsFresh(f, root)) {
@@ -233,7 +230,7 @@ private[graft] object RetentionSwap {
             s"${leasePath(root)} — another deleteWhere appears active")
       return
     }
-    recoverHeld(spark, root, partCol, discardIntentless)
+    recoverHeld(spark, root, discardIntentless)
   }
 
   /** [[recover]] body, lease check already passed (or lease held by the
@@ -242,7 +239,6 @@ private[graft] object RetentionSwap {
   private def recoverHeld(
       spark: SparkSession,
       root: String,
-      partCol: String,
       discardIntentless: Boolean): Unit = {
     val f = fs(spark, root)
     val staging = stagingPath(root)
@@ -258,8 +254,8 @@ private[graft] object RetentionSwap {
       val resultsDir = new Path(s"$root/results")
       entries.foreach { e =>
         val (cls, k) = e.splitAt(2)
-        val dst = new Path(resultsDir, s"$partCol=$k")
-        val src = new Path(staging, s"$partCol=$k")
+        val dst = new Path(resultsDir, s"$PartCol=$k")
+        val src = new Path(staging, s"$PartCol=$k")
         cls match {
           case "d:" =>
             if (!f.delete(dst, true) && f.exists(dst))

@@ -11,12 +11,12 @@ import graft.model.InputDoc
   * pure).
   *
   * `readStream` on the docs directory (new parquet files = new documents) →
-  * typed mapPartitions parse → `foreachBatch` into the SAME bucketed results
-  * layout the batch job writes, so downstream consumers and the analytics
-  * queries cannot tell which path produced a row. Exactly-once: the
-  * streaming checkpoint tracks consumed input files; the sink append is
-  * idempotent per batch via epoch-tagged overwrite of the batch's bucket
-  * output under results_stream/batch=<id>.
+  * the batch [[ExtractJob.extract]] on each micro-batch's own splits (no
+  * shuffle) → `foreachBatch` write of the SAME result rows the batch job
+  * writes, so downstream consumers and the analytics queries cannot tell
+  * which path produced a row. Exactly-once: the streaming checkpoint
+  * tracks consumed input files; the sink is idempotent per batch via an
+  * epoch-tagged overwrite of results_stream/batch=<id>.
   */
 object StreamingExtract {
 
@@ -43,11 +43,9 @@ object StreamingExtract {
       .trigger(trigger)
       .option("checkpointLocation", s"$outDir/checkpoint")
       .foreachBatch { (batch: Dataset[InputDoc], batchId: Long) =>
-        val results = ExtractJob.extract(batch.sparkSession, batch,
-          layout = ExtractJob.Layout.ByBucket)
         // overwrite of THIS batch's dir = idempotent replay on recovery
-        results.write.mode("overwrite")
-          .partitionBy("bucket")
+        ExtractJob.extract(batch.sparkSession, batch)
+          .write.mode("overwrite")
           .parquet(s"$outDir/results_stream/batch=$batchId")
         ()
       }

@@ -75,6 +75,37 @@ class FileResumeSpec extends AnyFunSuite {
     assert(docsIn == 400L, s"metrics double-counted: $docsIn")
   }
 
+  test("a zero-row input file commits in the run that lists it; the next run is a no-op") {
+    spark.sparkContext.setLogLevel("WARN")
+    import spark.implicits._
+    val base = Files.createTempDirectory("graft_fresume_empty_").toString
+    val in = s"$base/docs"
+    spark.range(0, 100, 1, 2).map(i => CorpusGen.gen(i)).write.parquet(in)
+    // a third input file holding the schema and no rows
+    val stage = s"$base/stage"
+    spark.range(0, 0, 1, 1).map(i => CorpusGen.gen(i)).write.parquet(stage)
+    val empty = new java.io.File(stage).listFiles()
+      .find(_.getName.endsWith(".parquet")).get
+    Files.move(empty.toPath, java.nio.file.Paths.get(in, "empty.parquet"))
+    val ids = FileResumableExtract.inputFilesWithIds(spark, in)
+    assert(ids.size == 3)
+    val emptyId = FileResumableExtract.fileId("empty.parquet")
+    val out = s"$base/out"
+
+    // a run whose only pending file is empty parses nothing, yet commits
+    // it: a file with no docs is trivially complete, and leaving it pending
+    // would make every later run list and scan it again
+    assert(FileResumableExtract.run(spark, in, out, onlyFiles = Some(Set(emptyId))) == 0L)
+    assert(FileResumableExtract.completedFileIds(spark, out) == Set(emptyId))
+
+    assert(FileResumableExtract.run(spark, in, out) == 100L)
+    assert(FileResumableExtract.completedFileIds(spark, out) == ids.map(_._2).toSet)
+    assert(FileResumableExtract.run(spark, in, out) == 0L)
+    val docsIn = FileResumableExtract.readMetrics(spark, out)
+      .agg(org.apache.spark.sql.functions.sum("docs_in")).head().getLong(0)
+    assert(docsIn == 100L)
+  }
+
   test("results write: unique columns PLAIN-encoded, low-cardinality ones keep a dictionary") {
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._

@@ -7,11 +7,11 @@ import graft.corpus.CorpusGen
 import graft.parse.DocParser
 import java.nio.file.Files
 
-/** Retention delete on the file-granular (zero-shuffle, 100 TB-default)
-  * layout: deleteWhere removes exactly the matching rows via the shared
-  * RetentionSwap protocol, the commit manifest stays intact (no input
-  * reprocessing, no resurrection), and an interrupted swap self-heals on
-  * the next maintenance call AND on the resume/read path.
+/** Retention delete on the file-granular results table: deleteWhere
+  * removes exactly the matching rows via the RetentionSwap protocol, the
+  * commit manifest stays intact (no input reprocessing, no resurrection),
+  * and an interrupted swap self-heals on the next maintenance call AND on
+  * the resume/read path.
   */
 class FileRetentionSpec extends AnyFunSuite {
 
@@ -158,7 +158,7 @@ class FileRetentionSpec extends AnyFunSuite {
     val f = new Path(out).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
     // Simulate a kill in deleteWhere's data-loss window with all three
-    // partition shapes (the DocStoreSpec scenario on file_id partitions):
+    // partition shapes:
     //   fx FULLY deleted (d:, live dir still present — recovery completes
     //      the delete), fy mid-swap (s:, survivors only in staging),
     //   fz already swapped (s:, staging gone — recovery must not touch it)

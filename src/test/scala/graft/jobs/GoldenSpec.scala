@@ -196,7 +196,7 @@ class GoldenSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val docs = ExtractJob.readDocs(spark, corpusDir)
     val results = ExtractJob.extract(spark, docs)
-    val m = ExtractJob.partitionMetrics(results.toDF())
+    val m = ExtractJob.unitMetrics(results.toDF(), "partition_id")
     val agg = m.agg(sum("docs_in"), sum("docs_ok"), sum("docs_err"),
       sum("spans_out"), count(lit(1))).head()
     assert(agg.getLong(0) == 600L)
