@@ -135,8 +135,7 @@ object ScalingBench {
       val fSec = median(fsTimes)
       // phase breakdown (mean secs/run): where does the complete job spend
       // its wall time — the distributed write, or the driver-side
-      // metrics-read / manifest-commit bookkeeping that a single shared VM
-      // serializes but a real cluster scales?
+      // metrics-write / manifest-commit bookkeeping?
       val br = Seq("rollback", "write", "metrics", "commit")
         .map(k => f""""${k}_sec":${phases.getOrElse(k, 0.0) / fsIters}%.3f""")
         .mkString(",")
@@ -156,7 +155,7 @@ object ScalingBench {
       val ratio = c2.toDouble / c1
       // writeonly_eff: the distributed read→parse→write phase alone —
       // isolates the scaling of the DATA PATH from the constant-time
-      // driver bookkeeping (metrics read-back, marker commit)
+      // driver bookkeeping (metrics write, manifest commit)
       val wEff = if (w1 > 0 && w2 > 0) (w1 / w2) / ratio else 0.0
       println(f"""{"bench":"scaling_efficiency","n_cpus":$c1,"xn_cpus":$c2,"parse_eff":${(p2 / p1) / ratio}%.3f,"scan_eff":${(sc2 / sc1) / ratio}%.3f,"filesink_eff":${(f2 / f1) / ratio}%.3f,"filesink_writeonly_eff":$wEff%.3f}""")
     }

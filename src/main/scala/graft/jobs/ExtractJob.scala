@@ -22,9 +22,10 @@ import graft.parse.{DocParser, SignatureTable}
   *    [[Layout.RoundRobin]] (adversarially-sorted inputs) is the explicit
   *    salted-repartition escape hatch — a giant doc is one row either way,
   *    so a shuffle cannot split it finer;
-  *  - per-doc rows carry (partition_id, bytes_in, parse_us); lineage rows
-  *    are a partial-aggregated groupBy over them ([[unitMetrics]], no
-  *    second pass over the text).
+  *  - per-doc rows carry (partition_id, bytes_in, parse_us);
+  *    [[FileResumableExtract]] counts its per-file lineage rows while it
+  *    writes them, and [[unitMetrics]] states the same roll-up over any
+  *    results frame.
   */
 object ExtractJob {
 
@@ -120,7 +121,8 @@ object ExtractJob {
 
   /** Lineage/metrics rows keyed on a unit column: `file_id` (the resume
     * unit, so a replayed file's row supersedes its earlier one — see
-    * [[FileResumableExtract.readMetrics]]) or `partition_id`.
+    * [[FileResumableExtract.readMetrics]]) or `partition_id`. Per `file_id`
+    * it equals what [[FileResumableExtract.run]] counts while writing.
     */
   def unitMetrics(results: DataFrame, unit: String): DataFrame =
     results.groupBy(col(unit)).agg(
@@ -130,27 +132,6 @@ object ExtractJob {
       sum(col("n_spans")).as("spans_out"),
       sum(col("bytes_in")).as("bytes_in"),
       sum(col("parse_us")).as("parse_us"))
-
-  /** ok/err observation attached to a results plan: the totals are
-    * collected DURING the write pass (Dataset.observe), not by re-reading
-    * 100 TB of freshly-written output afterwards.
-    */
-  def observeCounts(results: DataFrame): (DataFrame, org.apache.spark.sql.Observation) = {
-    val obs = org.apache.spark.sql.Observation()
-    (results.observe(obs,
-      sum(when(col("error") === "", 1L).otherwise(0L)).as("ok"),
-      sum(when(col("error") =!= "", 1L).otherwise(0L)).as("err"),
-      count(lit(1)).as("docs")), obs)
-  }
-
-  private[jobs] def okErr(obs: org.apache.spark.sql.Observation): (Long, Long) = {
-    val m = obs.get
-    def l(k: String) = m.get(k) match {
-      case Some(v: Long) => v
-      case _ => 0L
-    }
-    (l("ok"), l("err"))
-  }
 }
 
 /** spark-submit / runMain entry: ExtractMain <inDir> <outDir>. Runs the

@@ -1,11 +1,22 @@
 package graft.jobs
 
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetFileWriter}
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
+import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{BINARY, INT64}
 import org.apache.spark.sql.{DataFrame, SparkSession, SaveMode}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructType}
+import org.apache.spark.util.AccumulatorV2
 import graft.model.{CanonicalSignature, InputDoc}
 import graft.parse.{DocParser, PyCompat, SignatureTable}
 import org.apache.spark.TaskContext
+import scala.collection.mutable
 
 /** The extraction job: checkpoint/resume at INPUT-FILE granularity, with
   * per-file lineage/metrics rows (north rule). [[ExtractMain]] runs it.
@@ -21,6 +32,10 @@ import org.apache.spark.TaskContext
   *  - parse runs on the scan's own splits (ScanSplits — raw bytes never
   *    move); output is written `partitionBy("file_id")`, so each task
   *    writes only into its own file's partition dirs;
+  *  - a run is ONE Spark job of one stage, the results write: the scan's
+  *    schema comes from a driver-side footer read, and the per-file
+  *    lineage rows are counted by an accumulator in the write's own tasks
+  *    ([[FileCounts]]) and written from the driver;
   *  - a file is COMMITTED iff its id appears in a `_manifest` roll-up
   *    (one immutable `rollup_N.manifest` per run, written atomically after
   *    the write job commits) or as a loose `file_<id>.done` marker (the
@@ -221,6 +236,86 @@ object FileResumableExtract {
       }
   }
 
+  /** The per-file lineage counters, in column order: the columns of
+    * [[ExtractJob.unitMetrics]] after its unit column.
+    */
+  private val Counters =
+    Seq("docs_in", "docs_ok", "docs_err", "spans_out", "bytes_in", "parse_us")
+
+  /** Per-file lineage counters, added to by the results write's own tasks,
+    * one [[Counters]] array per `file_id`. Spark merges a result task's
+    * accumulator updates once per partition, dropping failed attempts and
+    * speculative duplicates, so the sums are exact as long as the counting
+    * stays in the write's single result stage (no shuffle in front of it).
+    */
+  private[jobs] final class FileCounts extends AccumulatorV2[
+      (String, ExtractJob.ExtractedRow), mutable.HashMap[String, Array[Long]]] {
+    private val byFile = mutable.HashMap.empty[String, Array[Long]]
+    private def counts(fid: String) =
+      byFile.getOrElseUpdate(fid, new Array[Long](Counters.size))
+    def isZero: Boolean = byFile.isEmpty
+    def copy(): FileCounts = { val c = new FileCounts; c.merge(this); c }
+    def reset(): Unit = byFile.clear()
+    def add(v: (String, ExtractJob.ExtractedRow)): Unit = {
+      val (fid, r) = v
+      val c = counts(fid)
+      c(0) += 1
+      // the error rule of ExtractJob.unitMetrics: "" is ok, any other an error
+      if (r.error.isEmpty) c(1) += 1 else c(2) += 1
+      c(3) += r.n_spans
+      c(4) += r.bytes_in
+      c(5) += r.parse_us
+    }
+    def merge(other: AccumulatorV2[(String, ExtractJob.ExtractedRow),
+        mutable.HashMap[String, Array[Long]]]): Unit =
+      other.value.foreach { case (fid, o) =>
+        val c = counts(fid)
+        for (i <- c.indices) c(i) += o(i)
+      }
+    def value: mutable.HashMap[String, Array[Long]] = byFile
+  }
+
+  /** Publish one metrics run from the driver: `dir/part-00000.parquet`, one
+    * row per file sorted by `file_id`, then `_SUCCESS` LAST, so a crash
+    * mid-write leaves a run [[readMetrics]] skips. The columns and types are
+    * those a Spark write of `unitMetrics(...).withColumn("run", lit(run))`
+    * produced (`file_id` string, bigint counters, bigint `run`), so runs
+    * written by older builds read alongside.
+    */
+  private[jobs] def writeMetricsRun(spark: SparkSession, dir: Path,
+      byFile: collection.Map[String, Array[Long]], run: Long): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val schema = (Counters :+ "run").foldLeft(Types.buildMessage()
+      .required(BINARY).as(LogicalTypeAnnotation.stringType()).named("file_id"))(
+      (b, c) => b.required(INT64).named(c)).named("spark_schema")
+    val rows = new SimpleGroupFactory(schema)
+    val w = ExampleParquetWriter
+      .builder(HadoopOutputFile.fromPath(new Path(dir, "part-00000.parquet"), conf))
+      .withConf(conf).withType(schema)
+      .withWriteMode(ParquetFileWriter.Mode.OVERWRITE)
+      .withCompressionCodec(CompressionCodecName.SNAPPY)
+      .build()
+    try byFile.toSeq.sortBy(_._1).foreach { case (fid, c) =>
+      val g = rows.newGroup().append("file_id", fid)
+      Counters.indices.foreach(i => g.append(Counters(i), c(i)))
+      w.write(g.append("run", run))
+    } finally w.close()
+    dir.getFileSystem(conf).create(new Path(dir, "_SUCCESS"), true).close()
+  }
+
+  /** The schema of one input file, read from its footer on the driver: the
+    * schema Spark's non-merging parquet inference derives from one file,
+    * without the one-task job that inference launches. A file lacking a
+    * column the parse selects then fails at analysis, before any write.
+    */
+  private def footerSchema(spark: SparkSession, file: String): StructType = {
+    val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(file),
+      spark.sparkContext.hadoopConfiguration))
+    try new ParquetToSparkSchemaConverter(spark.sessionState.conf)
+      .convert(r.getFileMetaData.getSchema)
+    finally r.close()
+  }
+
   private def nextMetricsRun(f: FileSystem, out: String): Long = {
     val dir = new Path(s"$out/metrics")
     if (!f.exists(dir)) 0L
@@ -252,15 +347,8 @@ object FileResumableExtract {
     // "no committed runs" is a legitimate committed state, not corruption —
     // lineage reads get zero rows with the unitMetrics schema, not a crash.
     if (dirs.isEmpty) {
-      import org.apache.spark.sql.types._
-      val schema = StructType(Seq(
-        StructField("file_id", StringType),
-        StructField("docs_in", LongType),
-        StructField("docs_ok", LongType),
-        StructField("docs_err", LongType),
-        StructField("spans_out", LongType),
-        StructField("bytes_in", LongType),
-        StructField("parse_us", LongType)))
+      val schema = Counters.foldLeft(new StructType().add("file_id", StringType))(
+        _.add(_, LongType))
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     }
@@ -282,9 +370,9 @@ object FileResumableExtract {
     * session-global set/restore and leaking the wrong value to unrelated
     * queries.
     */
-  private[graft] val resultsSchema: org.apache.spark.sql.types.StructType =
+  private[graft] val resultsSchema: StructType =
     org.apache.spark.sql.Encoders.product[ExtractJob.ExtractedRow].schema
-      .add("file_id", org.apache.spark.sql.types.StringType)
+      .add("file_id", StringType)
 
   /** The extracted results table, retention-consistent: rolls a crashed
     * [[deleteWhere]] swap forward first (intent-present only — the
@@ -349,19 +437,21 @@ object FileResumableExtract {
     val done = completedFileIds(spark, outPath)
     timed("rollback")(rollbackUncommitted(spark, outPath, done))
     // relative paths hashed ONCE per restart; the id list feeds the scan
-    // filter, the metrics partition intersection, and the commit roll-up
+    // filter and the commit roll-up
     val pendingPairs = inputFilesWithIds(spark, inPath)
       .filter { case (_, id) =>
         !done.contains(id) && onlyFiles.forall(_.contains(id))
       }
     val pending = pendingPairs.map(_._1)
-    val pendingIds = pendingPairs.map(_._2)
     if (pending.isEmpty) return 0L
 
     // Scan ONLY the pending files; no shuffle anywhere in the job.
     val bc = spark.sparkContext.broadcast(table)
     val rootPath = rootFsPath(spark, inPath) // driver-side capture
-    val results0 = spark.read.parquet(pending: _*)
+    val counts = new FileCounts
+    spark.sparkContext.register(counts, "graft.file_counts")
+    val results = spark.read.schema(footerSchema(spark, pending.head))
+      .parquet(pending: _*)
       .select(col("doc_id").as("_1"), col("spans").as("_2"),
         input_file_name().as("_3"))
       .as[(String, Seq[graft.model.Span], String)]
@@ -377,11 +467,12 @@ object FileResumableExtract {
         val fidMemo = new scala.collection.mutable.HashMap[String, String]()
         iter.map { case (docId, spans, uri) =>
           val fid = fidMemo.getOrElseUpdate(uri, fileIdFromUri(rootPath, uri))
-          (ExtractJob.rowOf(InputDoc(docId, spans), pool, pid), fid)
+          val row = ExtractJob.rowOf(InputDoc(docId, spans), pool, pid)
+          counts.add((fid, row))
+          (row, fid)
         }
       }
       .select(col("_1.*"), col("_2").as("file_id"))
-    val (results, obs) = ExtractJob.observeCounts(results0)
 
     timed("write") {
       // dynamic overwrite, per write: only the partitions this run writes
@@ -399,41 +490,19 @@ object FileResumableExtract {
     }
 
     // Metrics per commit unit (file_id), published as ONE `run_<k>` dir per
-    // (re)start — the same roll-up shape as the manifest. The former
-    // per-file_id dynamic-partition-overwrite layout wrote #files tiny
-    // partition dirs per run: a measured scale-INVARIANT ~4.4s of committer
-    // churn at 300 files (and millions of tiny dirs at production file
-    // counts). Replay idempotency moves to the reader ([[readMetrics]]):
-    // a file replayed after a crash between this write and its commit gets
-    // a row in a LATER run, which supersedes — lineage sums never
-    // double-count. The results re-read targets ONLY this run's partition
-    // dirs and prunes to scalar metric columns (no span decode).
+    // (re)start — the same roll-up shape as the manifest — from the counts
+    // the write's tasks gathered: no second pass over the output. Replay
+    // idempotency lives in the reader ([[readMetrics]]): a file replayed
+    // after a crash between this write and its commit gets a row in a
+    // LATER run, which supersedes — lineage sums never double-count. A
+    // zero-row file gets no row (as it writes no partition), and a run of
+    // only zero-row files writes no metrics run.
     timed("metrics") {
-      val f = fs(spark, outPath)
-      // one listing intersected with the pending set — NOT one exists()
-      // RPC per pending file, which would be the same O(#files) serial
-      // driver tail the per-file marker commit was removed for (the
-      // intersection also drops empty input files, which write no
-      // partition)
-      val pendingIdSet = pendingIds.toSet
-      val resultsDir = new Path(s"$outPath/results")
-      val dirs =
-        if (!f.exists(resultsDir)) Seq.empty[String]
-        else f.listStatus(resultsDir).iterator
-          .filter(st => st.getPath.getName.startsWith("file_id=") &&
-            pendingIdSet.contains(st.getPath.getName.stripPrefix("file_id=")))
-          .map(_.getPath.toString).toSeq
-      if (dirs.nonEmpty) {
-        // explicit schema (see resultsSchema): file_id stays STRING without
-        // touching the session-global partition-type-inference conf
-        val written = spark.read.schema(resultsSchema)
-          .option("basePath", s"$outPath/results").parquet(dirs: _*)
+      if (counts.value.nonEmpty) {
+        val f = fs(spark, outPath)
         val runId = nextMetricsRun(f, outPath)
-        ExtractJob.unitMetrics(written, "file_id")
-          .withColumn("run", lit(runId))
-          .coalesce(1) // #files rows of scalars — one small file, no exchange
-          .write.mode(SaveMode.Overwrite)
-          .parquet(s"$outPath/metrics/run_$runId")
+        writeMetricsRun(spark, new Path(s"$outPath/metrics/run_$runId"),
+          counts.value, runId)
       }
     }
     timed("commit") {
@@ -442,9 +511,8 @@ object FileResumableExtract {
       // many files the run covered (the per-file marker loop was a
       // measured scale-INVARIANT ~2s tail at 64 files — pure constant
       // cost that capped whole-job scaling efficiency).
-      writeRollup(fs(spark, outPath), outPath, pendingIds)
+      writeRollup(fs(spark, outPath), outPath, pendingPairs.map(_._2))
     }
-    val (ok, err) = ExtractJob.okErr(obs)
-    ok + err
+    counts.value.valuesIterator.map(_(0)).sum
   }
 }

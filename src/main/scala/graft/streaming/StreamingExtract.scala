@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.functions.{col, regexp_extract}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.jobs.ExtractJob
 import graft.model.InputDoc
@@ -52,7 +53,17 @@ object StreamingExtract {
       .start()
   }
 
-  /** All rows extracted so far across micro-batches. */
+  /** All rows extracted so far across micro-batches, with their `batch` id.
+    * Reads both batch layouts: `batch=<id>/` and, from older builds,
+    * `batch=<id>/bucket=<b>/`. A stream restarted from its checkpoint puts
+    * the two side by side, which partition discovery rejects as
+    * conflicting partition columns; so files are listed recursively under
+    * the explicit row schema, and `batch` is taken from each file's path.
+    */
   def readResults(spark: SparkSession, outDir: String): DataFrame =
-    spark.read.parquet(s"$outDir/results_stream")
+    spark.read.schema(Encoders.product[ExtractJob.ExtractedRow].schema)
+      .option("recursiveFileLookup", "true")
+      .parquet(s"$outDir/results_stream")
+      .withColumn("batch", regexp_extract(col("_metadata.file_path"),
+        "/results_stream/batch=([0-9]+)/", 1).cast("long"))
 }

@@ -26,6 +26,66 @@ class FileResumeSpec extends AnyFunSuite {
       .collect().map { case (d, s) => d -> DocParser.spanHash(s) }.toMap
   }
 
+  private def docsIn(out: String): Long =
+    FileResumableExtract.readMetrics(spark, out)
+      .agg(org.apache.spark.sql.functions.sum("docs_in")).head().getLong(0)
+
+  /** Rows of a metrics frame as (file_id -> counters), for exact comparison. */
+  private def byFile(df: org.apache.spark.sql.DataFrame): Map[String, Seq[Any]] =
+    df.select("file_id", "docs_in", "docs_ok", "docs_err", "spans_out",
+      "bytes_in", "parse_us").collect().map(r => r.getString(0) -> r.toSeq.tail).toMap
+
+  /** Lose one committed file's commit: rewrite the manifest as legacy loose
+    * markers for every other id, as if the run crashed after writing that
+    * file's output and metrics but before committing it.
+    */
+  private def loseCommit(out: String, lostId: String): Set[String] = {
+    val kept = FileResumableExtract.completedFileIds(spark, out) - lostId
+    val mdir = new java.io.File(s"$out/_manifest")
+    mdir.listFiles().foreach(f => assert(f.delete()))
+    kept.foreach { id =>
+      Files.writeString(new java.io.File(mdir, s"file_$id.done").toPath, "")
+    }
+    kept
+  }
+
+  /** Moves a parquet file written under `stage` to `in/name`. */
+  private def plantFile(stage: String, in: String, name: String): Unit = {
+    val part = new java.io.File(stage).listFiles()
+      .find(_.getName.endsWith(".parquet")).get
+    Files.move(part.toPath, java.nio.file.Paths.get(in, name))
+  }
+
+  /** The stage count of every job `body` starts. A marker job run after it
+    * is seen last: jobs reach listeners in start order.
+    */
+  private def jobsOf(body: => Unit): Seq[Int] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")) ->
+          e.stageInfos.size)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("probe", "probe")
+      body
+      sc.setJobGroup("marker", "marker")
+      spark.range(1).count()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!jobs.asScala.exists(_._1 == "marker") && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(jobs.asScala.exists(_._1 == "marker"), "marker job never reached the listener")
+      jobs.asScala.collect { case ("probe", stages) => stages }.toSeq
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
   test("fileId is the md5 hex of the root-relative path (existing manifests resolve)") {
     assert(FileResumableExtract.fileId("part-00000.parquet") ==
       "537f1e9e100022c1e63abde9e4c97df6")
@@ -70,9 +130,8 @@ class FileResumeSpec extends AnyFunSuite {
     assert(FileResumableExtract.completedFileIds(spark, outB).size == 8)
 
     // lineage is exact across restarts (per-file metrics, no double count)
-    val docsIn = FileResumableExtract.readMetrics(spark, outB)
-      .agg(org.apache.spark.sql.functions.sum("docs_in")).head().getLong(0)
-    assert(docsIn == 400L, s"metrics double-counted: $docsIn")
+    val docs = docsIn(outB)
+    assert(docs == 400L, s"metrics double-counted: $docs")
   }
 
   test("a zero-row input file commits in the run that lists it; the next run is a no-op") {
@@ -84,9 +143,7 @@ class FileResumeSpec extends AnyFunSuite {
     // a third input file holding the schema and no rows
     val stage = s"$base/stage"
     spark.range(0, 0, 1, 1).map(i => CorpusGen.gen(i)).write.parquet(stage)
-    val empty = new java.io.File(stage).listFiles()
-      .find(_.getName.endsWith(".parquet")).get
-    Files.move(empty.toPath, java.nio.file.Paths.get(in, "empty.parquet"))
+    plantFile(stage, in, "empty.parquet")
     val ids = FileResumableExtract.inputFilesWithIds(spark, in)
     assert(ids.size == 3)
     val emptyId = FileResumableExtract.fileId("empty.parquet")
@@ -101,9 +158,7 @@ class FileResumeSpec extends AnyFunSuite {
     assert(FileResumableExtract.run(spark, in, out) == 100L)
     assert(FileResumableExtract.completedFileIds(spark, out) == ids.map(_._2).toSet)
     assert(FileResumableExtract.run(spark, in, out) == 0L)
-    val docsIn = FileResumableExtract.readMetrics(spark, out)
-      .agg(org.apache.spark.sql.functions.sum("docs_in")).head().getLong(0)
-    assert(docsIn == 100L)
+    assert(docsIn(out) == 100L)
   }
 
   test("results write: unique columns PLAIN-encoded, low-cardinality ones keep a dictionary") {
@@ -174,27 +229,20 @@ class FileResumeSpec extends AnyFunSuite {
     assert(FileResumableExtract.run(spark, in, out) == 200L)
 
     // simulate: one file's commit lost AFTER its metrics/output were
-    // written (crash between unitMetrics publish and manifest commit) —
-    // rewrite the manifest as legacy loose markers missing that id (also
-    // exercising the loose-marker read path)
+    // written (crash between the metrics publish and manifest commit) —
+    // also exercising the loose-marker read path
     val files = FileResumableExtract.inputFiles(spark, in)
     val lostId = FileResumableExtract.fileId(
       new org.apache.hadoop.fs.Path(files.head).getName)
-    val kept = FileResumableExtract.completedFileIds(spark, out) - lostId
-    val mdir = new java.io.File(s"$out/_manifest")
-    mdir.listFiles().foreach(f => assert(f.delete()))
-    kept.foreach { id =>
-      Files.writeString(new java.io.File(mdir, s"file_$id.done").toPath, "")
-    }
+    val kept = loseCommit(out, lostId)
     assert(FileResumableExtract.completedFileIds(spark, out) == kept)
 
     // restart: rolls back + replays that file; the replay's LATER run row
     // supersedes the orphaned one in readMetrics (no append double-count)
     val n = FileResumableExtract.run(spark, in, out)
     assert(n > 0)
-    val docsIn = FileResumableExtract.readMetrics(spark, out)
-      .agg(org.apache.spark.sql.functions.sum("docs_in")).head().getLong(0)
-    assert(docsIn == 200L, s"metrics double-counted after replay: $docsIn")
+    val docs = docsIn(out)
+    assert(docs == 200L, s"metrics double-counted after replay: $docs")
     assert(hashes(out).size == 200)
   }
 
@@ -338,9 +386,8 @@ class FileResumeSpec extends AnyFunSuite {
       // converged state is byte-identical to the uninterrupted run, and
       // lineage metrics count every doc exactly once
       assert(hashes(out) == golden, s"iteration $iter diverged")
-      val docsIn = FileResumableExtract.readMetrics(spark, out)
-        .agg(org.apache.spark.sql.functions.sum("docs_in")).head().getLong(0)
-      assert(docsIn == 80L, s"iteration $iter metrics double-counted: $docsIn")
+      val docs = docsIn(out)
+      assert(docs == 80L, s"iteration $iter metrics double-counted: $docs")
     }
     val totalKills = kills.values.sum
     assert(totalKills >= 20, s"sweep only injected $totalKills kills: $kills")
@@ -356,8 +403,7 @@ class FileResumeSpec extends AnyFunSuite {
     spark.range(0, 100, 1, 2).map(i => CorpusGen.gen(i)).write.parquet(in)
     val out = s"$base/out"
     assert(FileResumableExtract.run(spark, in, out) == 100L)
-    val before = FileResumableExtract.readMetrics(spark, out)
-      .agg(org.apache.spark.sql.functions.sum("docs_in")).head().getLong(0)
+    val before = docsIn(out)
     assert(before == 100L)
 
     // fabricate a torn metrics write: a run dir holding a stray copy of a
@@ -370,8 +416,123 @@ class FileResumeSpec extends AnyFunSuite {
     Files.copy(part.toPath, new java.io.File(torn, part.getName).toPath)
 
     // the torn run must not shadow (or double) the committed rows
-    val after = FileResumableExtract.readMetrics(spark, out)
-      .agg(org.apache.spark.sql.functions.sum("docs_in")).head().getLong(0)
+    val after = docsIn(out)
     assert(after == 100L, s"torn metrics run leaked into the view: $after")
+  }
+
+  test("one Spark job per leg: the results write, in one stage; nothing pending starts none") {
+    spark.sparkContext.setLogLevel("WARN")
+    import spark.implicits._
+    val base = Files.createTempDirectory("graft_fresume_jobs_").toString
+    val in = s"$base/docs"
+    spark.range(0, 200, 1, 4).map(i => CorpusGen.gen(i)).write.parquet(in)
+    val out = s"$base/out"
+    var n = 0L
+    assert(jobsOf { n = FileResumableExtract.run(spark, in, out) } == Seq(1))
+    assert(n == 200L)
+    assert(jobsOf { n = FileResumableExtract.run(spark, in, out) } == Seq.empty)
+    assert(n == 0L)
+    assert(docsIn(out) == 200L)
+  }
+
+  test("readMetrics equals unitMetrics over the written results; a zero-row file has no row") {
+    spark.sparkContext.setLogLevel("WARN")
+    import spark.implicits._
+    val base = Files.createTempDirectory("graft_fresume_parity_").toString
+    val in = s"$base/docs"
+    spark.range(0, 300, 1, 6).map(i => CorpusGen.gen(i)).write.parquet(in)
+    val stage = s"$base/stage"
+    spark.range(0, 0, 1, 1).map(i => CorpusGen.gen(i)).write.parquet(stage)
+    plantFile(stage, in, "empty.parquet")
+    val ids = FileResumableExtract.inputFilesWithIds(spark, in).map(_._2)
+    assert(ids.size == 7)
+    val emptyId = FileResumableExtract.fileId("empty.parquet")
+    val out = s"$base/out"
+    // two legs, so the view spans two metrics runs
+    val first = ids.filter(_ != emptyId).take(3).toSet + emptyId
+    val n1 = FileResumableExtract.run(spark, in, out, onlyFiles = Some(first))
+    val n2 = FileResumableExtract.run(spark, in, out)
+    assert(n1 + n2 == 300L)
+
+    val metrics = byFile(FileResumableExtract.readMetrics(spark, out))
+    val expected = byFile(ExtractJob.unitMetrics(
+      FileResumableExtract.readResults(spark, out), "file_id"))
+    assert(metrics.keySet == ids.toSet - emptyId)
+    assert(metrics == expected)
+  }
+
+  test("metrics runs written by older builds read alongside new ones; the later run wins") {
+    spark.sparkContext.setLogLevel("WARN")
+    import spark.implicits._
+    import org.apache.spark.sql.functions.lit
+    val base = Files.createTempDirectory("graft_fresume_mixed_").toString
+    val in = s"$base/docs"
+    spark.range(0, 200, 1, 4).map(i => CorpusGen.gen(i)).write.parquet(in)
+    val out = s"$base/out"
+    assert(FileResumableExtract.run(spark, in, out) == 200L)
+
+    // replace the metrics with one run written the way older builds wrote
+    // it: a Spark write of the unitMetrics roll-up of the results
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$out/metrics"))
+    ExtractJob.unitMetrics(FileResumableExtract.readResults(spark, out), "file_id")
+      .withColumn("run", lit(0L)).coalesce(1)
+      .write.parquet(s"$out/metrics/run_0")
+    val old = byFile(spark.read.parquet(s"$out/metrics/run_0"))
+
+    // replay one file: its new row lands in run_1 and supersedes run_0's
+    val lostId = FileResumableExtract.fileId(new org.apache.hadoop.fs.Path(
+      FileResumableExtract.inputFiles(spark, in).head).getName)
+    loseCommit(out, lostId)
+    assert(FileResumableExtract.run(spark, in, out) > 0L)
+    val replayed = byFile(spark.read.parquet(s"$out/metrics/run_1"))
+    assert(replayed.keySet == Set(lostId))
+
+    val metrics = byFile(FileResumableExtract.readMetrics(spark, out))
+    assert(metrics == old ++ replayed)
+    assert(metrics == byFile(ExtractJob.unitMetrics(
+      FileResumableExtract.readResults(spark, out), "file_id")))
+    assert(docsIn(out) == 200L)
+  }
+
+  test("a pending input file without a spans column fails the run before anything is written") {
+    spark.sparkContext.setLogLevel("WARN")
+    import spark.implicits._
+    val base = Files.createTempDirectory("graft_fresume_schema_").toString
+    val in = s"$base/docs"
+    spark.range(0, 100, 1, 2).map(i => CorpusGen.gen(i)).write.parquet(in)
+    val out = s"$base/out"
+    assert(FileResumableExtract.run(spark, in, out) == 100L)
+    val stage = s"$base/stage"
+    spark.range(0, 10, 1, 1).map(i => CorpusGen.gen(i).doc_id).toDF("doc_id")
+      .write.parquet(stage)
+    plantFile(stage, in, "no_spans.parquet")
+
+    def tree(): Seq[(String, Long)] = {
+      import scala.jdk.CollectionConverters._
+      Files.walk(java.nio.file.Paths.get(out)).iterator.asScala
+        .map(p => p.toString -> Files.getLastModifiedTime(p).toMillis).toSeq.sorted
+    }
+    val before = tree()
+    intercept[org.apache.spark.sql.AnalysisException] {
+      FileResumableExtract.run(spark, in, out)
+    }
+    assert(tree() == before, "the failed run changed the output dir")
+    assert(hashes(out).size == 100)
+    assert(docsIn(out) == 100L)
+  }
+
+  test("a metrics run whose data file fails to write gets no _SUCCESS") {
+    val base = Files.createTempDirectory("graft_fresume_mfail_").toString
+    val dir = new java.io.File(s"$base/metrics/run_0")
+    // a directory where the data file goes makes its write fail
+    val blocked = new java.io.File(dir, "part-00000.parquet")
+    blocked.mkdirs()
+    Files.writeString(new java.io.File(blocked, "x").toPath, "x")
+    intercept[java.io.IOException] {
+      FileResumableExtract.writeMetricsRun(spark,
+        new org.apache.hadoop.fs.Path(dir.toString), Map("a" -> Array.fill(6)(1L)), 0L)
+    }
+    assert(!new java.io.File(dir, "_SUCCESS").exists(), "_SUCCESS written before the data")
+    assert(FileResumableExtract.readMetrics(spark, base).count() == 0L)
   }
 }

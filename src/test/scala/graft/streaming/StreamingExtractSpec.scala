@@ -47,4 +47,25 @@ class StreamingExtractSpec extends AnyFunSuite {
     assert(streamed.size == 400)
     assert(streamed == batch, "streaming vs batch span hashes differ")
   }
+
+  test("readResults reads batch dirs of the old batch=/bucket= layout and the plain batch= layout together") {
+    spark.sparkContext.setLogLevel("WARN")
+    import spark.implicits._
+    val out = Files.createTempDirectory("graft_stream_layouts_").toString
+    val rows = ExtractJob.extract(spark,
+      spark.range(0, 60, 1, 2).map(i => CorpusGen.gen(i))).collect().sortBy(_.doc_id)
+    val (older, newer) = rows.splitAt(25)
+    spark.createDataset(older.toSeq)
+      .write.parquet(s"$out/results_stream/batch=0/bucket=1")
+    spark.createDataset(newer.toSeq)
+      .write.parquet(s"$out/results_stream/batch=1")
+
+    val read = StreamingExtract.readResults(spark, out)
+    val byDoc = read.select("doc_id", "batch").as[(String, Long)].collect().toMap
+    assert(byDoc.size == 60)
+    assert(byDoc == (older.map(_.doc_id -> 0L) ++ newer.map(_.doc_id -> 1L)).toMap)
+    val hashes = read.as[ExtractJob.ExtractedRow].collect()
+      .map(r => r.doc_id -> DocParser.spanHash(r.spans)).toMap
+    assert(hashes == rows.map(r => r.doc_id -> DocParser.spanHash(r.spans)).toMap)
+  }
 }
