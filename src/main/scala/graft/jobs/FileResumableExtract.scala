@@ -1,6 +1,6 @@
 package graft.jobs
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.{ParquetFileReader, ParquetFileWriter}
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
@@ -8,8 +8,11 @@ import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
 import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{BINARY, INT64}
-import org.apache.spark.sql.{DataFrame, SparkSession, SaveMode}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
+import org.apache.spark.sql.{DataFrame, GraftColumns, SparkSession, SaveMode}
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation,
+  InMemoryFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructType}
 import org.apache.spark.util.AccumulatorV2
@@ -32,10 +35,11 @@ import scala.collection.mutable
   *  - parse runs on the scan's own splits (ScanSplits — raw bytes never
   *    move); output is written `partitionBy("file_id")`, so each task
   *    writes only into its own file's partition dirs;
-  *  - a run is ONE Spark job of one stage, the results write: the scan's
-  *    schema comes from a driver-side footer read, and the per-file
-  *    lineage rows are counted by an accumulator in the write's own tasks
-  *    ([[FileCounts]]) and written from the driver;
+  *  - a run is ONE Spark job of one stage, the results write, however many
+  *    files are pending: the scan is built from the driver's own listing
+  *    (Spark lists nothing), its schema comes from a footer read, and the
+  *    per-file lineage rows are counted by an accumulator in the write's
+  *    own tasks ([[FileCounts]]) and written from the driver;
   *  - a file is COMMITTED iff its id appears in a `_manifest` roll-up
   *    (one immutable `rollup_N.manifest` per run, written atomically after
   *    the write job commits) or as a loose `file_<id>.done` marker (the
@@ -115,33 +119,45 @@ object FileResumableExtract {
     * cluster filesystems (HDFS/S3) the Hadoop path stays — their listings
     * batch thousands of entries per RPC and have no such constant.
     */
-  def inputFilesWithIds(spark: SparkSession, inPath: String): Seq[(String, String)] = {
+  def inputFilesWithIds(spark: SparkSession, inPath: String): Seq[(String, String)] =
+    inputStatuses(spark, inPath).map { case (st, id) => (st.getPath.toUri.getPath, id) }
+
+  /** The listing behind [[inputFilesWithIds]]: each file's status (qualified
+    * path, length, modification time — all a scan of it needs) with its id,
+    * so run() scans what it listed without Spark listing it again.
+    */
+  private def inputStatuses(spark: SparkSession, inPath: String): Seq[(FileStatus, String)] = {
     val f = fs(spark, inPath)
     val root = f.getFileStatus(new Path(inPath)).getPath
     val rootPath = root.toUri.getPath
-    val buf = scala.collection.mutable.ArrayBuffer[(String, String)]()
-    def add(absPath: String, name: String): Unit = {
+    val buf = scala.collection.mutable.ArrayBuffer[(String, FileStatus, String)]()
+    def add(absPath: String, name: String, st: => FileStatus): Unit = {
       val rel =
         if (absPath.startsWith(rootPath + "/")) absPath.substring(rootPath.length + 1)
         else name // root itself is a file
       if (name.endsWith(".parquet") &&
         rel.split('/').forall(c => !c.startsWith("_") && !c.startsWith(".")))
-        buf += ((absPath, fileId(rel)))
+        buf += ((absPath, st, fileId(rel)))
     }
     if (root.toUri.getScheme == "file") {
+      val blockSize = f.getDefaultBlockSize(root)
       val stream = java.nio.file.Files.walk(java.nio.file.Paths.get(rootPath))
       try stream.forEach { p =>
-        if (java.nio.file.Files.isRegularFile(p))
-          add(p.toString, p.getFileName.toString)
+        scala.util.Try(java.nio.file.Files.readAttributes(p,
+          classOf[java.nio.file.attribute.BasicFileAttributes]))
+          .filter(_.isRegularFile).foreach { a =>
+            add(p.toString, p.getFileName.toString, new FileStatus(a.size, false, 1,
+              blockSize, a.lastModifiedTime.toMillis, f.makeQualified(new Path(p.toString))))
+          }
       } finally stream.close()
     } else {
       val it = f.listFiles(root, true)
       while (it.hasNext) {
         val st = it.next()
-        add(st.getPath.toUri.getPath, st.getPath.getName)
+        add(st.getPath.toUri.getPath, st.getPath.getName, st)
       }
     }
-    buf.sortBy(_._1).toSeq
+    buf.sortBy(_._1).map(e => (e._2, e._3)).toSeq
   }
 
   /** Committed = present in any roll-up manifest OR as a loose
@@ -308,12 +324,34 @@ object FileResumableExtract {
     * without the one-task job that inference launches. A file lacking a
     * column the parse selects then fails at analysis, before any write.
     */
-  private def footerSchema(spark: SparkSession, file: String): StructType = {
-    val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(file),
+  private def footerSchema(spark: SparkSession, file: FileStatus): StructType = {
+    val r = ParquetFileReader.open(HadoopInputFile.fromStatus(file,
       spark.sparkContext.hadoopConfiguration))
     try new ParquetToSparkSchemaConverter(spark.sessionState.conf)
       .convert(r.getFileMetaData.getSchema)
     finally r.close()
+  }
+
+  /** A parquet scan of exactly `files`, as listed by [[inputStatuses]], with
+    * the first file's [[footerSchema]]. `spark.read.parquet(paths)` would
+    * list the paths again, and above
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32) paths it
+    * lists them in a Spark job. Here the file index's cache already holds
+    * every file, so nothing is listed and the scan starts no job of its own.
+    * The data schema is made nullable, as every file-source read makes it.
+    */
+  private def scanOf(spark: SparkSession, files: Seq[FileStatus]): DataFrame = {
+    val listed = files.iterator.map(st => st.getPath -> Array(st)).toMap
+    val cache = new FileStatusCache {
+      override def getLeafFiles(path: Path): Option[Array[FileStatus]] = listed.get(path)
+      def putLeafFiles(path: Path, leafFiles: Array[FileStatus]): Unit = ()
+      def invalidateAll(): Unit = ()
+    }
+    val schema = GraftColumns.asNullable(footerSchema(spark, files.head))
+    val index = new InMemoryFileIndex(spark, files.map(_.getPath), Map.empty,
+      Some(schema), cache)
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, new StructType(), schema,
+      None, new ParquetFileFormat, Map.empty)(spark))
   }
 
   private def nextMetricsRun(f: FileSystem, out: String): Long = {
@@ -343,7 +381,7 @@ object FileResumableExtract {
           f.exists(new Path(st.getPath, "_SUCCESS")))
         .map(_.getPath.toString).toSeq.sorted
     // A fully successful run over an input of only EMPTY files writes no
-    // metrics run at all (the dirs.nonEmpty guard in the metrics phase), so
+    // metrics run at all (run() writes one only if a row was counted), so
     // "no committed runs" is a legitimate committed state, not corruption —
     // lineage reads get zero rows with the unitMetrics schema, not a crash.
     if (dirs.isEmpty) {
@@ -438,20 +476,21 @@ object FileResumableExtract {
     timed("rollback")(rollbackUncommitted(spark, outPath, done))
     // relative paths hashed ONCE per restart; the id list feeds the scan
     // filter and the commit roll-up
-    val pendingPairs = inputFilesWithIds(spark, inPath)
+    val pendingPairs = inputStatuses(spark, inPath)
       .filter { case (_, id) =>
         !done.contains(id) && onlyFiles.forall(_.contains(id))
       }
-    val pending = pendingPairs.map(_._1)
-    if (pending.isEmpty) return 0L
+    if (pendingPairs.isEmpty) return 0L
 
     // Scan ONLY the pending files; no shuffle anywhere in the job.
     val bc = spark.sparkContext.broadcast(table)
     val rootPath = rootFsPath(spark, inPath) // driver-side capture
+    // registered WITHOUT a name: Spark copies a named accumulator's value
+    // into every finished task's info (UI, event log) — here a map over
+    // every file of the run, once per task
     val counts = new FileCounts
-    spark.sparkContext.register(counts, "graft.file_counts")
-    val results = spark.read.schema(footerSchema(spark, pending.head))
-      .parquet(pending: _*)
+    spark.sparkContext.register(counts)
+    val results = scanOf(spark, pendingPairs.map(_._1))
       .select(col("doc_id").as("_1"), col("spans").as("_2"),
         input_file_name().as("_3"))
       .as[(String, Seq[graft.model.Span], String)]

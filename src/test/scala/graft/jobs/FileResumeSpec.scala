@@ -2,6 +2,9 @@ package graft.jobs
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.SparkFirehoseListener
+import org.apache.spark.scheduler.{SparkListenerEvent, SparkListenerJobStart,
+  SparkListenerTaskEnd}
 import graft.corpus.CorpusGen
 import graft.parse.DocParser
 import java.nio.file.Files
@@ -56,18 +59,22 @@ class FileResumeSpec extends AnyFunSuite {
     Files.move(part.toPath, java.nio.file.Paths.get(in, name))
   }
 
-  /** The stage count of every job `body` starts. A marker job run after it
-    * is seen last: jobs reach listeners in start order.
+  private def jobGroup(e: SparkListenerEvent): String = e match {
+    case j: SparkListenerJobStart =>
+      String.valueOf(j.properties.getProperty("spark.jobGroup.id"))
+    case _ => ""
+  }
+
+  /** The listener events posted while `body` runs, its jobs in job group
+    * "probe". A marker job run after it is seen last: the bus delivers
+    * events in the order they are posted.
     */
-  private def jobsOf(body: => Unit): Seq[Int] = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+  private def eventsOf(body: => Unit): Seq[SparkListenerEvent] = {
     import scala.jdk.CollectionConverters._
     val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int)]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")) ->
-          e.stageInfos.size)
+    val events = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerEvent]()
+    val listener = new SparkFirehoseListener {
+      override def onEvent(e: SparkListenerEvent): Unit = events.add(e)
     }
     sc.addSparkListener(listener)
     try {
@@ -75,15 +82,20 @@ class FileResumeSpec extends AnyFunSuite {
       body
       sc.setJobGroup("marker", "marker")
       spark.range(1).count()
+      def markerSeen = events.asScala.exists(jobGroup(_) == "marker")
       val deadline = System.nanoTime() + 30000000000L
-      while (!jobs.asScala.exists(_._1 == "marker") && System.nanoTime() < deadline)
-        Thread.sleep(20)
-      assert(jobs.asScala.exists(_._1 == "marker"), "marker job never reached the listener")
-      jobs.asScala.collect { case ("probe", stages) => stages }.toSeq
+      while (!markerSeen && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(markerSeen, "marker job never reached the listener")
+      events.asScala.toSeq.takeWhile(jobGroup(_) != "marker")
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
     }
+  }
+
+  /** The stage count of every job `body` starts. */
+  private def jobsOf(body: => Unit): Seq[Int] = eventsOf(body).collect {
+    case j: SparkListenerJobStart if jobGroup(j) == "probe" => j.stageInfos.size
   }
 
   test("fileId is the md5 hex of the root-relative path (existing manifests resolve)") {
@@ -423,16 +435,41 @@ class FileResumeSpec extends AnyFunSuite {
   test("one Spark job per leg: the results write, in one stage; nothing pending starts none") {
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
+    // more input files than the paths a spark.read.parquet(paths) lists
+    // without a job of its own
+    assert(spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold").toInt < 40)
     val base = Files.createTempDirectory("graft_fresume_jobs_").toString
     val in = s"$base/docs"
-    spark.range(0, 200, 1, 4).map(i => CorpusGen.gen(i)).write.parquet(in)
+    spark.range(0, 400, 1, 40).map(i => CorpusGen.gen(i)).write.parquet(in)
+    assert(FileResumableExtract.inputFiles(spark, in).size == 40)
     val out = s"$base/out"
     var n = 0L
     assert(jobsOf { n = FileResumableExtract.run(spark, in, out) } == Seq(1))
-    assert(n == 200L)
+    assert(n == 400L)
     assert(jobsOf { n = FileResumableExtract.run(spark, in, out) } == Seq.empty)
     assert(n == 0L)
-    assert(docsIn(out) == 200L)
+    assert(docsIn(out) == 400L)
+  }
+
+  test("the per-file counts are left out of the accumulators each finished task reports") {
+    spark.sparkContext.setLogLevel("WARN")
+    import spark.implicits._
+    val base = Files.createTempDirectory("graft_fresume_acc_").toString
+    val in = s"$base/docs"
+    spark.range(0, 200, 1, 4).map(i => CorpusGen.gen(i)).write.parquet(in)
+    val ids = FileResumableExtract.inputFilesWithIds(spark, in).map(_._2)
+    val events = eventsOf { FileResumableExtract.run(spark, in, s"$base/out") }
+    val stages = events.collect {
+      case j: SparkListenerJobStart if jobGroup(j) == "probe" => j.stageIds
+    }.flatten.toSet
+    val reported = events.collect {
+      case t: SparkListenerTaskEnd if stages(t.stageId) => t.taskInfo.accumulables
+    }.flatten
+    assert(reported.nonEmpty, "the write's tasks reported no SQL metrics")
+    // what a task reports goes to the UI and the event log, once per task
+    val leaked = reported.filter(a =>
+      (a.update ++ a.value).exists(v => ids.exists(String.valueOf(v).contains)))
+    assert(leaked.isEmpty, s"file ids in reported accumulators: ${leaked.map(_.name)}")
   }
 
   test("readMetrics equals unitMetrics over the written results; a zero-row file has no row") {
