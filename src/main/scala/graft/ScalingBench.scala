@@ -1,8 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.jobs.ExtractJob
+import graft.jobs.{ExtractJob, JobSession}
 
 /** Two-cluster-size scaling evidence (BASELINE.json north_rule; SURVEY §4.3).
   *
@@ -40,36 +39,15 @@ object ScalingBench {
     def median(xs: Seq[Double]): Double = BenchUtil.median(xs)
 
     val perLevel = levels.map { cpus =>
-      val spark = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .appName(s"graft-scaling-$cpus")
-        .config("spark.sql.shuffle.partitions", cpus.toString)
-        .config("spark.sql.adaptive.enabled", "true")
-        // Scan-split granularity — the SAME tuning JobSession gives every
-        // production main; measuring without it was the root cause of the
-        // round-3/4 sf2.0 parse-efficiency mystery. With Spark's defaults
-        // (128m splits, 4m open cost, minPartitionNum = cores) sf2.0's
-        // 600 × 0.53m files pack into ~21 scan partitions at EVERY level:
-        // 5+ even waves at 4 cores but 1.3 waves at 16 — five cores run two
-        // tasks while eleven idle, capping parse efficiency at ~0.65
-        // (measured 0.62-0.66 across five pairs, two rounds, while the
-        // same-hour pure-thread ceiling read 0.86-0.94). sf1.0's ~16
-        // partitions happened to make ONE even wave at 16 cores, which is
-        // why it scaled at ceiling and the effect looked corpus-size-
-        // dependent. Fix: floor the partition count at 4 waves per core
-        // (no effect at cluster scale, where the byte cap dominates).
-        .config("spark.sql.files.maxPartitionBytes",
-          sys.env.getOrElse("GRAFT_MAX_PARTITION_BYTES", "16m"))
-        .config("spark.sql.files.minPartitionNum", (cpus * 4).toString)
-        .config("spark.ui.enabled", "false")
-        // Shuffle-local storage on tmpfs: on a real cluster every executor
-        // brings its own shuffle disks (they scale with cluster size); this
-        // sandbox has ONE shared /tmp disk, which would charge the 4N level
-        // a bottleneck no real 4N cluster has. RAM is the resource that
-        // actually scales per-core here (125 GB for 32 cores).
-        .config("spark.local.dir", "/dev/shm/graft-shuffle")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
+      // The production session at this level's core count: its 4-waves-
+      // per-core split floor (see JobSession) is what lets a small-file
+      // corpus scale past one wave at 16 cores. Shuffle-local storage on
+      // tmpfs: on a real cluster every executor brings its own shuffle
+      // disks (they scale with cluster size); a single local disk would
+      // charge the 4N level a bottleneck no real 4N cluster has. RAM is
+      // the resource that scales per core on one machine.
+      val spark = JobSession.build(s"graft-scaling-$cpus", cpus,
+        localDir = Some("/dev/shm/graft-shuffle"))
 
       val docs = ExtractJob.readDocs(spark, corpus).cache()
       val nDocs = docs.count() // materialize: isolate parse from disk noise

@@ -399,12 +399,7 @@ object FuzzGen {
 object FuzzGenMain {
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("/root/repo/data/docs/fuzz")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-fuzz-gen")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.jobs.JobSession.build("graft-fuzz-gen")
     import spark.implicits._
     spark.range(0, FuzzGen.NumDocs, 1, 8)
       .map(i => FuzzGen.gen(i))

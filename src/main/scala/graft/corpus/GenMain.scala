@@ -1,6 +1,6 @@
 package graft.corpus
 
-import org.apache.spark.sql.SparkSession
+import graft.jobs.JobSession
 
 /** Write the deterministic docs corpus as parquet (Iceberg-shaped stand-in,
   * SURVEY §7.3 R7): `docs(doc_id string, spans array<struct<kind,text,
@@ -12,18 +12,12 @@ object GenMain {
   def main(args: Array[String]): Unit = {
     val outBase = args(0)
     val sfs = args.drop(1).map(_.toDouble)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-corpus-gen")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = JobSession.envCpus
+    val spark = JobSession.build("graft-corpus-gen", cpus)
     import spark.implicits._
     sfs.foreach { sf =>
       val n = CorpusGen.numDocs(sf)
-      val parts = math.max(cpus.toInt, n / 2000)
+      val parts = math.max(cpus, n / 2000)
       val out = f"$outBase/sf$sf%s"
       spark.range(0, n, 1, parts)
         .map(i => CorpusGen.gen(i))

@@ -16,12 +16,10 @@ import graft.parse.{DocParser, SignatureTable}
   *    replaying a resume unit yields byte-identical rows;
   *  - the signature/rule table is `broadcast` to executors (it is bounded by
   *    layout diversity, never by corpus size);
-  *  - skew from giant multi-page PDFs: the default [[Layout.ScanSplits]]
-  *    parses on scan splits (`spark.sql.files.maxPartitionBytes` bounds
-  *    task size) so the raw corpus is never shuffled; round-robin
-  *    [[Layout.RoundRobin]] (adversarially-sorted inputs) is the explicit
-  *    salted-repartition escape hatch — a giant doc is one row either way,
-  *    so a shuffle cannot split it finer;
+  *  - the parse runs on the scan's own splits
+  *    (`spark.sql.files.maxPartitionBytes` bounds task size), so the raw
+  *    corpus is never shuffled; a giant multi-page PDF is one row, which a
+  *    shuffle could not split finer either;
   *  - per-doc rows carry (partition_id, bytes_in, parse_us);
   *    [[FileResumableExtract]] counts its per-file lineage rows while it
   *    writes them, and [[unitMetrics]] states the same roll-up over any
@@ -75,43 +73,14 @@ object ExtractJob {
     spark.read.parquet(inPath).as[InputDoc]
   }
 
-  /** How the docs are laid out across parse tasks. The choice is a
-    * shuffle-cost / balance tradeoff that matters at 100 TB: a pre-parse
-    * shuffle moves the RAW bytes of the whole corpus.
-    */
-  sealed trait Layout
-  object Layout {
-    /** No shuffle: parse on the scan's own input splits. The default —
-      * raw bytes never move, and split granularity
-      * (`spark.sql.files.maxPartitionBytes`) already bounds task size.
-      * A single giant doc is one row and can't be split any finer by a
-      * shuffle either, so this loses nothing on the heavy tail.
-      */
-    case object ScanSplits extends Layout
-
-    /** Round-robin shuffle into `cores × perCore` splits: finest doc-count
-      * balance. Worth its full-corpus shuffle only when the INPUT layout is
-      * adversarial (e.g. docs sorted by size so one split holds all the
-      * giants) — the "salted repartitioning" degenerate-input defense.
-      */
-    final case class RoundRobin(perCore: Int = 4) extends Layout
-  }
-
-  /** Parse a docs Dataset into the extracted table. */
+  /** Parse a docs Dataset into the extracted table, on its own splits. */
   def extract(
       spark: SparkSession,
       docs: Dataset[InputDoc],
-      table: Seq[CanonicalSignature] = SignatureTable.Default,
-      layout: Layout = Layout.ScanSplits): Dataset[ExtractedRow] = {
+      table: Seq[CanonicalSignature] = SignatureTable.Default): Dataset[ExtractedRow] = {
     import spark.implicits._
-    val cores = spark.sparkContext.defaultParallelism
     val bc = spark.sparkContext.broadcast(table)
-    val parts = layout match {
-      case Layout.ScanSplits => docs
-      case Layout.RoundRobin(perCore) =>
-        docs.repartition(math.max(1, cores * perCore))
-    }
-    parts
+    docs
       .mapPartitions { iter =>
         val pool = DocParser.pooled(bc.value) // pooled per-partition state
         val pid = TaskContext.getPartitionId()

@@ -32,7 +32,7 @@ import scala.collection.mutable
   *
   *  - the resume unit is one input parquet file; `file_id` =
   *    md5(root-relative path), a fixed-width safe partition value;
-  *  - parse runs on the scan's own splits (ScanSplits — raw bytes never
+  *  - parse runs on the scan's own splits (raw bytes never
   *    move); output is written `partitionBy("file_id")`, so each task
   *    writes only into its own file's partition dirs;
   *  - a run is ONE Spark job of one stage, the results write, however many
@@ -235,11 +235,9 @@ object FileResumableExtract {
     sts.foreach(st => f.delete(st.getPath, false))
   }
 
-  def rollbackUncommitted(spark: SparkSession, out: String): Unit =
-    rollbackUncommitted(spark, out, completedFileIds(spark, out))
-
-  /** Variant taking an already-read manifest — run() passes its own copy so
-    * a restart reads the manifest once, not once per phase.
+  /** Deletes the `file_id=` result dirs not in `done`, the already-read
+    * manifest: run() passes its own copy so a restart reads the manifest
+    * once, not once per phase.
     */
   def rollbackUncommitted(spark: SparkSession, out: String, done: Set[String]): Unit = {
     val f = fs(spark, out)

@@ -436,10 +436,10 @@ object DedupOps {
     // Bucket sizes are bounded by construction (bits ≈ log2(n / target
     // bucket size)), so the per-list expansion is bucket²/2 with a
     // design-bounded bucket. The cross-table pair dedupe happens HERE,
-    // before the rescore joins: an A/B at the test parameters
-    // (graft.tools.D7AB — dedupe-late via rescore-all + TakeOrdered(topK·
-    // tables) + slice-dedupe measured 15.8s vs 9.4s for dedupe-first)
-    // shows shuffling the narrow (ia, ib) pairs through a distinct is
+    // before the rescore joins: a round-6 A/B at the test parameters
+    // (dedupe-late via rescore-all + TakeOrdered(topK·tables) +
+    // slice-dedupe measured 15.8s vs 9.4s for dedupe-first) showed that
+    // shuffling the narrow (ia, ib) pairs through a distinct is
     // cheaper than dragging the ≤`tables`× duplicates through the
     // embedding joins, whose output rows carry two 64-element vectors.
     val cand = lshCandidatePairs(bk).distinct()
@@ -465,8 +465,8 @@ object DedupOps {
 
   /** Duplicated (pre-distinct) candidate pairs from a (vec_id, tbl, bkt)
     * LSH index: posting-list expansion per (tbl, bkt) bucket. Shared with
-    * the profiling harnesses (graft.tools.D7AB / D7Profile) so they
-    * measure the exact expansion the shipped operator runs.
+    * `graft.tools.AnnRecallSweep`, so its recall is measured on the exact
+    * expansion the shipped operator runs.
     */
   private[graft] def lshCandidatePairs(bk: DataFrame): DataFrame =
     bk.groupBy(col("tbl"), col("bkt"))
@@ -549,16 +549,24 @@ object DedupOps {
     */
   val CcDriverEdgeBound = 200000
 
-  def lshClusters(spark: SparkSession, dir: String): DataFrame = {
+  def lshClusters(spark: SparkSession, dir: String): DataFrame =
+    lshClustersWith(spark, dir, CcDriverEdgeBound)
+
+  /** [[lshClusters]] with the driver-path bound as a parameter (DedupSpec
+    * forces the distributed path with 0). The deduplicated edge set is
+    * materialized once, so the size probe and either component path read
+    * it instead of re-running the d4 band aggregate.
+    */
+  private[ops] def lshClustersWith(
+      spark: SparkSession, dir: String, edgeBound: Int): DataFrame = {
     val edges = lshPairsRaw(spark, dir)
       .select(col("doc_a").as("s"), col("doc_b").as("d"))
-    // one execution on the common path: take bound+1 rows — overflow means
-    // "go distributed" (which re-derives the full set)
-    val sample = edges.limit(CcDriverEdgeBound + 1).collect()
+      .localCheckpoint()
+    // take bound+1 rows — overflow means "go distributed"
+    val sample = edges.limit(edgeBound + 1).collect()
     val roots =
-      if (sample.length <= CcDriverEdgeBound)
-        driverComponents(edges.sparkSession,
-          sample.map(r => (r.getLong(0), r.getLong(1))))
+      if (sample.length <= edgeBound)
+        driverComponents(spark, sample.map(r => (r.getLong(0), r.getLong(1))))
       else connectedComponents(edges)._1
     val lbl = docs(spark, dir).select(col("doc_id"))
       .join(roots.withColumnRenamed("s", "doc_id"), Seq("doc_id"), "left")

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Recall-vs-band sweep for the d7/v4 LSH family (round-5 verdict item 6):
@@ -36,16 +35,8 @@ object AnnRecallSweep {
     val n = args.headOption.map(_.toInt).getOrElse(100000)
     val bands = args.lift(1).getOrElse("0.85,0.90,0.95")
       .split(",").map(_.trim.toDouble).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-ann-recall-sweep")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.local.dir", "/dev/shm/graft-ann")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.jobs.JobSession.build("graft-ann-recall-sweep",
+      localDir = Some("/dev/shm/graft-ann"))
     import spark.implicits._
 
     val target = sys.env.getOrElse("GRAFT_ANN_BUCKET", "64").toInt

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import graft.ops.DedupOps
 
 /** Scale evidence for the embedding near-dup pair (d6 exact all-pairs vs
@@ -72,19 +72,11 @@ object AnnScale {
   def main(args: Array[String]): Unit = {
     val ns = args.headOption.getOrElse("2000,10000,50000")
       .split(",").map(_.trim.toInt).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-ann-scale")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // shuffle/spill on tmpfs, like ScalingBench: this sandbox has ONE
-      // virtual disk, a bottleneck (and at n=10⁶, a hard failure) a real
-      // cluster's per-executor shuffle volumes don't share
-      .config("spark.local.dir", "/dev/shm/graft-ann")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // shuffle/spill on tmpfs, like ScalingBench: a single local disk is a
+    // bottleneck (and at n=10⁶, a hard failure) a real cluster's
+    // per-executor shuffle volumes don't share
+    val spark = graft.jobs.JobSession.build("graft-ann-scale",
+      localDir = Some("/dev/shm/graft-ann"))
     import spark.implicits._
 
     val ExactCap = sys.env.getOrElse("GRAFT_ANN_EXACT_CAP", "60000").toInt

@@ -25,12 +25,7 @@ object ListingScale {
   def main(args: Array[String]): Unit = {
     val counts = args.headOption.getOrElse("10000,100000,1000000")
       .split(",").map(_.trim.toInt).toSeq
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-listing-scale")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.jobs.JobSession.build("graft-listing-scale")
     val base = java.nio.file.Paths.get("/dev/shm/graft-listing")
 
     def timed[A](body: => A): (A, Double) = {

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import graft.ops.DedupOps
 
 /** Scale evidence for d11 (SemDeDup over IVF cells): the driver's
@@ -51,16 +51,8 @@ object SemDedupScale {
   def main(args: Array[String]): Unit = {
     val ns = args.headOption.getOrElse("20000,100000")
       .split(",").map(_.trim.toInt).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-semdedup-scale")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.local.dir", "/dev/shm/graft-semdedup")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.jobs.JobSession.build("graft-semdedup-scale",
+      localDir = Some("/dev/shm/graft-semdedup"))
     import spark.implicits._
 
     ns.foreach { n =>

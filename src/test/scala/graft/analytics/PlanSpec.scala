@@ -8,18 +8,13 @@ import graft.ops.DedupOps
 /** Physical-plan quality gates (the 100 TB questions, asked of Catalyst
   * directly): filters reach the parquet scan, projections prune columns,
   * dimension joins broadcast, aggregates are partial+final hash aggregates,
-  * and the extraction layouts shuffle exactly when they claim to.
+  * and the extraction parses without a shuffle.
   */
 class PlanSpec extends AnyFunSuite {
 
   private val sfDir = "/root/testdata/sf0.001"
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("plan-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession("plan-spec", 4)
 
   private def physical(df: DataFrame): String =
     df.queryExecution.executedPlan.toString
@@ -64,22 +59,35 @@ class PlanSpec extends AnyFunSuite {
     assert(physical(RelationalOps.q11SemiJoin(spark, sfDir)).contains("LeftSemi"))
   }
 
-  test("extract ScanSplits layout: zero shuffles before the parse map") {
+  test("extract parses on the scan splits: zero shuffles before the parse map") {
     import spark.implicits._
     val docs = spark.range(0, 10, 1, 2).map(i => graft.corpus.CorpusGen.gen(i))
     val p = physical(ExtractJob.extract(spark, docs).toDF())
-    assert(!p.contains("Exchange"), s"ScanSplits must not shuffle:\n$p")
+    assert(!p.contains("Exchange"), s"extract must not shuffle:\n$p")
   }
 
-  test("extract layouts ScanSplits/RoundRobin produce identical results") {
-    import spark.implicits._
-    val docs = spark.range(0, 200, 1, 4).map(i => graft.corpus.CorpusGen.gen(i))
-    def hashes(layout: ExtractJob.Layout) =
-      ExtractJob.extract(spark, docs, layout = layout).collect()
-        .map(r => r.doc_id -> graft.parse.DocParser.spanHash(r.spans)).toMap
-    val scan = hashes(ExtractJob.Layout.ScanSplits)
-    assert(scan.size == 200)
-    assert(hashes(ExtractJob.Layout.RoundRobin()) == scan)
+  test("QueryTime times each rep and writes <query>_<suffix>.txt plans") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_querytime_")
+    val times = graft.tools.QueryTime.profile(spark, Seq("q4_filter_project"),
+      sfDir, reps = 1, plans = Some((dir.toString, "t")))
+    assert(times.map(t => (t._1, t._2)) == Seq(("q4_filter_project", 1)))
+    val plan = dir.resolve("q4_filter_project_t.txt")
+    assert(java.nio.file.Files.exists(plan), s"no plan file $plan")
+    assert(java.nio.file.Files.readString(plan).contains("== Physical Plan =="))
+  }
+
+  test("session builders: only JobSession, Bench and Verify build a SparkSession") {
+    import scala.jdk.CollectionConverters._
+    // resolved from the working directory (the build's base directory)
+    val main = java.nio.file.Paths.get("src/main/scala").toAbsolutePath
+    assert(java.nio.file.Files.isDirectory(main), s"no sources at $main")
+    val builders = java.nio.file.Files.walk(main).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filter(p => java.nio.file.Files.readString(p).contains("SparkSession.builder"))
+      .map(main.relativize(_).toString).toSet
+    val allowed = Set("graft/jobs/JobSession.scala", "graft/Bench.scala", "graft/Verify.scala")
+    assert((builders -- allowed).isEmpty,
+      s"build the session through graft.jobs.JobSession: ${builders -- allowed}")
   }
 
   test("d1 exact dedup: single-pass partial+final hash aggregate, no pre-shuffle") {

@@ -14,12 +14,7 @@ class FlagsSpec extends AnyFunSuite {
 
   private val sfDir = "/root/testdata/sf0.001"
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[8]")
-    .appName("flags-spec")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession("flags-spec", 8)
 
   private def adversarialDocs: Seq[String] = {
     val rnd = new scala.util.Random(7)

@@ -13,12 +13,7 @@ import org.apache.spark.sql.functions._
   */
 class IntBitsSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("intbits-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession("intbits-spec", 4)
 
   private val boundaries: Seq[Long] =
     Seq(0L, 1L, 2L, 3L, 63L, 64L, 65L, -1L, -2L, Long.MaxValue, Long.MinValue,

@@ -15,12 +15,7 @@ class ShingleSpec extends AnyFunSuite {
 
   private val sfDir = "/root/testdata/sf0.001"
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[8]")
-    .appName("shingle-spec")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession("shingle-spec", 8)
 
   /** The original declarative formulation, verbatim. */
   private def hofShingleHashes(txt: Column): Column = {

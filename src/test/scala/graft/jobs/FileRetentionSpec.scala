@@ -15,12 +15,7 @@ import java.nio.file.Files
   */
 class FileRetentionSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[8]")
-    .appName("file-retention-spec")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession("file-retention-spec", 8)
 
   private def hashes(out: String): Map[String, String] = {
     import spark.implicits._

@@ -19,12 +19,7 @@ class FuzzParitySpec extends AnyFunSuite {
   private val hashFile = Paths.get("src/test/resources/goldens/sffuzz.hashes.jsonl")
     .toAbsolutePath.toString
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[8]")
-    .appName("fuzz-parity-spec")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession("fuzz-parity-spec", 8)
 
   test("fuzz corpus: span hashes equal the reference, invalid docs error-channel") {
     assume(Files.exists(Paths.get(hashFile)), "fuzz goldens not generated")

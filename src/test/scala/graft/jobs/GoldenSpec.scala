@@ -42,12 +42,7 @@ class GoldenSpec extends AnyFunSuite {
 
   private lazy val corpusDir = corpus("0.001")
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[8]")
-    .appName("golden-spec")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession("golden-spec", 8)
 
   private def available: Boolean =
     Files.exists(Paths.get(goldenJson)) && Files.exists(Paths.get(corpusDir))

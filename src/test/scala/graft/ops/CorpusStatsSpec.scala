@@ -16,12 +16,7 @@ class CorpusStatsSpec extends AnyFunSuite {
 
   private val sfDir = "/root/testdata/sf0.001"
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[8]")
-    .appName("corpus-stats-spec")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession("corpus-stats-spec", 8)
 
   private def md5Hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")

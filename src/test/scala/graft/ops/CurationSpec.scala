@@ -23,12 +23,7 @@ import org.apache.spark.sql.SparkSession
   */
 class CurationSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("curation-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession("curation-spec", 4)
 
   private def words(n: Int, p: String): Vector[String] =
     (0 until n).map(i => f"$p$i%03d").toVector

@@ -13,12 +13,7 @@ class DedupSpec extends AnyFunSuite {
 
   private val sfDir = "/root/testdata/sf0.001"
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[8]")
-    .appName("dedup-spec")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession("dedup-spec", 8)
 
   test("d7 lshNearDup == d6 embedNearDup top-50 (dispatched AND explicit LSH point)") {
     spark.sparkContext.setLogLevel("WARN")
@@ -318,6 +313,46 @@ class DedupSpec extends AnyFunSuite {
     }
     // the planted chains make at least one non-trivial cluster
     assert(byCluster.exists(_._2.length >= 2), "no multi-doc cluster found")
+  }
+
+  test("d8 forced distributed path: driver-path labels, band aggregate runs in one job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+      SparkListenerStageCompleted}
+    import scala.jdk.CollectionConverters._
+    def labels(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    val driverPath = labels(DedupOps.lshClusters(spark, sfDir))
+    // building d8 runs the d4 band aggregate; the one stage of it that
+    // scans the documents table marks each job that (re-)derives the edges
+    val sc = spark.sparkContext
+    val jobOfStage = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
+    val scanJobs = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        e.stageIds.foreach(jobOfStage.put(_, e.jobId))
+        if (e.properties.getProperty("spark.jobGroup.id") == "d8-marker")
+          marker.countDown()
+      }
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (e.stageInfo.rddInfos.exists(_.name == "FileScanRDD"))
+          scanJobs.add(jobOfStage.get(e.stageInfo.stageId))
+    }
+    sc.addSparkListener(listener)
+    val forced = try {
+      val df = DedupOps.lshClustersWith(spark, sfDir, edgeBound = 0)
+      // events reach the listener in post order: once the marker job is
+      // seen, every stage the build completed has been seen too
+      sc.setJobGroup("d8-marker", "marker")
+      spark.range(1).count()
+      sc.clearJobGroup()
+      assert(marker.await(30, java.util.concurrent.TimeUnit.SECONDS),
+        "marker job never reached the listener")
+      df
+    } finally sc.removeSparkListener(listener)
+    assert(scanJobs.asScala.toSet.size == 1,
+      s"the band aggregate ran in jobs ${scanJobs.asScala.toSeq.distinct}")
+    assert(labels(forced) == driverPath)
   }
 
   test("d11 semDedup equals the JVM-re-derived within-cell max-cosine over the engine's cells") {

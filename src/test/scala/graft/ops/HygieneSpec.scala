@@ -12,12 +12,7 @@ class HygieneSpec extends AnyFunSuite {
 
   private val sfDir = "/root/testdata/sf0.001"
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[8]")
-    .appName("hygiene-spec")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession("hygiene-spec", 8)
 
   private def md5Hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")

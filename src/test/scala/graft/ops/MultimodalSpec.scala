@@ -9,12 +9,7 @@ import org.apache.spark.sql.SparkSession
   */
 class MultimodalSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[8]")
-    .appName("multimodal-spec")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession("multimodal-spec", 8)
 
   test("sampleFrames: every stride-th fixed-size frame, ragged tail kept") {
     spark.sparkContext.setLogLevel("WARN")

@@ -13,12 +13,7 @@ class SamplingSpec extends AnyFunSuite {
 
   private val sfDir = "/root/testdata/sf0.01"
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[8]")
-    .appName("sampling-spec")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession("sampling-spec", 8)
 
   private def md5Hex6(s: String): String =
     java.security.MessageDigest.getInstance("MD5")

@@ -10,12 +10,7 @@ import org.apache.spark.sql.SparkSession
   */
 class UsageSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .appName("usage-spec")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession("usage-spec", 2)
 
   test("usage snapshot computes the reference cost model on a hand-checked fixture") {
     spark.sparkContext.setLogLevel("WARN")

@@ -12,12 +12,7 @@ class VectorSpec extends AnyFunSuite {
 
   private val sfDir = "/root/testdata/sf0.001"
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[8]")
-    .appName("vector-spec")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession("vector-spec", 8)
 
   test("v4 lshAnnTopK == v1 annTopK top-20 (dispatched AND explicit LSH point)") {
     spark.sparkContext.setLogLevel("WARN")

@@ -12,12 +12,7 @@ import java.nio.file.Files
   */
 class StreamingExtractSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[8]")
-    .appName("streaming-spec")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession("streaming-spec", 8)
 
   test("streaming extraction equals batch extraction, across two micro-batch waves") {
     spark.sparkContext.setLogLevel("WARN")

@@ -14,12 +14,7 @@ import java.sql.Timestamp
   */
 class StreamingOpsSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("streaming-ops-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.TestSession("streaming-ops-spec", 4)
 
   private def ts(s: String) = Timestamp.valueOf(s)
 
