@@ -21,142 +21,90 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     ExtractQueries.extractFull(spark, "/root/testdata/sf0.001")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** Every driver query, listed once: its name, the query, and the DuckDB
+    * oracle SQL that checks it (`None` where the result is not
+    * SQL-expressible).
+    */
+  private def registry: Seq[(String, (SparkSession, String) => DataFrame, Option[String])] = Seq(
     // extraction core over driver data
-    "x1_chunk_sections" -> (ExtractQueries.chunkSectionCounts _),
-    "x2_extract_full" -> (ExtractQueries.extractFull _),
-    "x3_extract_spans" -> (ExtractQueries.extractSpans _),
-    "x4_rule_fields" -> (ExtractQueries.ruleFields _),
-    "x5_block_classify" -> (ExtractQueries.blockClassify _),
-    "a3_signature_stats" -> (ExtractQueries.signatureStats _),
-    "a4_usage_snapshot" -> (ExtractQueries.usageSnapshot _),
-    "a4b_usage_counters" -> (ExtractQueries.usageCounters _),
-    "a5_rules_stats" -> (ExtractQueries.rulesStats _),
-    "a6_field_accuracy" -> (ExtractQueries.fieldAccuracy _),
-    "a7_eval_prf" -> (ExtractQueries.evalPrf _),
+    ("x1_chunk_sections", ExtractQueries.chunkSectionCounts _,
+      Some(ExtractQueries.chunkSectionCountsSql)),
+    ("x2_extract_full", ExtractQueries.extractFull _, Some(ExtractQueries.extractFullSql)),
+    ("x3_extract_spans", ExtractQueries.extractSpans _, Some(ExtractQueries.extractSpansSql)),
+    ("x4_rule_fields", ExtractQueries.ruleFields _, Some(ExtractQueries.ruleFieldsSql)),
+    ("x5_block_classify", ExtractQueries.blockClassify _, Some(ExtractQueries.blockClassifySql)),
+    ("a3_signature_stats", ExtractQueries.signatureStats _, None),
+    ("a4_usage_snapshot", ExtractQueries.usageSnapshot _, None),
+    ("a4b_usage_counters", ExtractQueries.usageCounters _, Some(ExtractQueries.usageCountersSql)),
+    ("a5_rules_stats", ExtractQueries.rulesStats _, Some(ExtractQueries.rulesStatsSql)),
+    ("a6_field_accuracy", ExtractQueries.fieldAccuracy _, Some(ExtractQueries.fieldAccuracySql)),
+    ("a7_eval_prf", ExtractQueries.evalPrf _, Some(ExtractQueries.evalPrfSql)),
     // relational / repository analytics
-    "q1_pricing_summary" -> (RelationalOps.q1PricingSummary _),
-    "q2_top_customers" -> (RelationalOps.q2TopCustomers _),
-    "q3_region_revenue" -> (RelationalOps.q3RegionRevenue _),
-    "q4_filter_project" -> (RelationalOps.q4FilterProject _),
-    "q5_distinct" -> (RelationalOps.q5Distinct _),
-    "q6_window_top_order" -> (RelationalOps.q6WindowTopOrder _),
-    "q7_eval_ratios" -> (RelationalOps.q7EvalRatios _),
-    "q8_events_daily" -> (RelationalOps.q8EventsDaily _),
-    "q9_orders_by_month" -> (RelationalOps.q9OrdersByMonth _),
-    "q10_anti_join" -> (RelationalOps.q10AntiJoin _),
-    "q11_semi_join" -> (RelationalOps.q11SemiJoin _),
-    "q12_fact_join" -> (RelationalOps.q12FactJoin _),
-    "p3_library_search" -> (RelationalOps.p3LibrarySearch _),
-    "p1_doc_lookup" -> (RelationalOps.p1DocLookup _),
-    "p5_retention" -> (RelationalOps.p5Retention _),
-    "a2_repo_stats" -> (RelationalOps.a2RepoStats _),
+    ("q1_pricing_summary", RelationalOps.q1PricingSummary _, Some(RelationalOps.q1Sql)),
+    ("q2_top_customers", RelationalOps.q2TopCustomers _, Some(RelationalOps.q2Sql)),
+    ("q3_region_revenue", RelationalOps.q3RegionRevenue _, Some(RelationalOps.q3Sql)),
+    ("q4_filter_project", RelationalOps.q4FilterProject _, Some(RelationalOps.q4Sql)),
+    ("q5_distinct", RelationalOps.q5Distinct _, Some(RelationalOps.q5Sql)),
+    ("q6_window_top_order", RelationalOps.q6WindowTopOrder _, Some(RelationalOps.q6Sql)),
+    ("q7_eval_ratios", RelationalOps.q7EvalRatios _, Some(RelationalOps.q7Sql)),
+    ("q8_events_daily", RelationalOps.q8EventsDaily _, Some(RelationalOps.q8Sql)),
+    ("q9_orders_by_month", RelationalOps.q9OrdersByMonth _, Some(RelationalOps.q9Sql)),
+    ("q10_anti_join", RelationalOps.q10AntiJoin _, Some(RelationalOps.q10Sql)),
+    ("q11_semi_join", RelationalOps.q11SemiJoin _, Some(RelationalOps.q11Sql)),
+    ("q12_fact_join", RelationalOps.q12FactJoin _, Some(RelationalOps.q12Sql)),
+    ("p3_library_search", RelationalOps.p3LibrarySearch _, Some(RelationalOps.p3Sql)),
+    ("p1_doc_lookup", RelationalOps.p1DocLookup _, Some(RelationalOps.p1Sql)),
+    ("p5_retention", RelationalOps.p5Retention _, Some(RelationalOps.p5Sql)),
+    ("a2_repo_stats", RelationalOps.a2RepoStats _, Some(RelationalOps.a2Sql)),
     // dedup
-    "d1_exact_dedup" -> (DedupOps.exactDedup _),
-    "d2_ngram_jaccard" -> (DedupOps.ngramJaccardPairs _),
-    "d3_minhash" -> (DedupOps.minhash _),
-    "d4_lsh_pairs" -> (DedupOps.lshPairs _),
-    "d5_simhash" -> (DedupOps.simhash _),
-    "d8_lsh_clusters" -> (DedupOps.lshClusters _),
-    "d6_embed_neardup" -> (DedupOps.embedNearDup _),
-    "d7_lsh_neardup" -> (DedupOps.lshNearDup _),
-    "d9_decontaminate" -> (DedupOps.decontaminate _),
-    "d10_boilerplate" -> (DedupOps.boilerplate _),
-    "d11_semdedup" -> (DedupOps.semDedup _),
+    ("d1_exact_dedup", DedupOps.exactDedup _, Some(DedupOps.exactDedupSql)),
+    ("d2_ngram_jaccard", DedupOps.ngramJaccardPairs _, Some(DedupOps.ngramJaccardSql)),
+    ("d3_minhash", DedupOps.minhash _, Some(DedupOps.minhashSql)),
+    ("d4_lsh_pairs", DedupOps.lshPairs _, Some(DedupOps.lshPairsSql)),
+    ("d5_simhash", DedupOps.simhash _, Some(DedupOps.simhashSql)),
+    ("d8_lsh_clusters", DedupOps.lshClusters _, Some(DedupOps.lshClustersSql)),
+    ("d6_embed_neardup", DedupOps.embedNearDup _, Some(DedupOps.embedNearDupSql)),
+    ("d7_lsh_neardup", DedupOps.lshNearDup _, Some(DedupOps.lshNearDupSql)),
+    ("d9_decontaminate", DedupOps.decontaminate _, Some(DedupOps.decontaminateSql)),
+    ("d10_boilerplate", DedupOps.boilerplate _, Some(DedupOps.boilerplateSql)),
+    ("d11_semdedup", DedupOps.semDedup _, Some(DedupOps.semDedupSql)),
     // similarity search
-    "v1_ann_topk" -> (VectorOps.annTopK _),
-    "v2_lsh_buckets" -> (VectorOps.lshBuckets _),
-    "v4_lsh_ann_topk" -> (VectorOps.lshAnnTopK _),
-    "v3_cluster_stats" -> (VectorOps.clusterStats _),
-    "v5_ivf_topk" -> (VectorOps.ivfTopK _),
-    "v6_kmeans" -> (VectorOps.kmeansRefine _),
+    ("v1_ann_topk", VectorOps.annTopK _, Some(VectorOps.annTopKSql)),
+    ("v2_lsh_buckets", VectorOps.lshBuckets _, Some(VectorOps.lshBucketsSql)),
+    ("v4_lsh_ann_topk", VectorOps.lshAnnTopK _, Some(VectorOps.lshAnnTopKSql)),
+    ("v3_cluster_stats", VectorOps.clusterStats _, Some(VectorOps.clusterStatsSql)),
+    ("v5_ivf_topk", VectorOps.ivfTopK _, Some(VectorOps.ivfTopKSql)),
+    ("v6_kmeans", VectorOps.kmeansRefine _, Some(VectorOps.kmeansRefineSql)),
     // text analysis
-    "t1_langid" -> (TextOps.langId _),
-    "c1_curation_funnel" -> (CurationOps.curationFunnel _),
-    "c2_curated_docs" -> (CurationOps.curatedDocs _),
-    "c3_curated_mixture" -> (CurationOps.curatedMixture _),
-    "t2_quality" -> (TextOps.quality _),
-    "t3_token_count" -> (TextOps.tokenCount _),
-    "t4_fingerprint" -> (TextOps.fingerprint _),
-    "t5_repetition" -> (TextOps.repetition _),
-    "t6_vocab" -> (TextOps.vocab _),
-    "t7_pii_scrub" -> (TextOps.piiScrub _),
-    "t8_rarity" -> (TextOps.rarity _),
-    "t9_bigram_merge" -> (TextOps.bigramMerge _),
+    ("t1_langid", TextOps.langId _, Some(TextOps.langIdSql)),
+    ("c1_curation_funnel", CurationOps.curationFunnel _, Some(CurationOps.curationFunnelSql)),
+    ("c2_curated_docs", CurationOps.curatedDocs _, Some(CurationOps.curatedDocsSql)),
+    ("c3_curated_mixture", CurationOps.curatedMixture _, Some(CurationOps.curatedMixtureSql)),
+    ("t2_quality", TextOps.quality _, Some(TextOps.qualitySql)),
+    ("t3_token_count", TextOps.tokenCount _, Some(TextOps.tokenCountSql)),
+    ("t4_fingerprint", TextOps.fingerprint _, Some(TextOps.fingerprintSql)),
+    ("t5_repetition", TextOps.repetition _, Some(TextOps.repetitionSql)),
+    ("t6_vocab", TextOps.vocab _, Some(TextOps.vocabSql)),
+    ("t7_pii_scrub", TextOps.piiScrub _, Some(TextOps.piiScrubSql)),
+    ("t8_rarity", TextOps.rarity _, Some(TextOps.raritySql)),
+    ("t9_bigram_merge", TextOps.bigramMerge _, Some(TextOps.bigramMergeSql)),
     // dataset mixing / sampling
-    "s1_hash_sample" -> (SamplingOps.hashSample _),
-    "s2_mixture_quota" -> (SamplingOps.mixtureQuota _),
-    "s3_temperature_weights" -> (SamplingOps.temperatureWeights _),
-    "s4_shard_shuffle" -> (SamplingOps.shardShuffle _),
-    "s5_split_manifest" -> (SamplingOps.splitManifest _),
-    "s6_dsir_weights" -> (SamplingOps.dsirWeights _),
+    ("s1_hash_sample", SamplingOps.hashSample _, Some(SamplingOps.hashSampleSql)),
+    ("s2_mixture_quota", SamplingOps.mixtureQuota _, Some(SamplingOps.mixtureQuotaSql)),
+    ("s3_temperature_weights", SamplingOps.temperatureWeights _,
+      Some(SamplingOps.temperatureWeightsSql)),
+    ("s4_shard_shuffle", SamplingOps.shardShuffle _, Some(SamplingOps.shardShuffleSql)),
+    ("s5_split_manifest", SamplingOps.splitManifest _, Some(SamplingOps.splitManifestSql)),
+    ("s6_dsir_weights", SamplingOps.dsirWeights _, Some(SamplingOps.dsirWeightsSql)),
     // multimodal
-    "m1_media_features" -> (MultimodalOps.mediaFeatures _),
-    "m2_media_decode" -> (MultimodalOps.mediaPpmDecode _),
-    "m3_frame_sample" -> (MultimodalOps.frameSampleStats _))
+    ("m1_media_features", MultimodalOps.mediaFeatures _, Some(MultimodalOps.mediaFeaturesSql)),
+    ("m2_media_decode", MultimodalOps.mediaPpmDecode _, Some(MultimodalOps.mediaPpmDecodeSql)),
+    ("m3_frame_sample", MultimodalOps.frameSampleStats _,
+      Some(MultimodalOps.frameSampleStatsSql)))
 
-  def oracleSql: Map[String, String] = Map(
-    "x1_chunk_sections" -> ExtractQueries.chunkSectionCountsSql,
-    "x2_extract_full" -> ExtractQueries.extractFullSql,
-    "x3_extract_spans" -> ExtractQueries.extractSpansSql,
-    "x4_rule_fields" -> ExtractQueries.ruleFieldsSql,
-    "x5_block_classify" -> ExtractQueries.blockClassifySql,
-    "a4b_usage_counters" -> ExtractQueries.usageCountersSql,
-    "a5_rules_stats" -> ExtractQueries.rulesStatsSql,
-    "a6_field_accuracy" -> ExtractQueries.fieldAccuracySql,
-    "a7_eval_prf" -> ExtractQueries.evalPrfSql,
-    "q1_pricing_summary" -> RelationalOps.q1Sql,
-    "q2_top_customers" -> RelationalOps.q2Sql,
-    "q3_region_revenue" -> RelationalOps.q3Sql,
-    "q4_filter_project" -> RelationalOps.q4Sql,
-    "q5_distinct" -> RelationalOps.q5Sql,
-    "q6_window_top_order" -> RelationalOps.q6Sql,
-    "q7_eval_ratios" -> RelationalOps.q7Sql,
-    "q8_events_daily" -> RelationalOps.q8Sql,
-    "q9_orders_by_month" -> RelationalOps.q9Sql,
-    "q10_anti_join" -> RelationalOps.q10Sql,
-    "q11_semi_join" -> RelationalOps.q11Sql,
-    "q12_fact_join" -> RelationalOps.q12Sql,
-    "p3_library_search" -> RelationalOps.p3Sql,
-    "p1_doc_lookup" -> RelationalOps.p1Sql,
-    "p5_retention" -> RelationalOps.p5Sql,
-    "a2_repo_stats" -> RelationalOps.a2Sql,
-    "d1_exact_dedup" -> DedupOps.exactDedupSql,
-    "d2_ngram_jaccard" -> DedupOps.ngramJaccardSql,
-    "d3_minhash" -> DedupOps.minhashSql,
-    "d4_lsh_pairs" -> DedupOps.lshPairsSql,
-    "d5_simhash" -> DedupOps.simhashSql,
-    "d8_lsh_clusters" -> DedupOps.lshClustersSql,
-    "d6_embed_neardup" -> DedupOps.embedNearDupSql,
-    "d7_lsh_neardup" -> DedupOps.lshNearDupSql,
-    "d9_decontaminate" -> DedupOps.decontaminateSql,
-    "d10_boilerplate" -> DedupOps.boilerplateSql,
-    "d11_semdedup" -> DedupOps.semDedupSql,
-    "v1_ann_topk" -> VectorOps.annTopKSql,
-    "v2_lsh_buckets" -> VectorOps.lshBucketsSql,
-    "v3_cluster_stats" -> VectorOps.clusterStatsSql,
-    "v4_lsh_ann_topk" -> VectorOps.lshAnnTopKSql,
-    "v5_ivf_topk" -> VectorOps.ivfTopKSql,
-    "v6_kmeans" -> VectorOps.kmeansRefineSql,
-    "t1_langid" -> TextOps.langIdSql,
-    "c1_curation_funnel" -> CurationOps.curationFunnelSql,
-    "c2_curated_docs" -> CurationOps.curatedDocsSql,
-    "c3_curated_mixture" -> CurationOps.curatedMixtureSql,
-    "t2_quality" -> TextOps.qualitySql,
-    "t3_token_count" -> TextOps.tokenCountSql,
-    "t4_fingerprint" -> TextOps.fingerprintSql,
-    "t5_repetition" -> TextOps.repetitionSql,
-    "t6_vocab" -> TextOps.vocabSql,
-    "t7_pii_scrub" -> TextOps.piiScrubSql,
-    "t8_rarity" -> TextOps.raritySql,
-    "t9_bigram_merge" -> TextOps.bigramMergeSql,
-    "s1_hash_sample" -> SamplingOps.hashSampleSql,
-    "s2_mixture_quota" -> SamplingOps.mixtureQuotaSql,
-    "s3_temperature_weights" -> SamplingOps.temperatureWeightsSql,
-    "s4_shard_shuffle" -> SamplingOps.shardShuffleSql,
-    "s5_split_manifest" -> SamplingOps.splitManifestSql,
-    "s6_dsir_weights" -> SamplingOps.dsirWeightsSql,
-    "m1_media_features" -> MultimodalOps.mediaFeaturesSql,
-    "m2_media_decode" -> MultimodalOps.mediaPpmDecodeSql,
-    "m3_frame_sample" -> MultimodalOps.frameSampleStatsSql)
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map { case (name, fn, _) => name -> fn }.toMap
+
+  def oracleSql: Map[String, String] =
+    registry.collect { case (name, _, Some(sql)) => name -> sql }.toMap
 }

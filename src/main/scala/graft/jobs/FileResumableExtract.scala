@@ -90,26 +90,24 @@ object FileResumableExtract {
     * mangling (unlike URLDecoder), recovering the raw path; `rootPath` is
     * the driver-resolved [[rootFsPath]], captured into the task closure.
     */
-  def fileIdFromUri(rootPath: String, fileUri: String): String = {
-    val abs = new java.net.URI(fileUri).getPath
-    val rel =
-      if (abs.startsWith(rootPath + "/")) abs.substring(rootPath.length + 1)
-      else new Path(abs).getName // input root was a single file
-    fileId(rel)
-  }
+  def fileIdFromUri(rootPath: String, fileUri: String): String =
+    fileId(relativeTo(rootPath, new java.net.URI(fileUri).getPath))
 
-  /** RECURSIVE input listing: nested layouts (date partitions, Iceberg-ish
-    * `data/` trees) are first-class, not silently skipped. Any path
-    * component starting with `_` or `.` is excluded (metadata dirs like
-    * `_manifest`, `_SUCCESS`, hidden temp dirs) — the same convention
-    * Spark's own file index applies.
+  /** The one root-relative path rule behind every file id, on the driver
+    * (listing) and executor ([[fileIdFromUri]]) sides alike: the path below
+    * `rootPath`, or the basename when the input root is a single file.
     */
-  def inputFiles(spark: SparkSession, inPath: String): Seq[String] =
-    inputFilesWithIds(spark, inPath).map(_._1)
+  private def relativeTo(rootPath: String, absPath: String): String =
+    if (absPath.startsWith(rootPath + "/")) absPath.substring(rootPath.length + 1)
+    else absPath.substring(absPath.lastIndexOf('/') + 1)
 
-  /** (absolute path, file id) pairs — the id hashed from the root-relative
-    * path (see [[fileId]]). One listing feeds the scan, the manifest
-    * anti-join, and the commit roll-up.
+  /** RECURSIVE input listing of (absolute path, file id) pairs — the id
+    * hashed from the root-relative path (see [[fileId]]). Nested layouts
+    * (date partitions, Iceberg-ish `data/` trees) are first-class, not
+    * silently skipped. Any path component starting with `_` or `.` is
+    * excluded (metadata dirs like `_manifest`, `_SUCCESS`, hidden temp
+    * dirs) — the same convention Spark's own file index applies. One
+    * listing feeds the scan, the manifest anti-join, and the commit roll-up.
     *
     * Local (`file:`) roots walk via java.nio instead of Hadoop's
     * `listFiles(recursive)`: RawLocalFileSystem materializes POSIX
@@ -131,11 +129,9 @@ object FileResumableExtract {
     val root = f.getFileStatus(new Path(inPath)).getPath
     val rootPath = root.toUri.getPath
     val buf = scala.collection.mutable.ArrayBuffer[(String, FileStatus, String)]()
-    def add(absPath: String, name: String, st: => FileStatus): Unit = {
-      val rel =
-        if (absPath.startsWith(rootPath + "/")) absPath.substring(rootPath.length + 1)
-        else name // root itself is a file
-      if (name.endsWith(".parquet") &&
+    def add(absPath: String, st: => FileStatus): Unit = {
+      val rel = relativeTo(rootPath, absPath)
+      if (rel.endsWith(".parquet") &&
         rel.split('/').forall(c => !c.startsWith("_") && !c.startsWith(".")))
         buf += ((absPath, st, fileId(rel)))
     }
@@ -146,7 +142,7 @@ object FileResumableExtract {
         scala.util.Try(java.nio.file.Files.readAttributes(p,
           classOf[java.nio.file.attribute.BasicFileAttributes]))
           .filter(_.isRegularFile).foreach { a =>
-            add(p.toString, p.getFileName.toString, new FileStatus(a.size, false, 1,
+            add(p.toString, new FileStatus(a.size, false, 1,
               blockSize, a.lastModifiedTime.toMillis, f.makeQualified(new Path(p.toString))))
           }
       } finally stream.close()
@@ -154,7 +150,7 @@ object FileResumableExtract {
       val it = f.listFiles(root, true)
       while (it.hasNext) {
         val st = it.next()
-        add(st.getPath.toUri.getPath, st.getPath.getName, st)
+        add(st.getPath.toUri.getPath, st)
       }
     }
     buf.sortBy(_._1).map(e => (e._2, e._3)).toSeq

@@ -12,9 +12,9 @@ import org.apache.spark.sql.functions._
   * PPM (netpbm P6) — header parse with comment/whitespace handling plus
   * per-channel pixel sums — value-checked against a DuckDB oracle that
   * re-derives header fields and channel sums by independent arithmetic
-  * (query m2). [[StubDecoder]] remains the clearly-marked deterministic
-  * stand-in for formats whose codec libraries aren't in this container
-  * (jpeg/ffmpeg), keeping the generic opaque-payload plumbing testable.
+  * (query m2). [[sampleFrames]] is the 1-row-in/k-rows-out frame-sampling
+  * shape a video sampler has (query m3). Codec-library formats
+  * (jpeg/ffmpeg) are not decoded.
   */
 object MultimodalOps {
 
@@ -34,69 +34,11 @@ object MultimodalOps {
        FROM documents ORDER BY doc_id"""
 
   final case class MediaRow(doc_id: Long, payload: Array[Byte])
-  final case class DecodedMedia(
-      doc_id: Long,
-      byte_len: Int,
-      width: Int,
-      height: Int,
-      thumb_len: Int,
-      features: Seq[Float])
   final case class Frame(
       doc_id: Long,
       frame_idx: Int,
       frame_bytes: Int,
       mean_byte: Double)
-
-  /** STUB decoder: a real implementation would wrap a pooled native codec
-    * (libjpeg/ffmpeg) here; this deterministic fake derives "dimensions"
-    * and a 8-dim "feature vector" from the payload bytes so the schema,
-    * batching, and partition shape are real and testable.
-    */
-  final class StubDecoder {
-    def decode(payload: Array[Byte]): (Int, Int, Array[Float]) = {
-      val n = payload.length
-      val width = 16 + (if (n > 0) (payload(0) & 0x7f) else 0)
-      val height = 16 + (if (n > 1) (payload(1) & 0x7f) else 0)
-      val feats = new Array[Float](8)
-      var i = 0
-      while (i < n) {
-        feats(i % 8) += (payload(i) & 0xff) / 255.0f
-        i += 1
-      }
-      (width, height, feats)
-    }
-
-    /** STUB resize: stride-sample the payload down to w×h "pixels" — the
-      * real thing is a pooled libjpeg/swscale call; the plumbing (bytes in,
-      * smaller bytes out, per-partition reuse) is what's exercised.
-      */
-    def resize(payload: Array[Byte], w: Int, h: Int): Array[Byte] = {
-      val target = math.max(1, w * h)
-      if (payload.length <= target) payload
-      else {
-        val out = new Array[Byte](target)
-        val stride = payload.length.toDouble / target
-        var i = 0
-        while (i < target) { out(i) = payload((i * stride).toInt); i += 1 }
-        out
-      }
-    }
-  }
-
-  /** Typed decode pass: binary column in, typed features out; one decoder
-    * instance per partition (pooled), never per row.
-    */
-  def decodeMedia(spark: SparkSession, media: Dataset[MediaRow]): Dataset[DecodedMedia] = {
-    import spark.implicits._
-    media.mapPartitions { iter =>
-      val decoder = new StubDecoder // pooled per-partition state
-      iter.map { m =>
-        val (w, h, f) = decoder.decode(m.payload)
-        val thumb = decoder.resize(m.payload, 8, 8)
-        DecodedMedia(m.doc_id, m.payload.length, w, h, thumb.length, f.toSeq)
-      }
-    }
-  }
 
   /** Frame-sampling plumbing (the video analog): split the payload into
     * fixed-size "frames" and emit every `stride`-th one — the 1-row-in /
@@ -159,21 +101,6 @@ object MultimodalOps {
            CASE WHEN (nf - 1) % 3 = 0 THEN n - 256 * (nf - 1) ELSE 256 END
            AS BIGINT) AS bytes_sampled
        FROM b ORDER BY doc_id"""
-
-  /** Rows-only plumbing demo: documents → binary payloads → stubbed decode →
-    * per-batch feature stats. Spec-covered (MultimodalSpec); the driver's
-    * m2 query is the REAL oracle-checked [[mediaPpmDecode]] below.
-    */
-  def mediaDecodeStats(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val media = spark.read.parquet(s"$dir/documents.parquet")
-      .select(col("doc_id"), col("text").cast("binary").as("payload"))
-      .as[MediaRow]
-    decodeMedia(spark, media)
-      .groupBy(col("width") % 8)
-      .agg(count(lit(1)).as("n"), sum(col("byte_len")).as("bytes"))
-      .orderBy(col("width") % 8)
-  }
 
   // ---- real codec: binary PPM (netpbm P6) ----------------------------------
 

@@ -4,10 +4,10 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** Streaming analytics over the extraction stream (SURVEY §2.8 — the
-  * reference has no streaming; these are the engine's incremental
-  * counterparts of the batch metrics/dedup operators, built on Structured
-  * Streaming's bounded-state primitives).
+/** Streaming analytics over any streaming frame with the named columns
+  * (SURVEY §2.8 — the reference has no streaming; these are the engine's
+  * incremental counterparts of the batch metrics/dedup operators, built on
+  * Structured Streaming's bounded-state primitives).
   *
   * Scale notes: both operators keep per-key state BOUNDED — the windowed
   * aggregation drops closed-window state once the watermark passes, and

@@ -76,18 +76,31 @@ class PlanSpec extends AnyFunSuite {
     assert(java.nio.file.Files.readString(plan).contains("== Physical Plan =="))
   }
 
-  test("session builders: only JobSession, Bench and Verify build a SparkSession") {
+  /** The `src/main/scala`-relative paths of the main sources containing
+    * `text`, resolved from the working directory (the build's base
+    * directory).
+    */
+  private def mainSourcesContaining(text: String): Set[String] = {
     import scala.jdk.CollectionConverters._
-    // resolved from the working directory (the build's base directory)
     val main = java.nio.file.Paths.get("src/main/scala").toAbsolutePath
     assert(java.nio.file.Files.isDirectory(main), s"no sources at $main")
-    val builders = java.nio.file.Files.walk(main).iterator().asScala
+    java.nio.file.Files.walk(main).iterator().asScala
       .filter(_.toString.endsWith(".scala"))
-      .filter(p => java.nio.file.Files.readString(p).contains("SparkSession.builder"))
+      .filter(p => java.nio.file.Files.readString(p).contains(text))
       .map(main.relativize(_).toString).toSet
+  }
+
+  test("session builders: only JobSession, Bench and Verify build a SparkSession") {
+    val builders = mainSourcesContaining("SparkSession.builder")
     val allowed = Set("graft/jobs/JobSession.scala", "graft/Bench.scala", "graft/Verify.scala")
     assert((builders -- allowed).isEmpty,
       s"build the session through graft.jobs.JobSession: ${builders -- allowed}")
+  }
+
+  test("one extraction write path: no streaming sink in src/main") {
+    val sinks = mainSourcesContaining("writeStream")
+    assert(sinks.isEmpty,
+      s"extract incrementally by re-running FileResumableExtract.run: $sinks")
   }
 
   test("d1 exact dedup: single-pass partial+final hash aggregate, no pre-shuffle") {

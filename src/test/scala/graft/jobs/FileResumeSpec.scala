@@ -98,13 +98,42 @@ class FileResumeSpec extends AnyFunSuite {
       "537f1e9e100022c1e63abde9e4c97df6")
   }
 
+  test("input files that land after a completed run are extracted by the next run, and only they") {
+    spark.sparkContext.setLogLevel("WARN")
+    import spark.implicits._
+    val base = Files.createTempDirectory("graft_fwaves_").toString
+    val in = s"$base/docs"
+    val out = s"$base/out"
+
+    // wave 1: docs 0..199 as 4 files
+    spark.range(0, 200, 1, 4).map(i => CorpusGen.gen(i))
+      .write.mode("append").parquet(in)
+    assert(FileResumableExtract.run(spark, in, out) == 200L)
+
+    // wave 2: docs 200..399 land later as 4 more files
+    spark.range(200, 400, 1, 4).map(i => CorpusGen.gen(i))
+      .write.mode("append").parquet(in)
+    assert(FileResumableExtract.run(spark, in, out) == 200L)
+    assert(FileResumableExtract.completedFileIds(spark, out).size == 8)
+
+    val extracted = FileResumableExtract.readResults(spark, out)
+      .select("doc_id", "spans").as[(String, Seq[graft.model.OutSpan])]
+      .collect().map { case (d, s) => d -> DocParser.spanHash(s) }.toMap
+    val batch = ExtractJob.extract(spark,
+      spark.range(0, 400, 1, 8).map(i => CorpusGen.gen(i)))
+      .collect().map(r => r.doc_id -> DocParser.spanHash(r.spans)).toMap
+    assert(extracted.size == 400)
+    assert(extracted == batch, "two-wave extraction vs one batch extract: span hashes differ")
+    assert(docsIn(out) == 400L)
+  }
+
   test("file-granular resume: no shuffle, no reprocessing, identical convergence") {
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
     val base = Files.createTempDirectory("graft_fresume_").toString
     val in = s"$base/docs"
     spark.range(0, 400, 1, 8).map(i => CorpusGen.gen(i)).write.parquet(in)
-    val files = FileResumableExtract.inputFiles(spark, in)
+    val files = FileResumableExtract.inputFilesWithIds(spark, in).map(_._1)
     assert(files.size == 8)
 
     // uninterrupted
@@ -238,7 +267,7 @@ class FileResumeSpec extends AnyFunSuite {
     // simulate: one file's commit lost AFTER its metrics/output were
     // written (crash between the metrics publish and manifest commit) —
     // also exercising the loose-marker read path
-    val files = FileResumableExtract.inputFiles(spark, in)
+    val files = FileResumableExtract.inputFilesWithIds(spark, in).map(_._1)
     val lostId = FileResumableExtract.fileId(
       new org.apache.hadoop.fs.Path(files.head).getName)
     val kept = loseCommit(out, lostId)
@@ -259,7 +288,7 @@ class FileResumeSpec extends AnyFunSuite {
     val base = Files.createTempDirectory("graft_fresume_compact_").toString
     val in = s"$base/docs"
     spark.range(0, 400, 1, 8).map(i => CorpusGen.gen(i)).write.parquet(in)
-    val files = FileResumableExtract.inputFiles(spark, in)
+    val files = FileResumableExtract.inputFilesWithIds(spark, in).map(_._1)
     val out = s"$base/out"
 
     // partial run commits one roll-up for 3 files
@@ -322,7 +351,7 @@ class FileResumeSpec extends AnyFunSuite {
     val hidden = new java.io.File(in, "_staging"); hidden.mkdirs()
     Files.writeString(new java.io.File(hidden, "junk.parquet").toPath, "not parquet")
 
-    val files = FileResumableExtract.inputFiles(spark, in.toString)
+    val files = FileResumableExtract.inputFilesWithIds(spark, in.toString).map(_._1)
     assert(files.size == 2, s"recursive listing found: $files")
 
     val out = s"$base/out"
@@ -347,7 +376,7 @@ class FileResumeSpec extends AnyFunSuite {
     val base = Files.createTempDirectory("graft_fresume_kill_").toString
     val in = s"$base/docs"
     spark.range(0, 80, 1, 8).map(i => CorpusGen.gen(i)).write.parquet(in)
-    val allIds = FileResumableExtract.inputFiles(spark, in)
+    val allIds = FileResumableExtract.inputFilesWithIds(spark, in).map(_._1)
       .map(p => FileResumableExtract.fileId(
         new org.apache.hadoop.fs.Path(p).getName)).toSet
     assert(allIds.size == 8)
@@ -436,7 +465,7 @@ class FileResumeSpec extends AnyFunSuite {
     val base = Files.createTempDirectory("graft_fresume_jobs_").toString
     val in = s"$base/docs"
     spark.range(0, 400, 1, 40).map(i => CorpusGen.gen(i)).write.parquet(in)
-    assert(FileResumableExtract.inputFiles(spark, in).size == 40)
+    assert(FileResumableExtract.inputFilesWithIds(spark, in).size == 40)
     val out = s"$base/out"
     var n = 0L
     assert(jobsOf { n = FileResumableExtract.run(spark, in, out) } == Seq(1))
@@ -513,7 +542,7 @@ class FileResumeSpec extends AnyFunSuite {
 
     // replay one file: its new row lands in run_1 and supersedes run_0's
     val lostId = FileResumableExtract.fileId(new org.apache.hadoop.fs.Path(
-      FileResumableExtract.inputFiles(spark, in).head).getName)
+      FileResumableExtract.inputFilesWithIds(spark, in).map(_._1).head).getName)
     loseCommit(out, lostId)
     assert(FileResumableExtract.run(spark, in, out) > 0L)
     val replayed = byFile(spark.read.parquet(s"$out/metrics/run_1"))

@@ -73,7 +73,7 @@ class FileRetentionSpec extends AnyFunSuite {
     val base = Files.createTempDirectory("graft_fret_mix_").toString
     val in = s"$base/docs"
     spark.range(0, 80, 1, 8).map(i => CorpusGen.gen(i)).write.parquet(in)
-    val allIds = FileResumableExtract.inputFiles(spark, in)
+    val allIds = FileResumableExtract.inputFilesWithIds(spark, in).map(_._1)
       .map(p => FileResumableExtract.fileId(
         new org.apache.hadoop.fs.Path(p).getName)).toSet
     val golden = {

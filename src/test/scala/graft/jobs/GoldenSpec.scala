@@ -128,8 +128,6 @@ class GoldenSpec extends AnyFunSuite {
   }
 
   test("span hashes match harness digests (sf0.1, 60k docs — the BASELINE.md headline)") {
-    // Heavier; run always unless explicitly disabled (driver gate is sbt test).
-    assume(sys.env.getOrElse("GRAFT_SKIP_SF01_GOLDEN", "") != "1", "skipped by env")
     checkHashes("0.1")
   }
 

@@ -4,8 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
 
 /** Multimodal plumbing shapes: frame sampling (1 row in, every stride-th
-  * fixed-size frame out) and stub resize bounds — the decode itself is the
-  * documented stub, the distributed shape is what's asserted.
+  * fixed-size frame out) and the PPM decoder's header grammar and
+  * round-trip sums.
   */
 class MultimodalSpec extends AnyFunSuite {
 
@@ -26,16 +26,6 @@ class MultimodalSpec extends AnyFunSuite {
     val none = MultimodalOps.sampleFrames(
       Seq(MultimodalOps.MediaRow(2L, Array.empty[Byte])).toDS()).collect()
     assert(none.isEmpty)
-  }
-
-  test("stub resize: bounded output, deterministic, no-op when already small") {
-    val d = new MultimodalOps.StubDecoder
-    val big = Array.tabulate(5000)(i => (i % 251).toByte)
-    val t = d.resize(big, 8, 8)
-    assert(t.length == 64)
-    assert(t.sameElements(d.resize(big, 8, 8)))
-    val small = Array[Byte](1, 2, 3)
-    assert(d.resize(small, 8, 8).sameElements(small))
   }
 
   test("PPM decoder: header grammar (comments, whitespace runs, multi-digit dims), exact sums") {
