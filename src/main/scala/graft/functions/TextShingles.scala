@@ -32,7 +32,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - dedupe is BY SHINGLE STRING in first-occurrence order (exactly
   *    `array_distinct`) — two distinct shingles that collide at 60 bits
   *    stay duplicated in the hash array, as the declarative form has it
-  *    ([[PartnerOverlaps]] skips the self-partner that leaves in d2);
+  *    ([[partnerOverlaps]] skips the self-partner that leaves in d2);
   *  - hash = first 15 hex chars of md5 as a 60-bit long (the portable
   *    `conv(substring(md5(s),1,15),16,10)` = big-endian first 8 digest
   *    bytes `>>> 4`).
@@ -124,15 +124,6 @@ object TextShingles {
   def orderedPairsCol(c: Column): Column =
     GraftColumns.column(OrderedPairs(GraftColumns.expression(c)))
 
-  def postingTailsCol(ids: Column, ns: Column): Column =
-    GraftColumns.column(PostingTails(GraftColumns.expression(ids),
-      GraftColumns.expression(ns)))
-
-  def partnerOverlapsCol(docA: Column, nA: Column, tails: Column,
-      minJaccard: Double): Column =
-    GraftColumns.column(PartnerOverlaps(GraftColumns.expression(docA),
-      GraftColumns.expression(nA), GraftColumns.expression(tails), minJaccard))
-
   /** The partner tails of a posting list sorted by doc id: entry i (doc
     * ids(i) with ns(i) distinct shingles) gets (ids(i), ns(i), tail) where
     * the tail packs entries i+1..k-1, each as varint(id − previous id)
@@ -221,6 +212,48 @@ object TextShingles {
       s += 1
     }
     out.result().sortBy(_._1)
+  }
+
+  /** The [[postingTails]] of every posting list in a stream of (h, doc_id,
+    * n) entries sorted by (h, doc_id), where one run of equal h is one
+    * list. Lists of one entry give no tails, and neither do hot lists of
+    * more than `maxDf` entries: a run is buffered up to `maxDf + 1`
+    * entries and the rest of it is read past, so memory stays df-capped
+    * however long a list grows.
+    */
+  def postingRunTails(entries: Iterator[(Long, Long, Int)], maxDf: Int)
+      : Iterator[(Long, Int, Array[Byte])] = {
+    val in = entries.buffered
+    val ids = new Array[Long](maxDf + 1)
+    val ns = new Array[Int](maxDf + 1)
+    Iterator.continually(in).takeWhile(_.hasNext).flatMap { _ =>
+      val h = in.head._1
+      var k = 0
+      while (in.hasNext && in.head._1 == h) {
+        val (_, id, n) = in.next()
+        if (k < ids.length) { ids(k) = id; ns(k) = n; k += 1 }
+      }
+      if (k > maxDf) Iterator.empty
+      else postingTails(java.util.Arrays.copyOf(ids, k),
+        java.util.Arrays.copyOf(ns, k)).iterator
+    }
+  }
+
+  /** The [[partnerOverlaps]] of every probe doc in a stream of (doc_a, na,
+    * tail) sorted by doc_a, where one run of equal doc_a holds all of that
+    * doc's tails, as (doc_a, doc_b, inter, jaccard) rows ascending in
+    * doc_b within each doc.
+    */
+  def partnerRunOverlaps(tails: Iterator[(Long, Int, Array[Byte])],
+      minJaccard: Double): Iterator[(Long, Long, Long, Double)] = {
+    val in = tails.buffered
+    Iterator.continually(in).takeWhile(_.hasNext).flatMap { _ =>
+      val (a, na, _) = in.head
+      val run = Array.newBuilder[Array[Byte]]
+      while (in.hasNext && in.head._1 == a) run += in.next()._3
+      partnerOverlaps(a, na, run.result(), minJaccard).iterator
+        .map { case (b, inter, j) => (a, b, inter, j) }
+    }
   }
 
   private final class VarLongReader(buf: Array[Byte]) {
@@ -386,90 +419,4 @@ case class OrderedPairs(child: Expression)
 
   override protected def withNewChildInternal(newChild: Expression): OrderedPairs =
     copy(child = newChild)
-}
-
-/** The partner tails of a posting list — [[TextShingles.postingTails]]
-  * over (ids array<bigint> sorted ascending, ns array<int>) as
-  * array<struct<doc_a, na, tail binary>>; NULL on any NULL input. Each
-  * entry's tail is what d2 and c1's near-dup stage shuffle to the entry's
-  * own doc, instead of one row per candidate pair.
-  */
-case class PostingTails(ids: Expression, ns: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
-    with CodegenFallback {
-
-  import org.apache.spark.sql.catalyst.InternalRow
-  import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-  import org.apache.spark.sql.catalyst.util.ArrayData
-  import org.apache.spark.sql.types.{BinaryType, IntegerType, StructField, StructType}
-
-  override def left: Expression = ids
-  override def right: Expression = ns
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("doc_a", LongType, nullable = false),
-    StructField("na", IntegerType, nullable = false),
-    StructField("tail", BinaryType, nullable = false))), containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult =
-    (ids.dataType, ns.dataType) match {
-      case (ArrayType(LongType, false), ArrayType(IntegerType, false)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (a, b) => TypeCheckResult.TypeCheckFailure(
-        "posting_tails needs (array<bigint>, array<int>) without NULL " +
-          s"elements, got (${a.catalogString}, ${b.catalogString})")
-    }
-
-  override protected def nullSafeEval(idsV: Any, nsV: Any): Any =
-    new GenericArrayData(TextShingles.postingTails(
-      idsV.asInstanceOf[ArrayData].toLongArray(),
-      nsV.asInstanceOf[ArrayData].toIntArray())
-      .map { case (a, na, tail) => InternalRow(a, na, tail) })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): PostingTails =
-    copy(ids = newLeft, ns = newRight)
-}
-
-/** The near-dup pairs of one probe document — [[TextShingles.partnerOverlaps]]
-  * over (doc_a bigint, na int, tails array<binary>) as
-  * array<struct<doc_b, inter, jaccard>>; NULL on any NULL input. Counts
-  * in one per-document hash map what d2 and c1's near-dup stage used to
-  * shuffle and aggregate as one row per candidate pair.
-  */
-case class PartnerOverlaps(docA: Expression, nA: Expression, tails: Expression,
-    minJaccard: Double)
-    extends org.apache.spark.sql.catalyst.expressions.TernaryExpression
-    with CodegenFallback {
-
-  import org.apache.spark.sql.catalyst.InternalRow
-  import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-  import org.apache.spark.sql.catalyst.util.ArrayData
-  import org.apache.spark.sql.types.{BinaryType, DoubleType, IntegerType, StructField, StructType}
-
-  override def first: Expression = docA
-  override def second: Expression = nA
-  override def third: Expression = tails
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("doc_b", LongType, nullable = false),
-    StructField("inter", LongType, nullable = false),
-    StructField("jaccard", DoubleType, nullable = false))), containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult =
-    (docA.dataType, nA.dataType, tails.dataType) match {
-      case (LongType, IntegerType, ArrayType(BinaryType, false)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (a, n, t) => TypeCheckResult.TypeCheckFailure(
-        "partner_overlaps needs (bigint, int, array<binary>) without NULL " +
-          s"elements, got (${a.catalogString}, ${n.catalogString}, ${t.catalogString})")
-    }
-
-  override protected def nullSafeEval(a: Any, na: Any, ts: Any): Any = {
-    val arr = ts.asInstanceOf[ArrayData]
-    val pairs = TextShingles.partnerOverlaps(a.asInstanceOf[Long],
-      na.asInstanceOf[Int], Array.tabulate(arr.numElements())(arr.getBinary),
-      minJaccard)
-    new GenericArrayData(pairs.map { case (b, inter, j) => InternalRow(b, inter, j) })
-  }
-
-  override protected def withNewChildrenInternal(newFirst: Expression,
-      newSecond: Expression, newThird: Expression): PartnerOverlaps =
-    copy(docA = newFirst, nA = newSecond, tails = newThird)
 }

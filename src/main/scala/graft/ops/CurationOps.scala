@@ -32,9 +32,10 @@ import org.apache.spark.sql.functions._
   * content_hash over the ALREADY-FILTERED stage-2 survivors (doc_id +
   * 128-bit hash only — text never rides that exchange), the near-dup drop
   * set reuses d2's posting-list machinery over the stage-3 survivors (ONE
-  * shuffle on the 60-bit shingle hash into df-capped posting lists, ONE
-  * more gathering each doc's packed partner tails, whose overlaps are
-  * counted per document — no row per candidate pair, no join), and the
+  * shuffle on the 60-bit shingle hash, sorted so each df-capped posting
+  * list is one run, ONE more sorted so each doc's packed partner tails are
+  * one run, whose overlaps are counted per document — no row per candidate
+  * pair, no join, no list-collecting aggregate), and the
   * five funnel rows come from ONE `explode(sequence(0,
   * last_stage))` over a 2-column frame whose hash-aggregate map-side
   * combines to ≤5 rows per partition before its only shuffle. Filters run
@@ -75,8 +76,10 @@ object CurationOps {
     // cheaper than materializing every document's text a second time.
     // The four flags come from ONE native pass per row
     // ([[graft.functions.CurationFlags]] — FlagsSpec pins it value-equal
-    // to the declarative TextOps formulations the t1/t2/t3 oracles mirror)
-    val base = spark.read.parquet(s"$dir/documents.parquet")
+    // to the declarative TextOps formulations the t1/t2/t3 oracles mirror).
+    // Both scans share this one read, so its schema is inferred by one job
+    val documents = spark.read.parquet(s"$dir/documents.parquet")
+    val base = documents
       .select(col("doc_id"),
         graft.functions.TextFlags.curationFlagsCol(txt).as("f"))
       .select(col("doc_id"), col("f.lang_pred").as("lang_pred"),
@@ -94,8 +97,7 @@ object CurationOps {
       .join(keepers, Seq("doc_id"), "left_semi")
     // d2 pairs at tau among stage-3 survivors; drop the larger id of each.
     // Text rejoins here from a doc_id+text-pruned scan (see above).
-    val s3text = spark.read.parquet(s"$dir/documents.parquet")
-      .select(col("doc_id"), col("text"))
+    val s3text = documents.select(col("doc_id"), col("text"))
       .join(s3ids, Seq("doc_id"), "left_semi")
     val drops = DedupOps
       .ngramJaccardPairsOn(s3text, NearDupTau)

@@ -7,9 +7,11 @@ import org.apache.spark.sql.functions._
 
 /** Deduplication operators for a training-data pipeline over `documents`:
   * exact (hash groupBy), n-gram Jaccard pairs (posting lists + per-doc
-  * overlap counts), MinHash signatures + LSH banding, and SimHash — all
-  * declarative (explode/join/groupBy ride Catalyst's hash aggregates and
-  * shuffle planning; no UDFs, no driver-side loops).
+  * overlap counts), MinHash signatures + LSH banding, and SimHash. Per-row
+  * work runs in native Catalyst expressions and grouping rides Catalyst's
+  * shuffles and aggregates, except d2's pair stage: it streams sorted runs
+  * through typed `mapPartitions` (see [[ngramJaccardPairs]]). No UDFs, no
+  * driver-side loops on the d2 path.
   *
   * Portability note for the DuckDB oracle: token hashes are derived as
   * bigint from the first 15 hex chars of md5 (`conv(...,16,10)` in Spark,
@@ -73,23 +75,27 @@ object DedupOps {
     * jaccard on hot keys is quadratic). The DuckDB oracle prunes
     * identically; COVERAGE.md "d2" documents the contract for consumers.
     *
-    * Mechanics — per-document overlap counting over posting lists: each
-    * (doc, shingle hash) entry carries the doc's distinct-shingle count n;
-    * ONE shuffle on the 60-bit hash groups the entries into posting lists
-    * sorted by doc, hot shingles are df-pruned (df > [[MaxShingleDf]]),
-    * and the native [[graft.functions.PostingTails]] gives every entry its
-    * TAIL — the later entries of its list, packed as delta-varint bytes
-    * (~3 bytes per partner, where a bigint id and an int size take 12) —
-    * keyed by its own doc. ONE more shuffle gathers each probe doc's
-    * tails, and the native [[graft.functions.PartnerOverlaps]] counts the
-    * partners in one
-    * per-document hash map, computing jaccard = |∩| / (|A|+|B|-|∩|) from
-    * the carried sizes (counts over ALL distinct shingles, so the pruned
-    * jaccard is a lower bound of exact) and keeping only pairs at or above
-    * the floor. No row per candidate pair is ever shuffled or aggregated,
-    * and no join is needed for the sizes. A probe doc holds at most
-    * n·([[MaxShingleDf]] − 1) partner entries, so its memory stays
-    * df-capped at any corpus size.
+    * Mechanics — per-document overlap counting over posting lists built
+    * from sorted runs: each (doc, shingle hash) entry carries the doc's
+    * distinct-shingle count n. ONE shuffle on the 60-bit hash, sorted
+    * within each partition by (hash, doc), lays every posting list out as
+    * one run; [[graft.functions.TextShingles.postingRunTails]] streams the
+    * runs, df-prunes hot shingles (df > [[MaxShingleDf]]) and gives every
+    * entry its TAIL — the later entries of its list, packed as
+    * delta-varint bytes (~3 bytes per partner, where a bigint id and an
+    * int size take 12) — keyed by its own doc. ONE more shuffle, sorted by
+    * doc, lays out each probe doc's tails as one run, and
+    * [[graft.functions.TextShingles.partnerRunOverlaps]] counts the
+    * partners in one per-document hash map, computing jaccard =
+    * |∩| / (|A|+|B|-|∩|) from the carried sizes (counts over ALL distinct
+    * shingles, so the pruned jaccard is a lower bound of exact) and keeping
+    * only pairs at or above the floor. No row per candidate pair is ever
+    * shuffled or aggregated, no hash aggregate collects a list, and no join
+    * is needed for the sizes. A posting list is buffered up to
+    * [[MaxShingleDf]] + 1 entries, and a probe doc holds at most
+    * n·([[MaxShingleDf]] − 1) partner entries, so memory stays df-capped
+    * at any corpus size. Both shuffles take `spark.sql.shuffle.partitions`
+    * partitions, which AQE leaves uncoalesced, so every core gets a share.
     */
   def ngramJaccardPairs(spark: SparkSession, dir: String): DataFrame =
     ngramJaccardPairsOn(docs(spark, dir), 0.05)
@@ -100,36 +106,41 @@ object DedupOps {
     */
   private[ops] def ngramJaccardPairsOn(d: DataFrame, minJaccard: Double): DataFrame = {
     // A NULL id or text never pairs. Dropping those rows up front lets the
-    // posting fields be typed non-null, as the partner arrays must be.
+    // entries be typed non-null, as the typed run stages below read them.
     // Shuffling the 60-bit hash, not the ~25-byte shingle string, keeps the
     // posting shuffle small; the oracle hashes the same way, so a hash
     // collision (~|shingles|²/2^61 per doc) over-counts a pair's
     // intersection IDENTICALLY in both engines. A within-doc collision puts
     // the doc twice in one posting list (the native shingle expression
-    // dedupes by shingle STRING, as array_distinct had it); PartnerOverlaps
-    // skips the resulting self-partner, as a self-join's a < b would.
+    // dedupes by shingle STRING, as array_distinct had it); it sorts next
+    // to itself, and partnerOverlaps skips the resulting self-partner, as
+    // a self-join's a < b would.
     //
     // explode_outer then a NULL-h drop, not explode: for explode the
     // optimizer infers size(shingles) > 0 and pushes it below this
     // projection, where it re-hashes every document's shingles
     val entries = hashedShinglesOn(
         d.filter(col("doc_id").isNotNull && col("text").isNotNull))
-      .select(nonNull(col("doc_id")).as("doc_id"),
-        nonNull(size(col("shingles"))).as("n"),
-        explode_outer(col("shingles")).as("h"))
+      .select(explode_outer(col("shingles")).as("h"),
+        nonNull(col("doc_id")).as("doc_id"),
+        nonNull(size(col("shingles"))).as("n"))
       .filter(col("h").isNotNull)
-    val postings = entries.groupBy("h")
-      .agg(sort_array(collect_list(struct(col("doc_id"), col("n")))).as("docs"))
-      .filter(size(col("docs")).between(2, MaxShingleDf))
-    postings
-      .select(explode(graft.functions.TextShingles.postingTailsCol(
-        col("docs.doc_id"), col("docs.n"))).as("t"))
-      .groupBy(col("t.doc_a").as("doc_a"), col("t.na").as("na"))
-      .agg(collect_list(col("t.tail")).as("tails"))
-      .select(col("doc_a"), explode(graft.functions.TextShingles.partnerOverlapsCol(
-        col("doc_a"), col("na"), col("tails"), minJaccard)).as("p"))
-      .select(col("doc_a"), col("p.doc_b").as("doc_b"), col("p.inter").as("inter"),
-        col("p.jaccard").as("jaccard"))
+    // Each stage below hash-partitions its input into a fixed count: AQE
+    // sizes partitions by bytes and would coalesce these stages, whose cost
+    // grows with the square of each list's length, onto a few cores. Each
+    // partition is sorted so that a posting list, and a probe doc's tails,
+    // is one run of equal key, read by one pass with no aggregate buffer.
+    import d.sparkSession.implicits._
+    val parts = d.sparkSession.sessionState.conf.numShufflePartitions
+    entries
+      .repartition(parts, col("h")).sortWithinPartitions("h", "doc_id")
+      .as[(Long, Long, Int)]
+      .mapPartitions(graft.functions.TextShingles.postingRunTails(_, MaxShingleDf))
+      .toDF("doc_a", "na", "tail")
+      .repartition(parts, col("doc_a")).sortWithinPartitions("doc_a")
+      .as[(Long, Int, Array[Byte])]
+      .mapPartitions(graft.functions.TextShingles.partnerRunOverlaps(_, minJaccard))
+      .toDF("doc_a", "doc_b", "inter", "jaccard")
       .orderBy("doc_a", "doc_b")
   }
 

@@ -42,9 +42,9 @@ object MultimodalOps {
 
   /** Frame-sampling plumbing (the video analog): split the payload into
     * fixed-size "frames" and emit every `stride`-th one — the 1-row-in /
-    * k-rows-out explode shape a real ffmpeg sampler has, with pooled
-    * per-partition decoder state; the per-frame decode is the stub (mean
-    * byte value).
+    * k-rows-out explode shape a real ffmpeg sampler has. There is no
+    * decoder and no per-partition state: each sampled frame's mean byte
+    * value is averaged inline, standing in for a decode.
     */
   def sampleFrames(
       media: Dataset[MediaRow],

@@ -118,29 +118,19 @@ class ShingleSpec extends AnyFunSuite {
     }
   }
 
-  test("OrderedPairs, PostingTails and PartnerOverlaps reject inputs they cannot read") {
+  test("OrderedPairs rejects inputs it cannot read") {
     import spark.implicits._
     import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
     import org.apache.spark.sql.types._
     def typed(t: DataType): Expression = Literal.create(null, t)
     val longs = ArrayType(LongType, containsNull = false)
     val ints = ArrayType(IntegerType, containsNull = false)
-    val bins = ArrayType(BinaryType, containsNull = false)
     def ok(e: Expression) = e.checkInputDataTypes().isSuccess
     assert(ok(OrderedPairs(typed(longs))))
-    assert(ok(PostingTails(typed(longs), typed(ints))))
-    assert(ok(PartnerOverlaps(typed(LongType), typed(IntegerType), typed(bins), 0.5)))
-    // a NULL element would be read as 0 (or throw): rejected at analysis
+    // a NULL element would be read as 0: rejected at analysis
     assert(!ok(OrderedPairs(typed(ArrayType(LongType, containsNull = true)))))
-    assert(!ok(PostingTails(typed(ArrayType(LongType, containsNull = true)), typed(ints))))
-    assert(!ok(PostingTails(typed(longs), typed(ArrayType(IntegerType, containsNull = true)))))
-    assert(!ok(PartnerOverlaps(typed(LongType), typed(IntegerType),
-      typed(ArrayType(BinaryType, containsNull = true)), 0.5)))
-    // and mistyped arguments
+    // and a mistyped argument
     assert(!ok(OrderedPairs(typed(ints))))
-    assert(!ok(PostingTails(typed(ints), typed(ints))))
-    assert(!ok(PartnerOverlaps(typed(LongType), typed(LongType), typed(bins), 0.5)))
-    assert(!ok(PartnerOverlaps(typed(LongType), typed(IntegerType), typed(longs), 0.5)))
     // through the DataFrame API the rejection is an analysis error
     val withNulls = Seq(Seq(Some(1L), None, Some(3L))).toDF("xs")
     intercept[org.apache.spark.sql.AnalysisException] {
@@ -148,22 +138,13 @@ class ShingleSpec extends AnyFunSuite {
     }
   }
 
-  test("PartnerOverlaps on crafted tails: duplicated partner, self partner, empty tail, pair at tau") {
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.sql.types._
+  test("partnerOverlaps on crafted tails: duplicated partner, self partner, empty tail, pair at tau") {
     // the tail probe `a` gets from one posting list whose later entries are
-    // (ids, ns) — PostingTails' own encoding
+    // (ids, ns) — postingTails' own encoding
     def tail(a: Long, na: Int, ids: Seq[Long], ns: Seq[Int]): Array[Byte] =
       TextShingles.postingTails((a +: ids).toArray, (na +: ns).toArray).head._3
-    def overlaps(a: Long, na: Int, tails: Seq[Array[Byte]], tau: Double) = {
-      val e = PartnerOverlaps(Literal(a), Literal(na),
-        Literal.create(tails, ArrayType(BinaryType, containsNull = false)), tau)
-      val out = e.eval().asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-      (0 until out.numElements()).map { i =>
-        val r = out.getStruct(i, 3)
-        (r.getLong(0), r.getLong(1), r.getDouble(2))
-      }
-    }
+    def overlaps(a: Long, na: Int, tails: Seq[Array[Byte]], tau: Double) =
+      TextShingles.partnerOverlaps(a, na, tails.toArray, tau).toSeq
     val a = 10L
     val tails = Seq(
       // a within-doc collision: `a` itself is the next entry, then 12
@@ -181,9 +162,6 @@ class ShingleSpec extends AnyFunSuite {
     assert(overlaps(a, 3, Seq(tail(a, 3, Seq(10L), Seq(3))), 0.0).isEmpty)
     assert(overlaps(a, 3, Seq(Array.emptyByteArray), 0.0).isEmpty)
     assert(overlaps(a, 3, Nil, 0.0).isEmpty)
-    // any NULL input is a NULL result
-    assert(PartnerOverlaps(Literal.create(null, LongType), Literal(3),
-      Literal.create(Nil, ArrayType(BinaryType, containsNull = false)), 0.0).eval() == null)
   }
 
   test("PostingTails + PartnerOverlaps == all-ordered-pairs counts (random lists, extreme ids)") {
@@ -210,5 +188,55 @@ class ShingleSpec extends AnyFunSuite {
     }
     assert(got.map(_._1).distinct.size == got.size, "a pair came out twice")
     assert(got.toMap == want)
+  }
+
+  test("sorted-run streams == postingTails/partnerOverlaps over hand-grouped lists") {
+    val maxDf = graft.ops.DedupOps.MaxShingleDf
+    def n(id: Long): Int = 3 + (id % 5).toInt
+    // posting lists by hash, ids ascending: runs of 1, 2, maxDf and
+    // maxDf + 1 entries, and a doc twice in one list (a within-doc
+    // collision)
+    val lists = Seq(
+      10L -> Seq(4L),
+      11L -> Seq(4L, 9L),
+      12L -> (1L to maxDf.toLong),
+      13L -> (1L to maxDf + 1L),
+      14L -> Seq(2L, 7L, 7L, 9L))
+    def entries(ls: Seq[(Long, Seq[Long])]) =
+      ls.flatMap { case (h, ids) => ids.map(id => (h, id, n(id))) }
+    def want(ls: Seq[(Long, Seq[Long])]) = ls.flatMap { case (_, ids) =>
+      if (ids.size > maxDf) Nil
+      else TextShingles.postingTails(ids.toArray, ids.map(n).toArray).toSeq
+    }
+    def show(ts: Iterable[(Long, Int, Array[Byte])]) =
+      ts.map { case (a, na, t) => (a, na, t.toSeq) }.toSeq
+    def runs(ls: Seq[(Long, Seq[Long])]) =
+      TextShingles.postingRunTails(entries(ls).iterator, maxDf).toSeq
+    // the stream (the partition) ends inside an open run: a kept list, a
+    // hot list, and a hot list cut after more than maxDf + 1 entries
+    for (last <- Seq(16L -> Seq(3L, 5L, 8L), 13L -> (1L to maxDf + 1L),
+        15L -> (1L to 3L * maxDf))) {
+      val ls = lists :+ last
+      assert(show(runs(ls)) == show(want(ls)), s"ending in list ${last._1}")
+    }
+    assert(runs(Nil).isEmpty)
+    assert(runs(Seq(10L -> Seq(4L), 13L -> (1L to maxDf + 1L))).isEmpty)
+
+    // partner runs: each probe doc's tails, grouped by hand, through
+    // partnerOverlaps; the run stream sees them sorted by doc only
+    val tails = want(lists)
+    for (tau <- Seq(0.0, 0.3, 1.0)) {
+      val byHand = tails.groupBy(_._1).toSeq.sortBy(_._1).flatMap { case (a, ts) =>
+        TextShingles.partnerOverlaps(a, ts.head._2, ts.map(_._3).toArray, tau)
+          .map { case (b, inter, j) => (a, b, inter, j) }
+      }
+      val got = TextShingles.partnerRunOverlaps(tails.sortBy(_._1).iterator, tau).toSeq
+      assert(got == byHand, s"tau $tau")
+      // doc 7 pairs with 9 through list 14 but never with itself
+      assert(!got.exists(r => r._1 == r._2))
+    }
+    val all = TextShingles.partnerRunOverlaps(tails.sortBy(_._1).iterator, 0.0).toSeq
+    assert(all.exists(r => r._1 == 7L && r._2 == 9L))
+    assert(TextShingles.partnerRunOverlaps(Iterator.empty, 0.0).isEmpty)
   }
 }

@@ -73,5 +73,9 @@ class CurationSpec extends AnyFunSuite {
       .queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct"), "cartesian in funnel plan")
     assert(!plan.contains("BroadcastNestedLoopJoin"), "BNLJ in funnel plan")
+    // the near-dup pair stage streams sorted runs: no list-collecting
+    // aggregate anywhere in the funnel
+    for (op <- Seq("collect_list", "sort_array", "ObjectHashAggregate"))
+      assert(!plan.contains(op), s"$op in funnel plan:\n$plan")
   }
 }

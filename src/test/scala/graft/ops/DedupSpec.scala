@@ -85,7 +85,53 @@ class DedupSpec extends AnyFunSuite {
     // partners are counted per probe doc, not exploded into pair rows
     assert(!plan.toLowerCase.contains("join"), plan)
     assert(!plan.toLowerCase.contains("orderedpairs"), plan)
-    assert(plan.toLowerCase.contains("partneroverlaps"), plan)
+    // posting lists and partner groups are sorted runs, not collected lists
+    for (op <- Seq("collect_list", "sort_array", "ObjectHashAggregate"))
+      assert(!plan.contains(op), s"$op in d2 plan:\n$plan")
+  }
+
+  test("d2 posting stage runs one task per shuffle partition under AQE") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted,
+      SparkListenerStageSubmitted}
+    val sc = spark.sparkContext
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    val parts = spark.sessionState.conf.numShufflePartitions
+    val ours = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    // (stage id, tasks, shuffle records read) of every stage d2 runs
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Int, Long)]()
+    val marked = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = {
+        val group = Option(e.properties).map(_.getProperty("spark.jobGroup.id"))
+        if (group.contains("d2-stages")) ours.add(e.stageInfo.stageId)
+        if (group.contains("d2-marker")) marked.countDown()
+      }
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        val i = e.stageInfo
+        if (ours.contains(i.stageId))
+          stages.add((i.stageId, i.numTasks,
+            i.taskMetrics.shuffleReadMetrics.recordsRead))
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("d2-stages", "d2 stages")
+      val n = DedupOps.ngramJaccardPairs(spark, sfDir).count()
+      assert(n > 0)
+      // events reach listeners in order: once this marker's stage is
+      // submitted, every stage d2 ran has been seen completing
+      sc.setJobGroup("d2-marker", "marker")
+      spark.range(1).count()
+      sc.clearJobGroup()
+      assert(marked.await(30, java.util.concurrent.TimeUnit.SECONDS),
+        "marker stage never reached the listener")
+      import scala.jdk.CollectionConverters._
+      // the posting stage is the first to read the entries' shuffle
+      val posting = stages.asScala.toSeq.filter(_._3 > 0).sortBy(_._1).headOption
+        .getOrElse(fail(s"no shuffle-reading stage among $stages"))
+      assert(posting._2 == parts,
+        s"posting stage ran ${posting._2} tasks for $parts shuffle partitions: $stages")
+    } finally sc.removeSparkListener(listener)
   }
 
   test("d2 building the DataFrame and its plan starts no Spark job") {
