@@ -14,6 +14,15 @@ object Verify {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    dump(spark, sfDir, outDir)
+    spark.stop()
+  }
+
+  /** Writes each query's result over `sfDir` to `outDir/<name>` as parquet
+    * and every oracle SQL string to `outDir/oracle_sql.json`, the input of
+    * `tools/check_oracle.py <sfDir> <outDir>`.
+    */
+  def dump(spark: SparkSession, sfDir: String, outDir: String): Unit = {
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
@@ -42,6 +51,5 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
   }
 }

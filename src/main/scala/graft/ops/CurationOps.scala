@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** c1 — the composed training-data curation funnel over `documents`: the
@@ -14,7 +15,7 @@ import org.apache.spark.sql.functions._
   *   1 lang     — t1's stopword language pick != 'und'
   *   2 quality  — t2's keep flag (n_chars >= 100 AND n_tokens >= 20)
   *   3 exact    — d1 semantics: min doc_id per md5(text) group among
-  *                stage-2 survivors (one hash-aggregate + semi join)
+  *                stage-2 survivors (one window over the content hash)
   *   4 neardup  — d2's df-pruned posting-list jaccard pairs at tau = 0.8
   *                among stage-3 survivors; DROP every doc that pairs with
   *                a smaller doc_id. One-pass pair-min-id semantics, by
@@ -28,22 +29,21 @@ import org.apache.spark.sql.functions._
   * Scale shape — the funnel is computed as each document's LAST SURVIVING
   * STAGE, not as five per-stage aggregation passes: the flag columns
   * (language pick, quality flag, content hash, token count) are projected
-  * in one pass, the exact-dedup keeper set is one hash shuffle on
-  * content_hash over the ALREADY-FILTERED stage-2 survivors (doc_id +
-  * 128-bit hash only — text never rides that exchange), the near-dup drop
-  * set reuses d2's posting-list machinery over the stage-3 survivors (ONE
-  * shuffle on the 60-bit shingle hash, sorted so each df-capped posting
-  * list is one run, ONE more sorted so each doc's packed partner tails are
-  * one run, whose overlaps are counted per document — no row per candidate
-  * pair, no join, no list-collecting aggregate), and the
-  * five funnel rows come from ONE `explode(sequence(0,
+  * in one pass, and one window over content_hash (the flag columns ride
+  * that exchange, text never does) marks each stage-2 survivor that is
+  * its hash's min doc_id as the exact-dedup keeper. That spine is
+  * checkpointed once (see [[stagedDocs]] for why). The near-dup drop set
+  * reuses d2's posting-list machinery over the keepers' text (ONE shuffle
+  * on the 60-bit shingle hash, sorted so each df-capped posting list is
+  * one run, ONE more sorted so each doc's packed partner tails are one
+  * run, whose overlaps are counted per document — no row per candidate
+  * pair, no join, no list-collecting aggregate) and meets the spine in
+  * one left join. The five funnel rows come from ONE `explode(sequence(0,
   * last_stage))` over a 2-column frame whose hash-aggregate map-side
   * combines to ≤5 rows per partition before its only shuffle. Filters run
   * BEFORE the expensive pair stage, exactly how a 100 TB curation run
   * must be ordered; the funnel accounting itself adds no per-stage corpus
-  * re-scan (a production run would additionally persist the flagged
-  * projection, collapsing the keeper/drop subtrees onto one materialized
-  * scan). No UDFs, no driver-side loops.
+  * re-scan. No UDFs, no driver-side loops.
   */
 object CurationOps {
 
@@ -51,65 +51,50 @@ object CurationOps {
 
   /** Per-document curation verdict: (doc_id, lang_pred, n_bpe,
     * last_stage) where last_stage is the LAST funnel stage the doc
-    * survives — 0 all / 1 lang / 2 quality / 3 exact / 4 neardup. The
-    * keeper/drop joins are left joins against marker frames so every doc
-    * keeps exactly one row. Shared spine of c1 (funnel report) and c2
-    * (curated output set).
+    * survives — 0 all / 1 lang / 2 quality / 3 exact / 4 neardup. A NULL
+    * text has no language pick, so it survives only stage 0, as in the
+    * oracle (where `lang_pred <> 'und'` is NULL). The exact-dedup keeper
+    * is one window: a stage-2 survivor whose doc_id is the min over its
+    * content_hash's stage-2 survivors (a NULL doc_id is never one). The
+    * near-dup drop set is one left join, so every doc keeps exactly one
+    * row. Shared spine of c1 (funnel report), c2 (curated output set) and
+    * c3 (mixture).
     */
   private def stagedDocs(spark: SparkSession, dir: String): DataFrame = {
-    val txt = col("text")
-    // ONE evaluation of the expensive per-doc flags: without a
-    // materialization barrier the three consumers below (keeper set,
-    // near-dup pair stage, final verdict) each re-derive this projection —
-    // the executed plan grows 8 parquet scans and ~5 evaluations of the
-    // regex-heavy flag expressions, because predicate pushdown splinters
-    // each branch's filters below any shared exchange and ReuseExchange
-    // never fires. localCheckpoint is the in-session form of the "persist
-    // the flagged projection" production note above: the spine computes
-    // once and every branch reads the materialized blocks (on a real
-    // cluster, checkpoint() to durable storage for executor-loss safety).
-    // Deliberately WITHOUT text: persisting text would duplicate the
-    // corpus into cache storage; the one consumer that needs it (the
-    // near-dup pair stage) re-reads the text COLUMN from parquet for the
-    // already-thinned stage-3 survivor set instead — a pruned columnar
-    // scan semi-joined on the survivor ids, which at 100 TB is far
-    // cheaper than materializing every document's text a second time.
-    // The four flags come from ONE native pass per row
-    // ([[graft.functions.CurationFlags]] — FlagsSpec pins it value-equal
-    // to the declarative TextOps formulations the t1/t2/t3 oracles mirror).
     // Both scans share this one read, so its schema is inferred by one job
     val documents = spark.read.parquet(s"$dir/documents.parquet")
+    val s2 = col("lang_pred") =!= "und" && col("qual_ok")
+    // The flags come from ONE native pass per row
+    // ([[graft.functions.CurationFlags]], value-equal to the TextOps forms
+    // the t1/t2/t3 oracles mirror). The checkpoint keeps it one: without it
+    // the keeper ids and the final verdict each prune the window's input
+    // differently, ReuseExchange does not fire, and the flags and the window
+    // run twice (traced curate_neardup: one more exchange, ~40% more task
+    // time). It holds no text; the near-dup stage re-reads that column for
+    // the keepers only.
     val base = documents
       .select(col("doc_id"),
-        graft.functions.TextFlags.curationFlagsCol(txt).as("f"))
-      .select(col("doc_id"), col("f.lang_pred").as("lang_pred"),
-        col("f.qual_ok").as("qual_ok"),
-        col("f.content_hash").as("content_hash"), col("f.n_bpe").as("n_bpe"))
+        graft.functions.TextFlags.curationFlagsCol(col("text")).as("f"))
+      .select(col("doc_id"), col("f.*"))
+      .select(col("doc_id"), col("lang_pred"), col("qual_ok"), col("n_bpe"),
+        coalesce(s2 && col("doc_id") === min(when(s2, col("doc_id")))
+          .over(Window.partitionBy(col("content_hash"))), lit(false))
+          .as("keeper"))
       .localCheckpoint()
-    val s2cond = col("lang_pred") =!= "und" && col("qual_ok")
 
-    // d1 semantics among stage-2 survivors: keeper = min doc_id per
-    // content hash (only doc_id + content_hash cross this exchange)
-    val keepers = base.filter(s2cond).groupBy(col("content_hash"))
-      .agg(min(col("doc_id")).as("doc_id"))
-      .select(col("doc_id"))
-    val s3ids = base.filter(s2cond).select(col("doc_id"))
-      .join(keepers, Seq("doc_id"), "left_semi")
-    // d2 pairs at tau among stage-3 survivors; drop the larger id of each.
-    // Text rejoins here from a doc_id+text-pruned scan (see above).
-    val s3text = documents.select(col("doc_id"), col("text"))
-      .join(s3ids, Seq("doc_id"), "left_semi")
+    // d2 pairs at tau among the keepers; drop the larger id of each
+    val keeperText = documents.select(col("doc_id"), col("text"))
+      .join(base.filter(col("keeper")).select(col("doc_id")), Seq("doc_id"),
+        "left_semi")
     val drops = DedupOps
-      .ngramJaccardPairsOn(s3text, NearDupTau)
+      .ngramJaccardPairsOn(keeperText, NearDupTau)
       .select(col("doc_b").as("doc_id")).distinct()
 
-    base
-      .join(keepers.withColumn("is_keeper", lit(true)), Seq("doc_id"), "left")
-      .join(drops.withColumn("nd_drop", lit(true)), Seq("doc_id"), "left")
+    base.join(drops.withColumn("nd_drop", lit(true)), Seq("doc_id"), "left")
       .select(col("doc_id"), col("lang_pred"), col("n_bpe"),
-        when(col("lang_pred") === "und", 0)
+        when(col("lang_pred").isNull || col("lang_pred") === "und", 0)
           .when(!col("qual_ok"), 1)
-          .when(col("is_keeper").isNull, 2)
+          .when(!col("keeper"), 2)
           .when(col("nd_drop").isNotNull, 3)
           .otherwise(4).as("last_stage"))
   }
@@ -147,7 +132,7 @@ object CurationOps {
       .orderBy("doc_id")
 
   /** Shared DuckDB CTE prefix: base flags + the four survivor stages; the
-    * near-dup stage repeats d2's posting-list SQL (df cap 100, 60-bit
+    * near-dup stage is d2's oracle pair CTEs (df cap 100, 60-bit
     * md5-prefix hash) over the stage-3 survivors with the tau floor.
     */
   private def curationCtes: String =
@@ -162,22 +147,9 @@ object CurationOps {
        s2 AS (SELECT * FROM s1 WHERE qual_ok),
        k AS (SELECT min(doc_id) AS doc_id FROM s2 GROUP BY content_hash),
        s3 AS (SELECT s2.* FROM s2 JOIN k USING (doc_id)),
-       toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM s3),
-       sh AS (SELECT doc_id, unnest(list_distinct(list_transform(
-                generate_series(1, greatest(len(t)-2, 0)),
-                i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS shingle
-              FROM toks),
-       cnt AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-       hs AS (SELECT doc_id, (('0x' || substr(md5(shingle), 1, 15))::BIGINT) AS h FROM sh),
-       keep AS (SELECT h FROM hs GROUP BY 1 HAVING count(*) <= 100),
-       pr AS (SELECT hs.doc_id, hs.h FROM hs JOIN keep USING (h)),
-       pairs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-                 FROM pr a JOIN pr b ON a.h = b.h AND a.doc_id < b.doc_id
-                 GROUP BY 1, 2),
-       drops AS (SELECT DISTINCT doc_b AS doc_id
-                 FROM pairs JOIN cnt ca ON doc_a = ca.doc_id
-                 JOIN cnt cb ON doc_b = cb.doc_id
-                 WHERE CAST(inter AS DOUBLE) / (ca.n + cb.n - inter) >= $NearDupTau),
+       ${DedupOps.shingleCtes("s3")},
+       ${DedupOps.jaccardPairCtes(NearDupTau)},
+       drops AS (SELECT DISTINCT doc_b AS doc_id FROM jpairs),
        s4 AS (SELECT * FROM s3 WHERE doc_id NOT IN (SELECT doc_id FROM drops))"""
 
   def curationFunnelSql: String =

@@ -151,25 +151,9 @@ object DedupOps {
     AssertNotNull(GraftColumns.expression(c)))
 
   def ngramJaccardSql: String =
-    """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-       sh AS (SELECT doc_id, unnest(list_distinct(list_transform(
-                generate_series(1, greatest(len(t)-2, 0)),
-                i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS shingle
-              FROM toks),
-       cnt AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
-       hs AS (SELECT doc_id, (('0x' || substr(md5(shingle), 1, 15))::BIGINT) AS h FROM sh),
-       keep AS (SELECT h FROM hs GROUP BY 1 HAVING count(*) <= 100),
-       pr AS (SELECT hs.doc_id, hs.h FROM hs JOIN keep USING (h)),
-       pairs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
-                 FROM pr a JOIN pr b ON a.h = b.h AND a.doc_id < b.doc_id
-                 GROUP BY 1, 2)
-       SELECT doc_a, doc_b, inter,
-              CAST(inter AS DOUBLE) / (ca.n + cb.n - inter) AS jaccard
-       FROM pairs
-       JOIN cnt ca ON doc_a = ca.doc_id
-       JOIN cnt cb ON doc_b = cb.doc_id
-       WHERE CAST(inter AS DOUBLE) / (ca.n + cb.n - inter) >= 0.05
-       ORDER BY doc_a, doc_b"""
+    s"""WITH ${shingleCtes("documents")},
+       ${jaccardPairCtes(0.05)}
+       SELECT doc_a, doc_b, inter, jaccard FROM jpairs ORDER BY doc_a, doc_b"""
 
   /** Portable 60-bit token hash (first 15 hex chars of md5 as bigint) in
     * DuckDB-SQL form; the JVM twin is [[graft.functions.TextShingles.hash60]]
@@ -177,6 +161,37 @@ object DedupOps {
     */
   private def tokHashSql(e: String): String =
     s"(('0x' || substr(md5($e), 1, 15))::BIGINT)"
+
+  /** The oracles' shingle CTEs over `src`'s (doc_id, text): `toks` (the
+    * space-split tokens), `sh` (each doc's distinct word-3-grams, none
+    * under 3 tokens) and `hs` (their 60-bit hashes, one row per shingle).
+    */
+  private[ops] def shingleCtes(src: String): String =
+    s"""toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM $src),
+       sh AS (SELECT doc_id, unnest(list_distinct(list_transform(
+                generate_series(1, greatest(len(t)-2, 0)),
+                i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS shingle
+              FROM toks),
+       hs AS (SELECT doc_id, ${tokHashSql("shingle")} AS h FROM sh)"""
+
+  /** d2's oracle pair CTEs over [[shingleCtes]]: `cnt` (shingles per doc),
+    * `keep` (hashes with df ≤ [[MaxShingleDf]]), `pr` (their postings),
+    * `pairs` (shared kept hashes per doc pair, doc_a < doc_b) and `jpairs`
+    * (the pairs whose jaccard reaches `minJaccard`, with inter and jaccard).
+    */
+  private[ops] def jaccardPairCtes(minJaccard: Double): String =
+    s"""cnt AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY 1),
+       keep AS (SELECT h FROM hs GROUP BY 1 HAVING count(*) <= $MaxShingleDf),
+       pr AS (SELECT hs.doc_id, hs.h FROM hs JOIN keep USING (h)),
+       pairs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
+                 FROM pr a JOIN pr b ON a.h = b.h AND a.doc_id < b.doc_id
+                 GROUP BY 1, 2),
+       jpairs AS (SELECT doc_a, doc_b, inter,
+                         CAST(inter AS DOUBLE) / (ca.n + cb.n - inter) AS jaccard
+                  FROM pairs
+                  JOIN cnt ca ON doc_a = ca.doc_id
+                  JOIN cnt cb ON doc_b = cb.doc_id
+                  WHERE CAST(inter AS DOUBLE) / (ca.n + cb.n - inter) >= $minJaccard)"""
 
   /** XOR-mix constants for the MinHash family (fixed, engine-neutral). */
   val MinHashSeeds: Seq[Long] = Seq(
@@ -215,19 +230,27 @@ object DedupOps {
       MinHashSeeds.indices.map(k => col("sigs").getItem(k).as(s"mh$k")): _*)
   }
 
-  def minhashSql: String = {
+  def minhashSql: String =
+    s"""WITH ${shingleCtes("documents")},
+       $minhashCte
+       SELECT * FROM mh ORDER BY doc_id"""
+
+  /** The oracles' MinHash CTE over [[shingleCtes]]: `mh` (doc_id, mh0..mh7). */
+  private def minhashCte: String = {
     val mins = MinHashSeeds.zipWithIndex.map { case (seed, k) =>
       s"min(xor(h, ${seed}::BIGINT)) AS mh$k"
-    }.mkString(",\n        ")
-    s"""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-       sh AS (SELECT doc_id, unnest(list_distinct(list_transform(
-                generate_series(1, greatest(len(t)-2, 0)),
-                i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS shingle
-              FROM toks),
-       hs AS (SELECT doc_id, ${tokHashSql("shingle")} AS h FROM sh)
-       SELECT doc_id,
-        $mins
-       FROM hs GROUP BY doc_id ORDER BY doc_id"""
+    }.mkString(", ")
+    s"mh AS (SELECT doc_id, $mins FROM hs GROUP BY doc_id)"
+  }
+
+  /** The oracles' LSH band CTE over [[minhashCte]]: `bands` (doc_id, band,
+    * key), 4 bands of 2 minhash rows each.
+    */
+  private def bandsCte: String = {
+    val selects = (0 until 4).map { b =>
+      s"SELECT doc_id, $b AS band, mh${2 * b} || '_' || mh${2 * b + 1} AS key FROM mh"
+    }.mkString("\n         UNION ALL ")
+    s"bands AS ($selects)"
   }
 
   /** LSH banding over the MinHash signature (4 bands × 2 rows): docs
@@ -262,25 +285,14 @@ object DedupOps {
       .distinct()
   }
 
-  def lshPairsSql: String = {
-    val bandSelects = (0 until 4).map { b =>
-      s"SELECT doc_id, $b AS band, mh${2 * b} || '_' || mh${2 * b + 1} AS key FROM mh"
-    }.mkString("\n         UNION ALL ")
-    s"""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-       sh AS (SELECT doc_id, unnest(list_distinct(list_transform(
-                generate_series(1, greatest(len(t)-2, 0)),
-                i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS shingle
-              FROM toks),
-       hs AS (SELECT doc_id, ${tokHashSql("shingle")} AS h FROM sh),
-       mh AS (SELECT doc_id,
-        ${MinHashSeeds.zipWithIndex.map { case (s, k) => s"min(xor(h, ${s}::BIGINT)) AS mh$k" }.mkString(", ")}
-        FROM hs GROUP BY doc_id),
-       bands AS ($bandSelects)
+  def lshPairsSql: String =
+    s"""WITH ${shingleCtes("documents")},
+       $minhashCte,
+       $bandsCte
        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
        FROM bands a JOIN bands b
          ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id
        ORDER BY doc_a, doc_b"""
-  }
 
   /** Embedding-cosine near-dup: top-50 most-similar vector pairs, exact.
     * Brute-force pair scoring is the exactness baseline (the synthetic
@@ -663,20 +675,10 @@ object DedupOps {
       .distinct()
   }
 
-  def lshClustersSql: String = {
-    val bandSelects = (0 until 4).map { b =>
-      s"SELECT doc_id, $b AS band, mh${2 * b} || '_' || mh${2 * b + 1} AS key FROM mh"
-    }.mkString("\n         UNION ALL ")
-    s"""WITH RECURSIVE toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-       sh AS (SELECT doc_id, unnest(list_distinct(list_transform(
-                generate_series(1, greatest(len(t)-2, 0)),
-                i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS shingle
-              FROM toks),
-       hs AS (SELECT doc_id, ${tokHashSql("shingle")} AS h FROM sh),
-       mh AS (SELECT doc_id,
-        ${MinHashSeeds.zipWithIndex.map { case (s, k) => s"min(xor(h, ${s}::BIGINT)) AS mh$k" }.mkString(", ")}
-        FROM hs GROUP BY doc_id),
-       bands AS ($bandSelects),
+  def lshClustersSql: String =
+    s"""WITH RECURSIVE ${shingleCtes("documents")},
+       $minhashCte,
+       $bandsCte,
        pairs AS (SELECT DISTINCT a.doc_id AS s, b.doc_id AS d
                  FROM bands a JOIN bands b
                    ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id),
@@ -692,7 +694,6 @@ object DedupOps {
        SELECT doc_id, cluster_id,
               count(*) OVER (PARTITION BY cluster_id) AS cluster_size
        FROM lbl ORDER BY doc_id"""
-  }
 
   /** The (doc_id, band, key) LSH band index over any (doc_id, text) frame
     * — the d4 banding (4 bands × 2 minhash rows, same seeds/hash) as a
@@ -768,12 +769,7 @@ object DedupOps {
   }
 
   def decontaminateSql: String =
-    s"""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-       sh AS (SELECT doc_id, unnest(list_distinct(list_transform(
-                generate_series(1, greatest(len(t)-2, 0)),
-                i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS shingle
-              FROM toks),
-       hs AS (SELECT doc_id, ${tokHashSql("shingle")} AS h FROM sh),
+    s"""WITH ${shingleCtes("documents")},
        bench AS (SELECT DISTINCT h FROM hs WHERE doc_id % $BenchmarkMod = 0)
        SELECT doc_id, count(DISTINCT h) AS n_overlap
        FROM hs JOIN bench USING (h)
@@ -926,12 +922,7 @@ object DedupOps {
        ORDER BY a.vec_id"""
 
   def boilerplateSql: String =
-    s"""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-       sh AS (SELECT doc_id, unnest(list_distinct(list_transform(
-                generate_series(1, greatest(len(t)-2, 0)),
-                i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))) AS shingle
-              FROM toks),
-       hs AS (SELECT doc_id, ${tokHashSql("shingle")} AS h FROM sh),
+    s"""WITH ${shingleCtes("documents")},
        dfq AS (SELECT h, count(*) AS df FROM hs GROUP BY 1),
        n AS (SELECT count(*) AS n_corpus FROM documents),
        hot AS (SELECT h FROM dfq, n

@@ -20,6 +20,11 @@ import org.apache.spark.sql.SparkSession
   *    dropped. One-pass pair-min-id semantics, asserted by survivor
   *    count 2 (a partner-survival rule would leave 3).
   *  - docs 1 (en) and 5 (es) survive everything.
+  *  - doc 8 has NULL text → no language pick, dropped at stage 1 (lang),
+  *    as the oracle's `lang_pred <> 'und'` (NULL) drops it
+  *  - a doc with NULL doc_id passes lang and quality but is never an
+  *    exact-dedup keeper → dropped at stage 3 (exact), as the oracle's
+  *    keeper join drops it
   */
 class CurationSpec extends AnyFunSuite {
 
@@ -45,16 +50,19 @@ class CurationSpec extends AnyFunSuite {
     val doc6 = words(30, "g").mkString(" ")
     val doc7 = "short text the"
 
+    val docNullId = (Vector("the") ++ words(100, "n")).mkString(" ")
+
     val dir = java.nio.file.Files.createTempDirectory("curation").toString
-    Seq((1L, doc1), (2L, doc1), (3L, doc3), (4L, doc4), (5L, doc5),
-      (6L, doc6), (7L, doc7))
+    (Seq((1L, doc1), (2L, doc1), (3L, doc3), (4L, doc4), (5L, doc5),
+      (6L, doc6), (7L, doc7)).map { case (id, t) => (Option(id), Option(t)) } ++
+      Seq((Some(8L), None), (None, Some(docNullId))))
       .toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
 
     val rows = CurationOps.curationFunnel(spark, dir).collect()
       .map(r => (r.getInt(0), r.getString(1), r.getLong(2), r.getLong(3)))
     assert(rows.map(t => (t._1, t._2, t._3)).toSeq == Seq(
-      (0, "all", 7L), (1, "lang", 6L), (2, "quality", 5L),
+      (0, "all", 9L), (1, "lang", 7L), (2, "quality", 6L),
       (3, "exact", 4L), (4, "neardup", 2L)))
     // token budget is positive and non-increasing down the funnel
     val toks = rows.map(_._4)
@@ -69,13 +77,55 @@ class CurationSpec extends AnyFunSuite {
   }
 
   test("funnel plans without cartesian products or nested-loop joins") {
-    val plan = CurationOps.curationFunnel(spark, "/root/testdata/sf0.001")
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("CartesianProduct"), "cartesian in funnel plan")
-    assert(!plan.contains("BroadcastNestedLoopJoin"), "BNLJ in funnel plan")
+    import org.apache.spark.sql.catalyst.plans.LeftSemi
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    // c1 runs its checkpointed spine as a query of its own when the
+    // DataFrame is built; the listener catches that query's executed plan
+    val checkpoints = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val marked = new java.util.concurrent.CountDownLatch(1)
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (funcName == "localCheckpoint") checkpoints.add(qe.executedPlan)
+        else if (funcName == "collect" && qe.analyzed.toString.contains("c1-marker"))
+          marked.countDown()
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val funnel = try {
+      val df = CurationOps.curationFunnel(spark, "/root/testdata/sf0.001")
+      // queries reach listeners in order: once this marker is seen, the
+      // spine's checkpoint has been seen too
+      spark.sql("SELECT 'c1-marker'").collect()
+      assert(marked.await(30, java.util.concurrent.TimeUnit.SECONDS),
+        "marker query never reached the listener")
+      df
+    } finally spark.listenerManager.unregister(listener)
+
+    val plan = funnel.queryExecution.executedPlan
+    import scala.jdk.CollectionConverters._
+    val plans = plan +: checkpoints.asScala.toSeq
+    assert(checkpoints.size == 1, s"c1 checkpointed ${checkpoints.size} times")
+    val helper = new AdaptiveSparkPlanHelper {}
+    // the exact-dedup keeper is one window over the content hash, and the
+    // only semi join is the near-dup stage's keeper text scan
+    val windows = plans.flatMap(p => helper.collect(p) { case w: WindowExec => w })
+    assert(windows.size == 1 && windows.head.partitionSpec
+      .flatMap(_.references.map(_.name)) == Seq("content_hash"),
+      s"c1 windows: $windows\n${plans.mkString("\n")}")
+    val semis = plans.flatMap(p => helper.collect(p) {
+      case j: BaseJoinExec if j.joinType == LeftSemi => j })
+    assert(semis.size == 1, s"c1 semi joins: ${semis.size}\n${plans.mkString("\n")}")
+
+    val text = plan.toString
+    assert(!text.contains("CartesianProduct"), "cartesian in funnel plan")
+    assert(!text.contains("BroadcastNestedLoopJoin"), "BNLJ in funnel plan")
     // the near-dup pair stage streams sorted runs: no list-collecting
     // aggregate anywhere in the funnel
     for (op <- Seq("collect_list", "sort_array", "ObjectHashAggregate"))
-      assert(!plan.contains(op), s"$op in funnel plan:\n$plan")
+      assert(!text.contains(op), s"$op in funnel plan:\n$text")
   }
 }
