@@ -121,9 +121,6 @@ object TextShingles {
   def simHashSigCol(c: Column): Column =
     GraftColumns.column(SimHashSig(GraftColumns.expression(c)))
 
-  def orderedPairsCol(c: Column): Column =
-    GraftColumns.column(OrderedPairs(GraftColumns.expression(c)))
-
   /** The partner tails of a posting list sorted by doc id: entry i (doc
     * ids(i) with ns(i) distinct shingles) gets (ids(i), ns(i), tail) where
     * the tail packs entries i+1..k-1, each as varint(id − previous id)
@@ -236,6 +233,24 @@ object TextShingles {
       if (k > maxDf) Iterator.empty
       else postingTails(java.util.Arrays.copyOf(ids, k),
         java.util.Arrays.copyOf(ns, k)).iterator
+    }
+  }
+
+  /** Every (ids(i), ids(j)), i < j, of each run of equal key in a stream
+    * of (key, id) entries sorted by (key, id): a bucket's pairs in id
+    * order, outer index first. An id entered twice pairs with itself, and
+    * a run of one entry gives no pairs. A run is buffered whole; its pairs
+    * are streamed.
+    */
+  def runPairs[K](entries: Iterator[(K, Long)]): Iterator[(Long, Long)] = {
+    val in = entries.buffered
+    Iterator.continually(in).takeWhile(_.hasNext).flatMap { _ =>
+      val key = in.head._1
+      val run = Array.newBuilder[Long]
+      while (in.hasNext && in.head._1 == key) run += in.next()._2
+      val ids = run.result()
+      Iterator.range(0, ids.length).flatMap(i =>
+        Iterator.range(i + 1, ids.length).map(j => (ids(i), ids(j))))
     }
   }
 
@@ -360,63 +375,5 @@ case class SimHashSig(child: Expression)
     TextShingles.simHashSig(input.asInstanceOf[UTF8String])
 
   override protected def withNewChildInternal(newChild: Expression): SimHashSig =
-    copy(child = newChild)
-}
-
-/** All ordered index pairs (xs(i), xs(j)), i < j, of a long array as
-  * array<struct<a,b>> — the posting-list pair expansion shared by d4
-  * (band buckets) and d7's above-crossover LSH candidates. Replaces the declarative
-  * `flatten(transform(xs, (a,i) => transform(slice(xs, i+2, n-i-1),
-  * b => struct(a, b))))`, whose per-ELEMENT interpreted lambda plumbing
-  * (lambda binding + boxing + an intermediate array per outer element)
-  * dominated the pair stage the same way the pre-native shingle HOFs did
-  * (round-6 finding: 1.27M pairs at sf0.1 cost ~1.7 s of the d2 wall).
-  * Value parity is exact: same order (outer index asc, inner asc), same
-  * duplicate semantics (equal values kept), empty/1-element arrays yield
-  * an empty array.
-  */
-case class OrderedPairs(child: Expression)
-    extends UnaryExpression with CodegenFallback {
-
-  import org.apache.spark.sql.types.StructType
-  import org.apache.spark.sql.types.StructField
-
-  private val pairType = StructType(Seq(
-    StructField("a", LongType, nullable = false),
-    StructField("b", LongType, nullable = false)))
-
-  override def dataType: DataType = ArrayType(pairType, containsNull = false)
-  def inputTypes: Seq[DataType] = Seq(ArrayType(LongType, containsNull = false))
-  // a NULL element would be read as 0 by toLongArray: only non-null
-  // element types are accepted
-  override def checkInputDataTypes() = child.dataType match {
-    case ArrayType(LongType, false) =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    case t =>
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"ordered_pairs needs array<bigint> input without NULL elements, got ${t.catalogString}")
-  }
-
-  override protected def nullSafeEval(input: Any): Any = {
-    val xs = input.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-      .toLongArray()
-    val n = xs.length
-    val out = new Array[Any](n * (n - 1) / 2)
-    var k = 0
-    var i = 0
-    while (i < n) {
-      val a = xs(i)
-      var j = i + 1
-      while (j < n) {
-        out(k) = org.apache.spark.sql.catalyst.InternalRow(a, xs(j))
-        k += 1
-        j += 1
-      }
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): OrderedPairs =
     copy(child = newChild)
 }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, GraftColumns, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, GraftColumns, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.objects.AssertNotNull
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -9,9 +9,10 @@ import org.apache.spark.sql.functions._
   * exact (hash groupBy), n-gram Jaccard pairs (posting lists + per-doc
   * overlap counts), MinHash signatures + LSH banding, and SimHash. Per-row
   * work runs in native Catalyst expressions and grouping rides Catalyst's
-  * shuffles and aggregates, except d2's pair stage: it streams sorted runs
-  * through typed `mapPartitions` (see [[ngramJaccardPairs]]). No UDFs, no
-  * driver-side loops on the d2 path.
+  * shuffles and aggregates, except the posting-list pair stages (d2, d4,
+  * d7's LSH candidates, d8's edges): they stream sorted runs through
+  * typed `mapPartitions` (see [[ngramJaccardPairs]], [[bucketPairs]]).
+  * No UDFs, no driver-side loops on the d2 path.
   *
   * Portability note for the DuckDB oracle: token hashes are derived as
   * bigint from the first 15 hex chars of md5 (`conv(...,16,10)` in Spark,
@@ -262,9 +263,9 @@ object DedupOps {
     * the minhash aggregate (an in-row array explode — the former
     * union-of-selects + self-join re-evaluated the shingle explode + minhash
     * aggregate once per band branch AND per join side, 8× total, correct
-    * only as fast as ReuseExchange deduplicated it), then ONE shuffle on
-    * (band, key) groups each bucket's members, and ordered pairs expand
-    * from the grouped list — no join, no second shuffle of the index.
+    * only as fast as ReuseExchange deduplicated it), then [[bucketPairs]]
+    * lays each (band, key) bucket out as one sorted run with ONE shuffle
+    * and streams its pairs — no join, no second shuffle of the index.
     */
   def lshPairs(spark: SparkSession, dir: String): DataFrame =
     lshPairsRaw(spark, dir).orderBy("doc_a", "doc_b")
@@ -274,14 +275,30 @@ object DedupOps {
     * streaming flagger's index builder), so batch pairing and streaming
     * probes can never drift apart.
     */
-  private[ops] def lshPairsRaw(spark: SparkSession, dir: String): DataFrame = {
-    bandKeysOn(docs(spark, dir))
-      .groupBy(col("band"), col("key"))
-      .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
-      .filter(size(col("ids")) >= 2)
-      .select(explode(
-        graft.functions.TextShingles.orderedPairsCol(col("ids"))).as("p"))
-      .select(col("p.a").as("doc_a"), col("p.b").as("doc_b"))
+  private[ops] def lshPairsRaw(spark: SparkSession, dir: String): DataFrame =
+    bucketPairs(bandKeysOn(docs(spark, dir)), "doc_id", "band", "key")
+      .toDF("doc_a", "doc_b")
+
+  /** Every distinct (a, b) of ids sharing a bucket in an (id, key columns)
+    * index, a before b in the bucket's id order — d2's sorted-run idiom:
+    * ONE shuffle hash-partitions the entries by key into
+    * `spark.sql.shuffle.partitions` partitions (AQE leaves them
+    * uncoalesced, as a bucket costs the square of its size), each sorted
+    * by (key, id) so that a bucket is one run, and
+    * [[graft.functions.TextShingles.runPairs]] streams each run's pairs. A
+    * NULL id never pairs. A pair that shares several buckets comes out
+    * once.
+    */
+  private[graft] def bucketPairs(index: DataFrame, id: String, keys: String*)
+      : Dataset[(Long, Long)] = {
+    import index.sparkSession.implicits._
+    val parts = index.sparkSession.sessionState.conf.numShufflePartitions
+    index.filter(col(id).isNotNull)
+      .repartition(parts, keys.map(col): _*)
+      .sortWithinPartitions((keys :+ id).map(col): _*)
+      .select(struct(keys.map(col): _*), col(id))
+      .mapPartitions((rows: Iterator[Row]) =>
+        graft.functions.TextShingles.runPairs(rows.map(r => (r.get(0), r.getLong(1)))))
       .distinct()
   }
 
@@ -417,19 +434,33 @@ object DedupOps {
     else Some(AnnSizing.operatingPoint(
       n, NearDupTargetBucket, NearDupHardestCos, NearDupTargetRecall))
 
-  def lshNearDup(spark: SparkSession, dir: String): DataFrame =
-    lshNearDupAuto(
-      spark.read.parquet(s"$dir/embeddings.parquet")
-        .select(col("vec_id"), col("embedding")), 50)
+  def lshNearDup(spark: SparkSession, dir: String): DataFrame = {
+    val e = spark.read.parquet(s"$dir/embeddings.parquet")
+    lshNearDupAuto(e.select(col("vec_id"), col("embedding")), parquetRows(e), 50)
+  }
 
-  /** d7 with the operating point derived from the data size instead of
-    * hardcoded constants ([[annParamsFor]]): the exact all-pairs path below
-    * the measured crossover (same contract — d7 is defined as d6's top-k),
-    * formula-sized LSH above it. The row count is one metadata-cheap
-    * zero-column scan, paid once per invocation.
+  /** Rows of a parquet read, summed from its files' footers on the
+    * driver: the d7/v4 dispatch is sized without a Spark job, so building
+    * the query (`explain`, a plan dump) scans no data.
     */
-  def lshNearDupAuto(e0: DataFrame, topK: Int): DataFrame =
-    annParamsFor(e0.count()) match {
+  private[ops] def parquetRows(read: DataFrame): Long = {
+    val conf = read.sparkSession.sessionState.newHadoopConf()
+    read.inputFiles.iterator.map { f =>
+      val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f), conf))
+      try footer.getRecordCount finally footer.close()
+    }.sum
+  }
+
+  /** d7 over any (vec_id, embedding) frame of `n` rows, with the operating
+    * point derived from the data size instead of hardcoded constants
+    * ([[annParamsFor]]): the exact all-pairs path below the measured
+    * crossover (same contract — d7 is defined as d6's top-k),
+    * formula-sized LSH above it.
+    */
+  def lshNearDupAuto(e0: DataFrame, n: Long, topK: Int): DataFrame =
+    annParamsFor(n) match {
       case None => embedNearDupOn(e0, topK)
       case Some(op) => lshNearDupOn(e0, op.bits, op.tables, topK)
     }
@@ -453,19 +484,19 @@ object DedupOps {
     // (vec_id, table, bucket) index rows: T tables × b sign bits per vector
     // (shared with v4's query-time probe — one index, two operators)
     val bk = VectorOps.bucketIndex(e, bits, tables)
-    // candidates: posting-list pair expansion per (table, bucket) — ONE
+    // candidates: sorted-run pair expansion per (table, bucket) — ONE
     // shuffle of the id index (same shape as d2's shingle postings; a
     // self-join would shuffle the index twice and build hash tables).
     // Bucket sizes are bounded by construction (bits ≈ log2(n / target
-    // bucket size)), so the per-list expansion is bucket²/2 with a
-    // design-bounded bucket. The cross-table pair dedupe happens HERE,
-    // before the rescore joins: a round-6 A/B at the test parameters
-    // (dedupe-late via rescore-all + TakeOrdered(topK·tables) +
+    // bucket size)), so the per-run expansion is bucket²/2 with a
+    // design-bounded bucket. The cross-table pair dedupe happens in
+    // [[bucketPairs]], before the rescore joins: a round-6 A/B at the test
+    // parameters (dedupe-late via rescore-all + TakeOrdered(topK·tables) +
     // slice-dedupe measured 15.8s vs 9.4s for dedupe-first) showed that
     // shuffling the narrow (ia, ib) pairs through a distinct is
     // cheaper than dragging the ≤`tables`× duplicates through the
     // embedding joins, whose output rows carry two 64-element vectors.
-    val cand = lshCandidatePairs(bk).distinct()
+    val cand = lshCandidatePairs(bk)
     // exact-cosine rescore: rejoin the embeddings by id. The embedding side
     // is HINTED to a shuffled HASH join: the candidate stream is the big
     // side (pairs >> vectors, and after the join each row carries two
@@ -486,18 +517,13 @@ object DedupOps {
       .limit(topK)
   }
 
-  /** Duplicated (pre-distinct) candidate pairs from a (vec_id, tbl, bkt)
-    * LSH index: posting-list expansion per (tbl, bkt) bucket. Shared with
+  /** The distinct (ia, ib) candidate pairs of a (vec_id, tbl, bkt) LSH
+    * index: the [[bucketPairs]] of its (tbl, bkt) buckets. Shared with
     * `graft.tools.AnnRecallSweep`, so its recall is measured on the exact
-    * expansion the shipped operator runs.
+    * candidate set the shipped operator runs.
     */
   private[graft] def lshCandidatePairs(bk: DataFrame): DataFrame =
-    bk.groupBy(col("tbl"), col("bkt"))
-      .agg(sort_array(collect_list(col("vec_id"))).as("ids"))
-      .filter(size(col("ids")) >= 2)
-      .select(explode(
-        graft.functions.TextShingles.orderedPairsCol(col("ids"))).as("p"))
-      .select(col("p.a").as("ia"), col("p.b").as("ib"))
+    bucketPairs(bk, "vec_id", "tbl", "bkt").toDF("ia", "ib")
 
   /** Hyperplane rows as DuckDB VALUES literals — Double.toString emits the
     * shortest round-trip decimal, which DuckDB's correctly-rounded parser
@@ -699,11 +725,11 @@ object DedupOps {
     * — the d4 banding (4 bands × 2 minhash rows, same seeds/hash) as a
     * reusable index: one native [[graft.functions.MinHashSigs]] evaluation
     * per row, an in-row band-key explode, zero shuffles. Batch callers
-    * group it by (band, key) for pair expansion; the streaming near-dup
+    * pair it per (band, key) bucket ([[bucketPairs]]); the streaming near-dup
     * flagger ([[graft.streaming.StreamingOps.nearDupAgainstIndex]]) joins
     * an incoming stream's band keys against a static snapshot of it.
     * Key encoding = `concat_ws("_", mh_{2b}, mh_{2b+1})`; this is THE
-    * band-key encoding — [[lshPairsRaw]] (d4/d8) groups this same frame,
+    * band-key encoding — [[lshPairsRaw]] (d4/d8) pairs this same frame,
     * so batch pairing and streaming probes share one definition.
     */
   private[graft] def bandKeysOn(d: DataFrame): DataFrame = {

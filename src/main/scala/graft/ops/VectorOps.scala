@@ -145,7 +145,7 @@ object VectorOps {
     // exact top-20 (VectorSpec pins the equality), so below the measured
     // crossover the brute-force scan IS the cheaper identical-output plan;
     // above it, probe at the analytically sized (bits, tables) point.
-    DedupOps.annParamsFor(e.count()) match {
+    DedupOps.annParamsFor(DedupOps.parquetRows(e)) match {
       case None => annTopKOn(e)
       case Some(op) => lshAnnTopKOn(e, op.bits, op.tables)
     }

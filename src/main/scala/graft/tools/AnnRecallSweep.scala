@@ -10,8 +10,8 @@ import org.apache.spark.sql.functions._
   * plants pairs at controlled bands (v = c·u + √(1−c²)·w for independent
   * gaussians — measured pair cosine ≈ c ± 0.02 at d=64) and measures
   * PLANTED-PAIR CANDIDATE RECALL — the fraction of planted pairs that
-  * co-bucket in ≥1 table (`lshCandidatePairs`, the exact expansion d7
-  * ships). The rescore is exact cosine, so candidate recall IS end-to-end
+  * co-bucket in ≥1 table (`lshCandidatePairs`, the distinct candidate
+  * pairs d7 ships). The rescore is exact cosine, so candidate recall IS end-to-end
   * recall for any downstream threshold; no all-pairs work is needed and
   * the sweep runs at n = 10⁵-10⁶. Each row also prints the closed-form
   * prediction so the measured curve validates the documented
@@ -72,7 +72,7 @@ object AnnRecallSweep {
         tablesList.foreach { tables =>
           val t0 = System.nanoTime()
           val bk = graft.ops.VectorOps.bucketIndex(e, bits, tables)
-          val found = graft.ops.DedupOps.lshCandidatePairs(bk).distinct()
+          val found = graft.ops.DedupOps.lshCandidatePairs(bk)
             .filter(col("ib") === col("ia") + 1 && col("ib") % 10 === 0)
             .count()
           val sec = (System.nanoTime() - t0) / 1e9

@@ -107,7 +107,7 @@ object AnnScale {
       }
 
       val (lshPairs, lshSec) =
-        if (auto && sized.isEmpty) pairs(DedupOps.lshNearDupAuto(e, TopK))
+        if (auto && sized.isEmpty) pairs(DedupOps.lshNearDupAuto(e, n, TopK))
         else pairs(DedupOps.lshNearDupOn(e, bits, tables, TopK))
       val (exactPairs, exactSec, exactMode) =
         if (n <= ExactCap) {

@@ -95,49 +95,6 @@ class ShingleSpec extends AnyFunSuite {
     }
   }
 
-  test("OrderedPairs == HOF transform/slice expansion (order, dups, empties)") {
-    import spark.implicits._
-    // duplicates kept (the within-doc hash-collision case d2's a != b
-    // guard absorbs), singletons/empties yield empty arrays
-    val d = Seq(
-      Seq(1L, 2L, 3L, 4L), Seq(7L, 7L, 9L), Seq(5L), Seq.empty[Long],
-      Seq(3L, 3L), (1L to 40L).toSeq)
-      .toDF("xs")
-    val hof = flatten(transform(col("xs"), (a, i) =>
-      transform(slice(col("xs"), i + lit(2), size(col("xs")) - i - 1),
-        b => struct(a.as("a"), b.as("b")))))
-    val rows = d.select(
-      TextShingles.orderedPairsCol(col("xs")).as("native"), hof.as("hof"))
-      .collect()
-    rows.foreach { r =>
-      val native = r.getSeq[org.apache.spark.sql.Row](0)
-        .map(p => (p.getLong(0), p.getLong(1)))
-      val want = r.getSeq[org.apache.spark.sql.Row](1)
-        .map(p => (p.getLong(0), p.getLong(1)))
-      assert(native == want, s"pair expansion diverges: $native vs $want")
-    }
-  }
-
-  test("OrderedPairs rejects inputs it cannot read") {
-    import spark.implicits._
-    import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
-    import org.apache.spark.sql.types._
-    def typed(t: DataType): Expression = Literal.create(null, t)
-    val longs = ArrayType(LongType, containsNull = false)
-    val ints = ArrayType(IntegerType, containsNull = false)
-    def ok(e: Expression) = e.checkInputDataTypes().isSuccess
-    assert(ok(OrderedPairs(typed(longs))))
-    // a NULL element would be read as 0: rejected at analysis
-    assert(!ok(OrderedPairs(typed(ArrayType(LongType, containsNull = true)))))
-    // and a mistyped argument
-    assert(!ok(OrderedPairs(typed(ints))))
-    // through the DataFrame API the rejection is an analysis error
-    val withNulls = Seq(Seq(Some(1L), None, Some(3L))).toDF("xs")
-    intercept[org.apache.spark.sql.AnalysisException] {
-      withNulls.select(TextShingles.orderedPairsCol(col("xs"))).collect()
-    }
-  }
-
   test("partnerOverlaps on crafted tails: duplicated partner, self partner, empty tail, pair at tau") {
     // the tail probe `a` gets from one posting list whose later entries are
     // (ids, ns) — postingTails' own encoding
@@ -238,5 +195,29 @@ class ShingleSpec extends AnyFunSuite {
     val all = TextShingles.partnerRunOverlaps(tails.sortBy(_._1).iterator, 0.0).toSeq
     assert(all.exists(r => r._1 == 7L && r._2 == 9L))
     assert(TextShingles.partnerRunOverlaps(Iterator.empty, 0.0).isEmpty)
+
+    // bucket runs: each run's i < j pairs, runs in stream order, ids in
+    // run order; a duplicated id pairs with itself, a single entry gives
+    // none, and no pair crosses two runs sharing an id
+    val buckets = Seq(
+      (1, "a") -> Seq(3L, 5L, 8L),
+      (1, "b") -> Seq(8L),
+      (2, "a") -> Seq(2L, 7L, 7L, 9L),
+      (3, "c") -> Seq(6L),
+      (3, "d") -> Seq(6L, 8L))
+    def pairsOf(bs: Seq[((Int, String), Seq[Long])]) = bs.flatMap { case (_, ids) =>
+      for (i <- ids.indices; j <- i + 1 until ids.length) yield (ids(i), ids(j))
+    }
+    def runPairs(bs: Seq[((Int, String), Seq[Long])]) = TextShingles.runPairs(
+      bs.flatMap { case (k, ids) => ids.map(k -> _) }.iterator).toSeq
+    // the stream ends inside an open run of one, two and three entries
+    for (last <- Seq(Seq(1L), Seq(1L, 1L), Seq(4L, 5L, 6L))) {
+      val bs = buckets :+ ((4, "a") -> last)
+      assert(runPairs(bs) == pairsOf(bs), s"ending in run $last")
+    }
+    assert(runPairs(buckets) == Seq((3L, 5L), (3L, 8L), (5L, 8L), (2L, 7L),
+      (2L, 7L), (2L, 9L), (7L, 7L), (7L, 9L), (7L, 9L), (6L, 8L)))
+    assert(runPairs(Nil).isEmpty)
+    assert(runPairs(Seq((1, "a") -> Seq(4L), (1, "b") -> Seq(4L))).isEmpty)
   }
 }

@@ -18,8 +18,11 @@ import org.apache.spark.sql.SparkSession
   *    doc 1 in 6 (J(1,4)=0.692 < 0.8) — the transitive chain: doc 4 drops
   *    because pair (3,4) has a smaller id, even though doc 3 itself
   *    dropped. One-pass pair-min-id semantics, asserted by survivor
-  *    count 2 (a partner-survival rule would leave 3).
-  *  - docs 1 (en) and 5 (es) survive everything.
+  *    count 3 (a partner-survival rule would leave 4).
+  *  - doc 9 differs from doc 1 in 4 well-separated words (J(1,9) =
+  *    87/111 = 0.784, J(3,9) = 0.65, J(4,9) = 0.53) → survives: the pair
+  *    sits just under the 0.8 threshold, so pairing at a lower τ drops it.
+  *  - docs 1 (en), 5 (es) and 9 (en) survive everything.
   *  - doc 8 has NULL text → no language pick, dropped at stage 1 (lang),
   *    as the oracle's `lang_pred <> 'und'` (NULL) drops it
   *  - a doc with NULL doc_id passes lang and quality but is never an
@@ -49,12 +52,13 @@ class CurationSpec extends AnyFunSuite {
     val doc5 = (Vector("el") ++ words(100, "s")).mkString(" ")
     val doc6 = words(30, "g").mkString(" ")
     val doc7 = "short text the"
+    val doc9 = changed(base, Seq(80, 84, 88, 92), "z").mkString(" ")
 
     val docNullId = (Vector("the") ++ words(100, "n")).mkString(" ")
 
     val dir = java.nio.file.Files.createTempDirectory("curation").toString
     (Seq((1L, doc1), (2L, doc1), (3L, doc3), (4L, doc4), (5L, doc5),
-      (6L, doc6), (7L, doc7)).map { case (id, t) => (Option(id), Option(t)) } ++
+      (6L, doc6), (7L, doc7), (9L, doc9)).map { case (id, t) => (Option(id), Option(t)) } ++
       Seq((Some(8L), None), (None, Some(docNullId))))
       .toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -62,17 +66,19 @@ class CurationSpec extends AnyFunSuite {
     val rows = CurationOps.curationFunnel(spark, dir).collect()
       .map(r => (r.getInt(0), r.getString(1), r.getLong(2), r.getLong(3)))
     assert(rows.map(t => (t._1, t._2, t._3)).toSeq == Seq(
-      (0, "all", 9L), (1, "lang", 7L), (2, "quality", 6L),
-      (3, "exact", 4L), (4, "neardup", 2L)))
+      (0, "all", 10L), (1, "lang", 8L), (2, "quality", 7L),
+      (3, "exact", 5L), (4, "neardup", 3L)))
     // token budget is positive and non-increasing down the funnel
     val toks = rows.map(_._4)
     assert(toks.forall(_ > 0) && toks.zip(toks.tail).forall { case (a, b) => b <= a })
 
-    // c2 is the survivor SET itself: exactly docs 1 (en) and 5 (es), with
-    // their language picks; its token totals reconcile with stage 4
+    // c2 is the survivor SET itself: exactly docs 1 (en), 5 (es) and 9
+    // (en), with their language picks; its token totals reconcile with
+    // stage 4
     val curated = CurationOps.curatedDocs(spark, dir).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
-    assert(curated.map(t => (t._1, t._2)).toSeq == Seq((1L, "en"), (5L, "es")))
+    assert(curated.map(t => (t._1, t._2)).toSeq ==
+      Seq((1L, "en"), (5L, "es"), (9L, "en")))
     assert(curated.map(_._3).sum == rows.last._4)
   }
 

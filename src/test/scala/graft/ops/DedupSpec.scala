@@ -76,6 +76,51 @@ class DedupSpec extends AnyFunSuite {
     // tiny SF, which is also sort-free; only SortMergeJoin is the failure)
     assert(!plan.contains("SortMergeJoin"),
       s"d7 rescore sorted the candidate stream:\n$plan")
+    // buckets are sorted runs, not collected lists
+    assert(!plan.toLowerCase.contains("orderedpairs"), plan)
+    for (op <- Seq("collect_list", "sort_array", "ObjectHashAggregate"))
+      assert(!plan.contains(op), s"$op in d7 plan:\n$plan")
+  }
+
+  /** Runs `build` in a job group and returns, for each Spark job it
+    * started, whether the job scans a file.
+    */
+  private def jobsStartedBy(build: => Unit): Seq[Boolean] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, Boolean)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add((String.valueOf(e.properties.getProperty("spark.jobGroup.id")),
+          e.stageInfos.exists(_.rddInfos.exists(_.name == "FileScanRDD"))))
+    }
+    import scala.jdk.CollectionConverters._
+    def groups = jobs.asScala.map(_._1)
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("build", "build")
+      build
+      // jobs reach listeners in start order: once this marker job is seen,
+      // any job the build started has been seen too
+      sc.setJobGroup("build-marker", "marker")
+      spark.range(1).count()
+      sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!groups.exists(_ == "build-marker") && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(groups.exists(_ == "build-marker"), "marker job never reached the listener")
+      jobs.asScala.toSeq.collect { case ("build", scans) => scans }
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("d7 and v4 building the DataFrame and its plan scans no data") {
+    // spark.read.parquet infers the schema with a job that reads one
+    // footer and no rows; a job that scans the table is a row count
+    val scans = jobsStartedBy {
+      DedupOps.lshNearDup(spark, sfDir).queryExecution.executedPlan
+      VectorOps.lshAnnTopK(spark, sfDir).queryExecution.executedPlan
+    }
+    assert(!scans.contains(true), "building d7 or v4 scanned the embeddings")
   }
 
   test("d2 posting-list pairs: no self-join, no all-pairs join") {
@@ -135,31 +180,13 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("d2 building the DataFrame and its plan starts no Spark job") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
     // spark.read.parquet infers the schema with a job of its own, so the
     // input is read before the window; d2 itself must add none
     val input = spark.read.parquet(s"$sfDir/documents.parquet")
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup("d2-build", "build d2")
+    val jobs = jobsStartedBy {
       DedupOps.ngramJaccardPairsOn(input, 0.05).queryExecution.executedPlan
-      // jobs reach listeners in start order: once this marker job is seen,
-      // any job the build started has been seen too
-      sc.setJobGroup("d2-marker", "marker")
-      spark.range(1).count()
-      sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30000000000L
-      while (!groups.contains("d2-marker") && System.nanoTime() < deadline)
-        Thread.sleep(20)
-      assert(groups.contains("d2-marker"), "marker job never reached the listener")
-      assert(!groups.contains("d2-build"), "building d2 ran a Spark job")
-    } finally sc.removeSparkListener(listener)
+    }
+    assert(jobs.isEmpty, "building d2 ran a Spark job")
   }
 
   test("d2 == plain-Scala all-pairs reference at tau 0.05 and 0.8 (df prune, near-dups, NULLs)") {
@@ -244,6 +271,34 @@ class DedupSpec extends AnyFunSuite {
     // leaned on ReuseExchange to dedupe them)
     val hashExchanges = "Exchange hashpartitioning".r.findAllIn(plan).length
     assert(hashExchanges <= 2, s"expected <=2 hash exchanges in d4 plan:\n$plan")
+    // band buckets are sorted runs, not collected lists
+    assert(!plan.toLowerCase.contains("orderedpairs"), plan)
+    for (op <- Seq("collect_list", "sort_array", "ObjectHashAggregate"))
+      assert(!plan.contains(op), s"$op in d4 plan:\n$plan")
+  }
+
+  test("bucket pairs == plain-Scala per-bucket all-pairs reference (NULL id never pairs)") {
+    import spark.implicits._
+    // (id, key columns): a pair sharing two buckets, a duplicated id, a
+    // single-entry bucket, a NULL key string, and NULL ids in a shared
+    // bucket and alone
+    val index = Seq(
+      (Some(3L), 1, Some("a")), (Some(5L), 1, Some("a")), (Some(8L), 1, Some("a")),
+      (None, 1, Some("a")), (Some(3L), 2, Some("a")), (Some(5L), 2, Some("a")),
+      (Some(7L), 2, Some("b")), (Some(7L), 2, Some("b")), (Some(9L), 2, Some("b")),
+      (Some(4L), 1, Some("b")), (Some(6L), 3, None), (Some(2L), 3, None),
+      (None, 4, Some("c")))
+    val want = index.filter(_._1.isDefined).groupBy(r => (r._2, r._3)).values
+      .flatMap { rs =>
+        val ids = rs.map(_._1.get).sorted
+        for (i <- ids.indices; j <- i + 1 until ids.length) yield (ids(i), ids(j))
+      }.toSeq.distinct.sorted
+    val got = DedupOps.bucketPairs(index.toDF("id", "k1", "k2"), "id", "k1", "k2")
+      .collect().toSeq.sorted
+    assert(got == want)
+    assert(got.contains((7L, 7L)) && got.contains((2L, 6L)))
+    // a NULL id read as a value would pair as 0 (or as a NULL doc_a)
+    assert(!got.exists { case (a, b) => a == 0L || b == 0L })
   }
 
   test("vector queries run the native DotProduct expression, not the HOF fallback") {
